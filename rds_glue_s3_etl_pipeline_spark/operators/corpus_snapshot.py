@@ -313,6 +313,14 @@ def refresh_snapshot(
     )
     cl_type = hist.schema["cluster_id"].dataType.simpleString()
     apdf = aff.limit(BROADCAST_ROW_GATE + 1).toPandas()
+    # A NULL cluster_id would turn the pandas column into float64 and
+    # break or skew createDataFrame far from the cause; no refresh or
+    # build ever writes one, so a NULL here means a corrupt snapshot.
+    if not apdf["cluster_id"].notna().all():
+        raise ValueError(
+            f"snapshot at {snapshot_dir} has a NULL cluster_id among the "
+            "clusters this batch touches"
+        )
     if len(apdf) <= BROADCAST_ROW_GATE:
         affected = F.broadcast(
             spark.createDataFrame(apdf, schema=f"cluster_id {cl_type}")

@@ -82,17 +82,20 @@ _BPE_MERGES = 8
 def q152_bpe_train(spark, sf_dir):
     """Full BPE training, {_BPE_MERGES} merges (operators/bpe.py): the
     ordered merge table (step, left, right, n_occurrences) learned
-    from the corpus vocabulary. Rows-only by contract — each round's
-    argmax feeds the next round's array rewrite, an iterative
-    dependency SQL can't unroll over array-valued state. Verified
-    instead by differential test against a sequential reference
-    implementation of the published algorithm
-    (tests/test_operators.py::test_bpe_train_matches_reference_implementation)
-    and by q151 (the first merge, fully oracle-checked).
+    from the corpus vocabulary. Rows-only by contract — each merge
+    feeds the next merge's re-segmentation, an iterative dependency
+    SQL can't unroll over array-valued state. Verified instead by
+    differential tests against a sequential reference implementation
+    of the published algorithm
+    (tests/test_operators.py::test_bpe_train_matches_reference_implementation,
+    tests/test_bpe.py) and by q151 (the first merge, fully
+    oracle-checked).
 
-    Scale: the corpus is scanned once for token counts; every round
-    after runs over the DISTINCT vocabulary (bounded however large the
-    corpus); one row reaches the driver per merge.
+    Scale: the corpus is scanned once, on the cluster, for token
+    counts; one action collects the DISTINCT (syms, f) vocabulary
+    (bounded however large the corpus) and every merge is learned in
+    the driver with incremental pair counts — no job per merge and
+    nothing left pinned.
     """
     from ..operators.bpe import bpe_train, words_to_symbols
 
@@ -194,12 +197,13 @@ def q156_bpe_compression(spark, sf_dir):
     terminal division, and the apply step itself is pinned by the
     differential BPE tests.
 
-    Scale: training touched the corpus once; the ENCODE here is
-    {_BPE_MERGES} chained map-only array folds over the distinct
-    vocabulary — zero shuffles, the profile of tokenizing 100 TB with
-    a broadcast merge table.
+    Scale: training collects the distinct vocabulary once and learns
+    the merges in the driver; the ENCODE here is {_BPE_MERGES} chained
+    map-only array folds (``bpe_apply``) over the distinct vocabulary
+    on the cluster — zero shuffles, the profile of tokenizing 100 TB
+    with a broadcast merge table.
     """
-    from ..operators.bpe import bpe_train, words_to_symbols
+    from ..operators.bpe import bpe_apply, bpe_train, words_to_symbols
 
     words = (
         load(spark, sf_dir, "documents")
@@ -209,11 +213,10 @@ def q156_bpe_compression(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("f"))
     )
     syms = words_to_symbols(words).localCheckpoint(eager=True)
-    # Training already materializes the fully-merged vocab — reuse it
-    # rather than paying a second bpe_apply pass over the same input.
-    merges, encoded = bpe_train(
-        syms, n_merges=_BPE_MERGES, return_vocab=True
-    )
+    # bpe_train returns only the merge table; the encoded vocabulary is
+    # the map-only bpe_apply over the same checkpointed symbols.
+    merges = bpe_train(syms, n_merges=_BPE_MERGES)
+    encoded = bpe_apply(syms, merges)
 
     def _mass(w):
         return w.agg(

@@ -20,6 +20,7 @@ from rds_glue_s3_etl_pipeline_spark.operators.corpus_snapshot import (
     read_snapshot_assigned,
     refresh_snapshot,
     survivors,
+    write_snapshot_epoch,
 )
 
 
@@ -124,6 +125,24 @@ def test_epoch_replay_is_idempotent(spark):
         for r in spark.read.parquet(out).select("__epoch").distinct().collect()
     }
     assert eps == {0, 1}
+
+
+def test_refresh_rejects_null_cluster_id(spark, tmp_path):
+    # A corrupt snapshot row with a NULL cluster_id, touched by the
+    # batch, must fail at the bounded collect instead of being coerced
+    # to float64 on the way into the broadcast relation.
+    out = str(tmp_path / "snap_null")
+    write_snapshot_epoch(
+        spark.createDataFrame(
+            [(1, None, 10), (2, 2, 20)], "doc_id long, cluster_id long, n_chars long"
+        ),
+        out,
+        0,
+    )
+    with pytest.raises(ValueError, match="NULL cluster_id"):
+        refresh_snapshot(
+            spark, out, _docs(spark, [(9, 90)]), _edges(spark, [(9, 1)]), epoch_id=1
+        )
 
 
 def test_empty_refresh_batch_keeps_state(spark):
