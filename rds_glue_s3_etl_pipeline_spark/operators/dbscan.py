@@ -13,21 +13,12 @@ all-pairs, so the operator inherits the edge generator's scale law —
 linear for the multi-probe grid, quadratic-per-label for the exact
 anchor (q219's documented contract).
 
-Round-12 posture note (closes round-11 verdict item on routing): the
-registered grid family (q223/q224/q228/q234) moved from block-confined
-within-block edges to MULTI-PROBE edges, whose components span blocks
-— so every registered query now runs :func:`dbscan_from_edges`
-(distributed CC over the tiny eps-edge list) and the per-block
-union-find forms below have NO registered callers. That eliminates,
-rather than routes, the single-task skew failure the round-10/11
-guards addressed: there is no per-block pandas state anywhere on the
-registered path, and a clone-dense corpus degrades into a larger (but
-still edge-count-bounded) CC, never a stalled task.
-:func:`dbscan_blocked` / :func:`dbscan_blocked_routed` remain
-supported, tested operators for callers with genuinely block-confined
-edge sets, where one applyInPandas pass beats CC-round shuffle
-overhead; the routed form is the production posture for such callers
-on corpora that may break the ~32-member blocking invariant.
+Every registered DBSCAN query (q219's label-blocked edges and the
+multi-probe grid family) runs :func:`dbscan_from_edges`. The
+multi-probe edges' components span blocks, so a per-block union-find
+would be wrong for them, and the one CC path means there is no
+per-block pandas state anywhere: a clone-dense corpus degrades into a
+larger (but still edge-count-bounded) CC, never a stalled task.
 
 Reference scope: EXT (SURVEY §2.11); the reference job has no
 clustering surface.
@@ -88,187 +79,6 @@ def dbscan_from_edges(
             .otherwise("noise")
             .alias("role"),
             F.coalesce("c_cl", "b_cl").alias("cluster_id"),
-        )
-    )
-
-
-def dbscan_blocked(
-    ids: DataFrame,
-    sym: DataFrame,
-    min_nbrs: int,
-    block_cols,
-    id_col: str = "vec_id",
-    max_block_edges: int = 2_000_000,
-) -> DataFrame:
-    """Per-block DBSCAN for edge sets whose components are CONFINED to
-    blocks (the adaptive-grid case: eps-edges are within-block by
-    construction, so no cluster can span blocks). Same contract as
-    :func:`dbscan_from_edges` — (id_col, role, cluster_id) for every
-    row of ``ids``, cluster ids = component-minimum point ids — but
-    the component search is a per-block union-find in ONE
-    applyInPandas pass instead of O(log² n) star-contraction rounds.
-
-    Why this is the right physical plan here: block size is held ~32
-    by the adaptive grid at any corpus size, so per-group state is at
-    most |block|² integer edges — tiny, embarrassingly parallel, one
-    shuffle on the block key, zero iterative jobs. The distributed CC
-    (dbscan_from_edges) stays the right plan for UNBOUNDED edge sets
-    (q219's label blocks). Measured at the 10× probe: the
-    star-contraction form's fixed per-round shuffles dominated its
-    wall (13.4 s rebuild with ~0.6 M pairs); this form removes them.
-
-    Determinism/bit-discipline: ``sym`` must carry the block columns
-    and each directed edge exactly once; all FLOAT work (cosine, 4dp
-    round) stays JVM-side in the edge generator — the pandas stage
-    sees only integer ids, so no cross-engine float drift is possible.
-
-    Skew guard (round-10 ADVICE / verdict item #7): the per-group state
-    is |block|² integer edges, safe only while the adaptive grid holds
-    its ~32-member invariant. A degenerate corpus (mass-duplicate
-    embeddings the geometry cannot split) can concentrate millions of
-    edges in one block, which would stall a single pandas task
-    invisibly. Every task therefore fail-fasts past ``max_block_edges``
-    — and callers who expect skew use :func:`dbscan_blocked_routed`,
-    which sends oversized blocks to the distributed
-    :func:`dbscan_from_edges` path instead (exact, because components
-    are block-confined). The plain form stays zero-extra-jobs for the
-    healthy-grid case the registered queries verify.
-    """
-    import pandas as pd
-
-    bc = list(block_cols)
-    schema = ", ".join(
-        f"{c} {t}" for c, t in sym.select(*bc).dtypes
-    ) + f", {id_col} long, role string, cluster_id long"
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_block_edges:
-            raise ValueError(
-                f"dbscan_blocked: block {tuple(key)} has {len(pdf)} edges "
-                f"(> max_block_edges={max_block_edges}) — the blocking "
-                "invariant is broken (degenerate/clone-dense corpus?); "
-                "use dbscan_blocked_routed or dbscan_from_edges"
-            )
-        a = pdf["a"].to_numpy()
-        b = pdf["b"].to_numpy()
-        deg: dict[int, int] = {}
-        for x in a:
-            deg[x] = deg.get(x, 0) + 1
-        core = {x for x, d in deg.items() if d >= min_nbrs}
-        parent: dict[int, int] = {x: x for x in core}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for x, y in zip(a, b):
-            if x in core and y in core:
-                rx, ry = find(x), find(y)
-                if rx != ry:
-                    # union by min id so the root IS the component min
-                    lo, hi = (rx, ry) if rx < ry else (ry, rx)
-                    parent[hi] = lo
-        cluster = {x: find(x) for x in core}
-        border: dict[int, int] = {}
-        for x, y in zip(a, b):
-            if x not in core and y in core:
-                c = cluster[y]
-                if x not in border or c < border[x]:
-                    border[x] = c
-        rows = [(x, "core", cluster[x]) for x in core] + [
-            (x, "border", c) for x, c in border.items()
-        ]
-        out = pd.DataFrame(rows, columns=[id_col, "role", "cluster_id"])
-        for i, c in enumerate(bc):
-            out.insert(i, c, key[i])
-        return out
-
-    labelled = sym.groupBy(*bc).applyInPandas(run, schema)
-    return (
-        ids.join(labelled.select(id_col, "role", "cluster_id"), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("role", F.lit("noise")).alias("role"),
-            "cluster_id",
-        )
-    )
-
-
-def dbscan_blocked_routed(
-    ids: DataFrame,
-    sym: DataFrame,
-    min_nbrs: int,
-    block_cols,
-    id_col: str = "vec_id",
-    max_block_edges: int = 2_000_000,
-) -> DataFrame:
-    """:func:`dbscan_blocked` with skew routing: blocks whose edge
-    count exceeds ``max_block_edges`` go to the distributed
-    :func:`dbscan_from_edges` path; the rest take the per-block
-    union-find. Exact — components are block-confined, so clustering a
-    disjoint subset of blocks separately is the same computation.
-
-    The routing decision needs the per-block edge counts, so ``sym``
-    is materialized once to managed-scratch parquet (callers that
-    already hold a file-backed edge list pay only the re-read) and the
-    oversized KEYS — by definition few — come to the driver. On a
-    healthy grid that list is empty and the whole query reduces to
-    ``dbscan_blocked`` over the materialized edges: zero iterative
-    jobs, nothing pinned. Only the rare skew branch runs the
-    star-contraction CC (whose per-round shuffles are exactly what the
-    oversized block needs spread across the cluster)."""
-    from ..scratch import parquet_checkpoint
-
-    bc = list(block_cols)
-    sym = parquet_checkpoint(sym, "dbscan_sym_")
-    big_keys = (
-        sym.groupBy(*bc)
-        .agg(F.count(F.lit(1)).alias("__n_edges"))
-        .filter(F.col("__n_edges") > max_block_edges)
-        .select(*bc)
-        .collect()
-    )
-    if not big_keys:
-        return dbscan_blocked(ids, sym, min_nbrs, bc, id_col, max_block_edges)
-
-    is_big = None
-    for row in big_keys:
-        this = F.lit(True)
-        for c in bc:
-            # eqNullSafe, not ==: a NULL block key would make both
-            # is_big and ~is_big NULL, silently dropping those edges
-            # from BOTH arms (round-11 ADVICE).
-            this = this & F.col(c).eqNullSafe(F.lit(row[c]))
-        is_big = this if is_big is None else (is_big | this)
-    sym_small = sym.filter(~is_big)
-    sym_big = sym.filter(is_big).select("a", "b")
-    small_labels = (
-        dbscan_blocked(
-            sym_small.select(F.col("a").alias(id_col)).distinct(),
-            sym_small,
-            min_nbrs,
-            bc,
-            id_col,
-            max_block_edges,
-        )
-        # endpoints with no core neighbor are re-stamped noise in the
-        # final join below, same as members absent from the edge list
-        .filter(F.col("role") != "noise")
-    )
-    big_labels = dbscan_from_edges(
-        sym_big.select(F.col("a").alias(id_col)).distinct(),
-        sym_big,
-        min_nbrs,
-        id_col,
-    ).filter(F.col("role") != "noise")
-    return (
-        ids.join(small_labels.unionByName(big_labels), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("role", F.lit("noise")).alias("role"),
-            "cluster_id",
         )
     )
 

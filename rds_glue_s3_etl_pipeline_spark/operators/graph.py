@@ -1,25 +1,23 @@
 """Connected components over a pair-edge list — the cluster-resolution
 step of a dedup pipeline (near-dup PAIRS from MinHash/Jaccard/SimHash
-become dup GROUPS; one representative per group survives).
+become dup GROUPS; one representative per group survives) — plus
+PageRank and the DuckDB twin of the components computation.
 
-Algorithm: alternating min-label propagation (the classic large-graph
-formulation used by GraphX/GraphFrames' connectedComponents): every
-node repeatedly adopts the minimum label among itself and its
-neighbors until fixpoint. Each round is one join + one aggregation —
-all shuffle-partitioned on the node id, no driver-side graph state.
-Rounds needed = graph diameter (dedup clusters are shallow: usually
-2-4). Lineage is truncated per round via localCheckpoint so the plan
-does not grow exponentially across iterations.
+Algorithm: alternating large-star / small-star contraction
+(:func:`connected_components_star`, Kiveris et al., SoCC'14). Each
+round is two groupBy-min passes over the shrinking edge list, all
+shuffle-partitioned on the node id, with no driver-side graph state;
+rounds needed are O(log² n) whatever the graph's diameter. Once the
+edge list fits the driver gate below, the remaining graph is solved
+by one exact local union-find (:func:`_local_cc_pdf`). Lineage is
+truncated per round via localCheckpoint so the plan does not grow
+across iterations.
 """
 
 from __future__ import annotations
 
-import os
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Size-adaptive hybrid (optimization round 15): distributed contraction
 # rounds run only while the (exactly counted) edge list exceeds this
@@ -34,7 +32,7 @@ from pyspark.sql import types as T
 # heap, same argument class as skew.BROADCAST_ROW_GATE. A giant
 # component whose star edge list never contracts below the gate keeps
 # the fully distributed path (the sig fixpoint check is unchanged).
-_LOCAL_CC_EDGE_GATE = int(os.environ.get("RDS_LOCAL_CC_EDGE_GATE", 1_000_000))
+_LOCAL_CC_EDGE_GATE = 1_000_000
 
 
 def _local_cc_pdf(pdf, a_col: str, b_col: str):
@@ -100,156 +98,6 @@ def _local_cc(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    strict: bool = True,
-) -> DataFrame:
-    """Return (id, cluster_id) for every node in ``edges``, where
-    cluster_id is the minimum node id of its connected component.
-
-    ``edges`` is undirected input given as one row per pair (either
-    orientation). Nodes with no edges are simply absent — union them
-    back with label=id if isolated nodes must appear.
-
-    Converges in O(diameter) rounds. If ``max_iter`` is exhausted
-    before fixpoint the labels are only partially propagated; with
-    ``strict`` (default) that raises, otherwise it warns and returns
-    the partial labels.
-
-    Size-adaptive: when the distinct undirected edge list is at or
-    below the driver gate (_LOCAL_CC_EDGE_GATE), the whole graph is
-    solved locally in one collect + one exact vectorized union-find —
-    identical labels, none of the per-round shuffle/probe rounds.
-    """
-    # Canonical undirected edge list, PERSISTED before the gate probe:
-    # the probe, the local collect AND the distributed loop's sym all
-    # derive from it, so the (possibly expensive, un-checkpointed)
-    # upstream edge lineage is evaluated once — previously the
-    # over-gate path re-derived every edge for sym, and the under-gate
-    # path re-derived them for toPandas (round-15 ADVICE #1). The
-    # probe stays limit+1/count: its CollectLimit stage is bounded and
-    # whatever partitions it does compute land in the cache.
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .persist()
-    )
-    # Non-numeric ids (string doc keys) are far wider than 2 longs on
-    # the driver — shrink the local gate so the collect stays bounded
-    # by memory, not row count (round-15 ADVICE #3).
-    gate = _LOCAL_CC_EDGE_GATE
-    if not isinstance(
-        edges.schema[src].dataType, (T.LongType, T.IntegerType, T.ShortType)
-    ):
-        gate //= 8
-    # One BOUNDED collect serves both the gate probe and the local
-    # solve: if at most `gate` rows come back, the whole edge list is
-    # already on the driver — no separate probe-count action.
-    pdf = und.limit(gate + 1).toPandas()
-    if len(pdf) <= gate:
-        try:
-            return _local_cc_result(
-                edges.sparkSession,
-                pdf,
-                "a",
-                "b",
-                edges.schema[src].dataType.simpleString(),
-            )
-        finally:
-            und.unpersist()
-
-    sym = (
-        und.union(
-            und.filter(F.col("a") != F.col("b")).select(
-                F.col("b").alias("a"), F.col("a").alias("b")
-            )
-        )
-        # und is already distinct and canonically ordered, so the union
-        # with its self-loop-free swap IS the distinct symmetric set —
-        # no second distinct shuffle over the raw edges.
-        # Persist partitioned on the join key (b == labels.id): persist,
-        # not localCheckpoint, keeps the repartition node visible to
-        # Catalyst (a checkpointed RDD reports UnknownPartitioning), so
-        # the static edge side is shuffled ONCE here and every
-        # propagation round moves only the small label table.
-        .repartition("b")
-        .persist()
-    )
-    # No materializing count() here: the first signature probe below
-    # fills the cache as part of its own job (one fewer driver action;
-    # the persist still pins the shuffled edge list for every round).
-
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        # eager=False: the signature probe right after is the action
-        # that materializes the checkpoint, so each round costs ONE
-        # driver round-trip instead of two (checkpoint job + probe
-        # job). Blocks persist on first computation exactly as with
-        # eager=True; every later consumer reads them.
-        .localCheckpoint(eager=False)
-    )
-
-    def _label_sig(df: DataFrame):
-        # Stability signature of the label table (same pattern as the
-        # star variant's edge signature): labels move monotonically
-        # downward, so an unchanged hash-sum means fixpoint. One
-        # aggregation job per round — replaces the old new-vs-old
-        # label JOIN + limit(1).count() probe.
-        return df.select(
-            F.sum(F.xxhash64("id", "label").cast("decimal(38,0)")).alias("h")
-        ).first()["h"]
-
-    sig = _label_sig(labels)
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.id == nbr_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            # Materialized by the signature probe below (see init).
-            .localCheckpoint(eager=False)
-        )
-        new_sig = _label_sig(labels)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-
-    if not converged:
-        msg = (
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds (component diameter exceeds max_iter); labels are partial"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-
-    # The final labels are already materialized (checkpointed every
-    # round), so the cached edge list can be released — unlike a
-    # GC-collected localCheckpoint RDD, a persisted plan stays pinned
-    # in the CacheManager until explicitly unpersisted, and a session
-    # running many components calls (bench: 8+ queries) would
-    # accumulate one edge list per call.
-    sym.unpersist()
-    und.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -258,12 +106,26 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SOCC'14). Same contract as :func:`connected_components`
-    — (id, cluster_id=component min) for every node appearing in
-    ``edges`` — but converges in O(log²·n) rounds independent of the
-    graph DIAMETER, where min-label propagation needs O(diameter)
-    rounds. A 100-hop chain (pathological dedup corpus: A≈B≈C≈...)
-    finishes in ~7 rounds here vs 100 joins there.
+    and Beyond", SOCC'14). Returns (id, cluster_id) for every node
+    appearing in ``edges``, where cluster_id is the minimum node id of
+    its connected component; ids come back as long.
+
+    ``edges`` is undirected input given as one row per pair (either
+    orientation; duplicates allowed). Nodes with no edges are simply
+    absent — union them back with label=id if isolated nodes must
+    appear. Self-loops carry no connectivity and are dropped, so a
+    node whose only edge is a self-loop is absent too.
+
+    Converges in O(log²·n) rounds independent of the graph DIAMETER,
+    where min-label propagation needs O(diameter) rounds: a 100-hop
+    chain (pathological dedup corpus: A≈B≈C≈...) finishes in ~7
+    rounds here vs 100 joins there. Raises if ``max_iter`` rounds pass
+    without a stable edge set.
+
+    Size-adaptive: whenever the edge list is at or below the driver
+    gate (_LOCAL_CC_EDGE_GATE) — at entry or after any contraction
+    round — the rest of the graph is solved locally in one collect +
+    one exact vectorized union-find, with identical labels.
 
     Each round is two groupBy-min passes over the edge list — no
     label-table join, so the shuffle volume per round is the edge
@@ -281,8 +143,7 @@ def connected_components_star(
         .distinct()
         # eager=False: the signature probe right after materializes the
         # checkpoint — one driver round-trip per round instead of two
-        # (same blocks, same lineage truncation; see
-        # connected_components).
+        # (same blocks, same lineage truncation).
         .localCheckpoint(eager=False)
     )
 
@@ -390,8 +251,8 @@ def pagerank(
     mass leaks and ranks no longer sum to 1). Each iteration is one
     shuffle-partitioned join (ranks ⋈ edges on src) plus one hash
     aggregation on dst — no driver-side graph state; lineage is
-    truncated every ``checkpoint_every`` rounds like
-    :func:`connected_components`.
+    truncated every ``checkpoint_every`` rounds, as
+    :func:`connected_components_star` does every round.
 
     Determinism: per-edge shares are truncated to DECIMAL(24,14)
     before the exact decimal sum, and the decimal total re-enters

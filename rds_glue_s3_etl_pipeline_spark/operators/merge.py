@@ -96,7 +96,6 @@ def precedence_merge(
     key: str = "id",
     fallback_order_col: str | None = None,
     dedupe_fallback: bool = True,
-    broadcast_fallback: bool = False,
 ) -> DataFrame:
     """Left-outer merge where primary cells win unless missing (NULL/NaN).
 
@@ -127,8 +126,6 @@ def precedence_merge(
         fb = first_match_only(fb, dedup_key, fallback_order_col)
     if fallback_order_col and fallback_order_col not in primary.columns:
         fb = fb.drop(fallback_order_col)
-    if broadcast_fallback:
-        fb = F.broadcast(fb)
 
     f_types = {f.name: f.dataType for f in fb.schema.fields}
     shared = [c for c in primary.columns if c in f_types and c != key]

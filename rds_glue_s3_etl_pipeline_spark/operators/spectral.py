@@ -11,7 +11,7 @@ corpus size; the eigensolve then runs on the driver over a 64 x 64
 matrix in microseconds. No iteration over the corpus, no collect of
 row data.
 
-Two Gram builders:
+Two Gram forms:
 
 * ``gram_exact`` — the oracle-facing form: components quantized to a
   4dp DECIMAL, pairwise products summed as exact decimals (order
@@ -19,11 +19,12 @@ Two Gram builders:
   cost is d*(d+1)/2 rows per vector, consumed by the same-stage
   partial hash aggregate over the 2,080 (i, j) keys — the shuffle
   stays 2,080 rows per partition at any corpus size.
-* ``gram_fast`` — the scale form: ``mapInPandas`` emits one packed
-  d x d partial per Arrow batch (numpy ``X.T @ X``), a groupBy over
-  the d*d positions sums them. Float64 accumulation (not decimal):
-  bit-exactness across engines is given up for BLAS throughput; the
-  q197 gate pins its agreement with the exact form.
+* ``moments`` — the scale form the eigensolve uses: ``mapInPandas``
+  emits one packed partial per Arrow batch (numpy ``X.T @ X`` plus
+  column sums and the row count), a groupBy over the positions sums
+  them. Float64 accumulation (not decimal): bit-exactness across
+  engines is given up for BLAS throughput; the q197 gate pins its
+  agreement with the exact form.
 
 Eigensolve correctness is gated, not oracle-matched (no SQL engine
 exposes eigh): ``numpy.linalg.eigh`` output is accepted only when
@@ -66,7 +67,7 @@ def quantized(col) -> "F.Column":
 
 def quantized_double(col) -> "F.Column":
     """Embedding column -> array<double> holding the EXACT 4dp-decimal
-    quantized values. The float path (``gram_fast`` / ``moments`` /
+    quantized values. The float path (``moments`` /
     ``reconstruction_mse``) runs over THIS column so that its results
     differ from the decimal-exact oracle arithmetic only by float64
     accumulation order (~1e-12 relative), which the q197 gates absorb
@@ -111,28 +112,6 @@ def gram_exact(
     ).agg(g.alias("g"))
 
 
-def gram_fast(df: DataFrame, col: str = "embedding") -> DataFrame:
-    """Float64 Gram as (pos, g) rows, pos = i*d + j over the FULL
-    d x d matrix: one ``X.T @ X`` BLAS call per Arrow batch, then a
-    groupBy-sum over the d*d positions. The scale path — used by the
-    eigensolve, whose gates (q197) pin it against ``gram_exact``."""
-    src = df.select(F.col(col).cast("array<double>").alias("v"))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
-            g = x.T @ x
-            d = g.shape[0]
-            yield pd.DataFrame(
-                {"pos": np.arange(d * d, dtype=np.int64), "partial": g.ravel()}
-            )
-
-    parts = src.mapInPandas(partials, schema="pos long, partial double")
-    return parts.groupBy("pos").agg(F.sum("partial").alias("g"))
-
-
 def moments(
     df: DataFrame, col: str = "embedding"
 ) -> tuple[np.ndarray, np.ndarray, int]:
@@ -141,9 +120,9 @@ def moments(
     d*d + d + 1 numbers (X^T X, column sums, row count); a groupBy
     over the positions combines partials. Driver receives that many
     rows — bounded by the embedding dimensionality, never the corpus.
-    (Originally two jobs — gram_fast + a 64-column sum — which scanned
-    and Arrow-shipped the corpus twice for no reason; measured 2x on
-    the 200k-vector fixture.)"""
+    (Originally two jobs — a float Gram + a 64-column sum — which
+    scanned and Arrow-shipped the corpus twice for no reason; measured
+    2x on the 200k-vector fixture.)"""
     d_probe = df.select(F.size(F.col(col)).alias("d")).first()
     if d_probe is None or d_probe["d"] is None:
         # Empty (or all-null) corpus: fail loudly here rather than a

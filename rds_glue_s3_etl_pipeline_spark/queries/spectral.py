@@ -54,8 +54,8 @@ def q195_embedding_gram(spark, sf_dir):
     DuckDB oracle hash-matches every entry. Scale shape: the two
     posexplodes fan out inside the same stage as the partial hash
     aggregate, so the exchange carries at most 2,080 rows per
-    partition no matter the corpus size; the float64 BLAS twin used
-    by the eigensolve (operators/spectral.gram_fast) is gated against
+    partition no matter the corpus size; the float64 BLAS moments the
+    eigensolve uses (operators/spectral.moments) are gated against
     this form through q197's trace identity."""
     emb = load(spark, sf_dir, "embeddings")
     g = S.gram_exact(emb, "embedding")

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
-from ..operators.graph import connected_components
+from ..operators.graph import connected_components_star
 from .registry import query
 from .text import _Q23_ORACLE
 
@@ -120,8 +120,8 @@ def q59_ivf_topk(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q60: dup-cluster resolution. Edges = q23's n-gram Jaccard near-dup
-# pairs; components via min-label propagation (operators/graph.py).
-# The DuckDB oracle computes the same components with a recursive CTE
+# pairs; components via star contraction (operators/graph.py). The
+# DuckDB oracle computes the same components with a recursive CTE
 # (UNION-deduped reachability), proving the iterative Spark loop
 # converges to the true fixpoint.
 # --------------------------------------------------------------------------
@@ -148,13 +148,14 @@ FROM reach GROUP BY a
 @query("q60_dup_clusters", oracle=_Q60_ORACLE, tags=("dedup", "graph", "EXT"))
 def q60_dup_clusters(spark, sf_dir):
     """Near-dup pairs → dup clusters: connected components by
-    alternating min-label propagation, each round one shuffle-join.
-    This is the step that turns pairwise dedup output into 'keep one
-    doc per cluster' decisions."""
+    large-star / small-star contraction (finished by the exact local
+    union-find once the edge list fits the driver). This is the step
+    that turns pairwise dedup output into 'keep one doc per cluster'
+    decisions."""
     from .text import q23_ngram_jaccard_pairs
 
     edges = q23_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components(edges, src="doc_a", dst="doc_b").select(
+    return connected_components_star(edges, src="doc_a", dst="doc_b").select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
 
@@ -174,8 +175,8 @@ def q60_dup_clusters(spark, sf_dir):
 @query("q108_dup_clusters_staged", oracle=_Q60_ORACLE, tags=("dedup", "graph", "EXT"))
 def q108_dup_clusters_staged(spark, sf_dir):
     """Staged near-dup clustering: LSH banding proposes candidates,
-    exact shingle-Jaccard verifies them, min-label propagation
-    clusters the survivors. Single-row bands (32 independent minhash
+    exact shingle-Jaccard verifies them, star contraction clusters the
+    survivors. Single-row bands (32 independent minhash
     buckets) push recall at the 0.2 threshold to ~99.9%, and every
     false candidate dies in the exact-verify join — so the output
     matches q60's all-pairs computation bit for bit while the
@@ -185,7 +186,7 @@ def q108_dup_clusters_staged(spark, sf_dir):
     from .text import staged_near_dup_edges
 
     edges = staged_near_dup_edges(spark, sf_dir)
-    return connected_components(edges, src="doc_a", dst="doc_b").select(
+    return connected_components_star(edges, src="doc_a", dst="doc_b").select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
 
@@ -194,7 +195,6 @@ def q108_dup_clusters_staged(spark, sf_dir):
 # q127: embedding dedup decision — near-dup clusters -> kept vector.
 # --------------------------------------------------------------------------
 
-from ..operators.graph import connected_components_star  # noqa: E402
 from .vector import _Q34_ORACLE  # noqa: E402
 
 _Q127_ORACLE = f"""

@@ -1043,8 +1043,7 @@ def q221_hard_negatives(spark, sf_dir):
 # N x nprobe² x block). q233 floors the measured band at each depth.
 _DBSCAN_NPROBE = 4
 _DBSCAN_NPROBE_DEEP = 6
-# Per-block candidate ceiling for the mp edge join (the analogue of
-# operators.dbscan.max_block_edges for the blocked plan): a healthy
+# Per-block candidate ceiling for the mp edge join: a healthy
 # index holds per-block work at ~(nprobe²+1) x block² ≈ 37k pairs —
 # 2M means the grid has effectively stopped separating the corpus.
 _MP_MAX_BLOCK_EDGES = 2_000_000
@@ -1239,13 +1238,11 @@ def q223_dbscan_grid(spark, sf_dir):
     with per-block fan-out nprobe² x block ~ {_DBSCAN_NPROBE}² x
     {_KNN_TARGET_BLOCK} — LINEAR total; the eps filter collapses
     candidates to mean-degree x N edge rows before the only
-    edge-list-wide shuffles (distinct, degree count, CC rounds). The
-    round-10 per-block union-find plan (operators/dbscan.
-    dbscan_blocked) remains the right physical plan for block-confined
-    edge sets, but round 12's truth measurements showed home-only
-    edges recover <1% of true co-membership pairs beyond the fixture —
-    a wrong answer computed quickly; the probe set is the measured
-    fix, as it was for k-NN recall in round 11."""
+    edge-list-wide shuffles (distinct, degree count, CC rounds).
+    Home-block-only edges recovered <1% of true co-membership pairs
+    beyond the fixture in round 12's truth measurements — a wrong
+    answer computed quickly; the probe set is the measured fix, as it
+    was for k-NN recall in round 11."""
     from ..operators.dbscan import dbscan_from_edges
 
     e = load(spark, sf_dir, "embeddings").select("vec_id")

@@ -49,16 +49,11 @@ def get_spark(
         # exchanges size-only coalescing collapses post-shuffle stages
         # to 1-2 fat partitions and starves the other cores; at 100 TB
         # the two settings coincide (every stage's bytes >> advisory x
-        # cores), so "true" is the correct local default and the env
-        # override exists for deployments that want size-only counts.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-        )
+        # cores), so "true" is the correct local default. Deployments
+        # that want size-only counts pass extra_conf (or spark.conf.set
+        # at runtime, as tools/aqe_sweep.py does).
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Spark 4's ICU-backed lower/upper triggers a pathologically
@@ -99,10 +94,7 @@ def get_spark(
         # contain one corpus-scale pass, which the 300s default timeout
         # would kill on a large cluster. The broadcast VALUES stay
         # k-row-bounded; only the build time needs the headroom.
-        .config(
-            "spark.sql.broadcastTimeout",
-            os.environ.get("SPARK_GRAFT_BROADCAST_TIMEOUT", "3600"),
-        )
+        .config("spark.sql.broadcastTimeout", "3600")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )

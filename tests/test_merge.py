@@ -161,13 +161,14 @@ def test_audit_key_type_coercion(spark):
 
 
 def test_merge_broadcast_fallback_with_coercion(spark):
-    """broadcast_fallback composes with key coercion: the coerced __k
-    dedup happens before the broadcast wrap, still one row out."""
+    """A small fallback side is broadcast by size (no hint needed), and
+    that composes with key coercion: the coerced __k dedup happens
+    before the broadcast build, still one row out."""
     s3 = spark.createDataFrame([(7, "grace")], "id long, name string")
     rds = spark.createDataFrame(
         [("007", 70, 1), ("7", 77, 2)], "id string, bonus int, src_order int"
     )
-    rows = precedence_merge(
-        s3, rds, fallback_order_col="src_order", broadcast_fallback=True
-    ).collect()
+    merged = precedence_merge(s3, rds, fallback_order_col="src_order")
+    rows = merged.collect()
     assert len(rows) == 1 and rows[0]["bonus"] == 70
+    assert "BroadcastHashJoin" in merged._jdf.queryExecution().executedPlan().toString()

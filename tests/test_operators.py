@@ -164,91 +164,106 @@ def test_cosine_topk_excludes_self_and_ranks(spark):
     assert all(r["q_id"] == 0 for r in out)
 
 
-def test_connected_components_two_clusters(spark):
-    from rds_glue_s3_etl_pipeline_spark.operators.graph import connected_components
+def _cc_reference(pairs) -> dict:
+    """Pure-Python union-find: {node: component minimum} for every node
+    of a non-self-loop pair. Self-loops carry no connectivity, so a node
+    whose only edge is a self-loop is absent, like an isolated node."""
+    parent: dict = {}
 
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min root: every root IS its component's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _star_labels(df) -> dict:
+    from rds_glue_s3_etl_pipeline_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    out = connected_components_star(df).collect()
+    labels = {r["id"]: r["cluster_id"] for r in out}
+    assert len(labels) == len(out)  # one row per node
+    return labels
+
+
+def test_connected_components_two_clusters(spark):
     # 1-2-3 chained, 10-11 pair, plus a self-contained 20-21-22 triangle.
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         "src long, dst long",
     )
-    out = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(edges).collect()
+    assert _star_labels(edges) == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
     }
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-def test_connected_components_star_matches_label_propagation(spark):
+def test_connected_components_star_matches_reference(spark, monkeypatch):
     import random
 
-    from rds_glue_s3_etl_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from rds_glue_s3_etl_pipeline_spark.operators import graph
 
     # Random graph: 120 nodes, sparse edges → several components of
-    # varying shape. Star contraction must agree with label
-    # propagation exactly.
+    # varying shape. Star contraction must agree with the union-find
+    # reference exactly, on the local and the fully distributed path.
     rng = random.Random(7)
     edges = [
         (rng.randrange(120), rng.randrange(120)) for _ in range(90)
     ]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
-    star = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components_star(df).collect()
-    }
-    plain = {
-        r["id"]: r["cluster_id"] for r in connected_components(df).collect()
-    }
-    assert star == plain
+    expected = _cc_reference(edges)
+    assert _star_labels(df) == expected
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGE_GATE", 0)
+    assert _star_labels(df) == expected
 
 
 def test_connected_components_star_long_chain(spark):
-    from rds_glue_s3_etl_pipeline_spark.operators.graph import (
-        connected_components_star,
-    )
-
     # A 100-hop path: diameter 100 defeats O(diameter) label
-    # propagation at default max_iter, but star contraction halves the
-    # structure every round — well under its round cap.
+    # propagation at any small round cap, but star contraction halves
+    # the structure every round — well under its round cap.
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "src long, dst long"
     )
-    out = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components_star(edges).collect()
-    }
-    assert out == {i: 0 for i in range(101)}
+    assert _star_labels(edges) == {i: 0 for i in range(101)}
 
 
 def test_connected_components_raises_without_convergence(spark, monkeypatch):
     import pytest
 
     from rds_glue_s3_etl_pipeline_spark.operators import graph
-    from rds_glue_s3_etl_pipeline_spark.operators.graph import connected_components
 
     # Force the distributed path (gate 0): the size-adaptive local
     # solve would otherwise finish any test-sized graph regardless of
     # max_iter.
     monkeypatch.setattr(graph, "_LOCAL_CC_EDGE_GATE", 0)
-    # A 5-node path needs ~4 propagation rounds; max_iter=1 cannot finish.
+    # A 5-node path is not a star: one contraction round changes its
+    # edge set, so max_iter=1 ends before a stable round.
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1)
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=1, strict=False).collect()
+    with pytest.raises(RuntimeError, match="did not stabilize"):
+        graph.connected_components_star(edges, max_iter=1)
 
 
 def test_connected_components_local_matches_distributed(spark, monkeypatch):
-    """The size-adaptive local union-find must label EXACTLY like the
-    distributed contraction loops — pinned on a randomized multi-shape
-    graph (cliques, chains, rings, singles-by-absence, both edge
-    orientations, duplicate pairs, self-loops)."""
+    """The size-adaptive local union-find, the fully distributed
+    contraction loop and the mid-stream hand-off must all label EXACTLY
+    like the reference — pinned on a randomized multi-shape graph
+    (cliques, chains, rings, singles-by-absence, both edge orientations,
+    duplicate pairs, self-loops)."""
     import random
 
     from rds_glue_s3_etl_pipeline_spark.operators import graph
@@ -271,34 +286,32 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     # both orientations + duplicates, as real edge generators emit them
     pairs += [(b, a) for (a, b) in rng.sample(pairs, 40)]
     pairs += rng.sample(pairs, 25)
+    # self-loops: one on a chain node, one on a node with no other edge
+    pairs += [(210, 210), (500, 500)]
     df = spark.createDataFrame(pairs, "src long, dst long")
+    expected = _cc_reference(pairs)
+    assert 210 in expected and 500 not in expected
 
     def labels(gate):
         monkeypatch.setattr(graph, "_LOCAL_CC_EDGE_GATE", gate)
-        star = {
-            r["id"]: r["cluster_id"]
-            for r in graph.connected_components_star(df).collect()
-        }
-        plain = {
-            r["id"]: r["cluster_id"]
-            # max_iter=60: label propagation needs O(diameter) rounds
-            # and the 40-hop chain exceeds the default 20
-            for r in graph.connected_components(df, max_iter=60).collect()
-        }
-        assert star == plain
-        return star
+        return _star_labels(df)
 
-    local = labels(1_000_000)  # local path for both operators
-    dist = labels(0)  # fully distributed path
-    assert local == dist
-    # mid-stream hand-off: the star loop runs distributed rounds first,
-    # then finishes locally once the contracting list fits the gate
-    monkeypatch.setattr(graph, "_LOCAL_CC_EDGE_GATE", 60)
-    mid = {
-        r["id"]: r["cluster_id"]
-        for r in graph.connected_components_star(df).collect()
-    }
-    assert mid == dist
+    assert labels(1_000_000) == expected  # local path
+    assert labels(0) == expected  # fully distributed path
+    # mid-stream hand-off: the 309 distinct edges enter over the gate,
+    # one contraction round brings them under it, and the local
+    # union-find finishes (a gate below the final star count, ~150
+    # edges, never hands off)
+    handoffs = []
+    local_cc = graph._local_cc
+
+    def spy(e, a_col, b_col):
+        handoffs.append(a_col)
+        return local_cc(e, a_col, b_col)
+
+    monkeypatch.setattr(graph, "_local_cc", spy)
+    assert labels(200) == expected
+    assert handoffs == ["u"]
 
 
 def test_global_row_number_matches_serial(spark):

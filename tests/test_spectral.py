@@ -38,22 +38,15 @@ def test_gram_exact_matches_numpy(spark, small_vectors):
             assert got[(i, j)] == pytest.approx(expected[i, j], abs=1e-9)
 
 
-def test_gram_fast_matches_numpy(spark, small_vectors):
-    df, x = small_vectors
-    dfq = df.select(S.quantized_double("embedding").alias("embedding"))
-    q = _quantize(x)
-    expected = (q.T @ q).ravel()
-    rows = S.gram_fast(dfq, "embedding").collect()
-    assert len(rows) == 36
-    for r in rows:
-        assert r["g"] == pytest.approx(expected[r["pos"]], rel=1e-12, abs=1e-12)
-
-
 def test_eigh_pipeline_identities(spark, small_vectors):
     df, x = small_vectors
     dfq = df.select(S.quantized_double("embedding").alias("embedding"))
     g, s, n = S.moments(dfq, "embedding")
     assert n == len(x)
+    # the float64 BLAS moments equal numpy's on the quantized values
+    q = _quantize(x)
+    np.testing.assert_allclose(g, q.T @ q, rtol=1e-12, atol=1e-12)
+    np.testing.assert_allclose(s, q.sum(axis=0), rtol=1e-12, atol=1e-12)
     w, v, mu = S.eigh_covariance(g, s, n)
     cov = g / n - np.outer(s / n, s / n)
     tr_ok, fr_ok = S.spectrum_gates(w, float(np.trace(cov)), float((cov * cov).sum()))

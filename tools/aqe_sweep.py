@@ -26,6 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize, release_blocks
 from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY
 from rds_glue_s3_etl_pipeline_spark.session import get_spark
 
@@ -45,16 +46,6 @@ COMBOS = {
     "pf_false_adv8m": ("false", "8m"),
     "pf_false_adv4m": ("false", "4m"),
 }
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def release_blocks(spark) -> None:
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(m.keySet().toArray()):
-        m.get(rid).unpersist(False)
 
 
 def main() -> None:
