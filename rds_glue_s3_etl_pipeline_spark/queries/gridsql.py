@@ -1,16 +1,18 @@
-"""Scale-aware DuckDB oracle generation for the adaptive-grid family
-(round-12, verdict item #3 — a two-round carry-over).
+"""Scale-aware DuckDB oracle generation for the adaptive-grid family.
 
 The adaptive-grid queries (k-NN graph, multi-probe eps-edges, their
-gates and refresh forms) pick their tree depth from the corpus size:
-``adaptive_grid(N, 32)`` is [16] at the sf0.01 fixture, [16, 4] at
-sf0.1, [16, 8, 5] at 10x. The STATIC oracle strings pin the fixture's
-single-level 16-cell grid (the q163/q149 equality pattern), so the
-sf0.1 sweep could only classify those queries as "expected
-divergence". This module regenerates the SQL twin FOR THE CORPUS AT
-HAND: same training-slice Lloyd, same md5-sampled sub-codebook levels,
-same 4dp-round + id tie-break determinism discipline — so the same
-query hash-matches at ANY sweep scale.
+gates and refresh forms, SemDeDup and the tree-probe dedup) pick their
+tree depth from the corpus size: ``adaptive_grid(N, 32)`` is [16] at
+the sf0.01 fixture, [16, 4] at sf0.1, [16, 8, 5] at 10x. Their oracle
+SQL therefore depends on exactly one fact about the data: the
+embeddings row count ``n``. Every generator here takes ``n`` and
+returns the SQL for a corpus of that size: same training-slice Lloyd,
+same md5-sampled sub-codebook levels, same 4dp-round + id tie-break
+determinism discipline, so the same query hash-matches at ANY scale.
+
+Each such query registers ONE generator (``@query(..., oracle=gen)``,
+see registry.query): the driver-contract string is ``gen(FIXTURE_ROWS)``
+and ``QuerySpec.oracle_fn(sf_dir)`` is ``gen(n_rows(sf_dir))``.
 
 Every generator mirrors one Spark code path bit-for-bit:
 
@@ -20,14 +22,18 @@ Every generator mirrors one Spark code path bit-for-bit:
                             (kmeans_assign + block_sub_codebook/assign)
 * ``probe_ctes``        <-> vector6._knn_assignments (depth-scaled
                             multi-probe + the home-block union)
-* ``mp_sym_ctes_at``    <-> vector6._mp_eps_candidates + _mp_symmetrize
+* ``mp_sym_ctes``       <-> vector6._mp_eps_candidates + _mp_symmetrize
 
-Depth support: every generator handles ARBITRARY tree depth (round
-13 lifted the old depth-2 probe bound — the descent loop in
-``probe_ctes`` mirrors vector6._knn_assignments level by level), so
-the 10x scale corpus (knn tree [16, 8, 5], sem tree [16, 8, 8, 5])
-joins the oracle-certified protocol: `python tools/oracle_check.py
---sf .scale/sf1.0 q163... q212... q223...` hash-matches there too.
+Depth support: every generator handles ARBITRARY tree depth (the
+descent loop in ``probe_ctes`` mirrors vector6._knn_assignments level
+by level), so the 10x scale corpus (knn tree [16, 8, 5], sem tree
+[16, 8, 8, 5]) joins the oracle-certified protocol: `python
+tools/oracle_check.py --sf .scale/sf1.0 q163... q212... q223...`
+hash-matches there too.
+
+Import order: the driver strings are generated while the query
+modules import, so a generator may only read names its query module
+defines ABOVE the ``@query`` line that registers it.
 """
 
 from __future__ import annotations
@@ -37,6 +43,11 @@ import os
 from ..operators.graph import cc_oracle_ctes
 
 _COS = "list_cosine_similarity"
+
+# Embeddings row count of the driver's oracle fixture (sf0.01; the
+# sf0.001 smoke fixture carries the same 500 vectors). The registered
+# driver-contract strings are the generators evaluated here.
+FIXTURE_ROWS = 500
 
 
 def n_rows(sf_dir: str, table: str = "embeddings") -> int:
@@ -57,14 +68,14 @@ def n_rows(sf_dir: str, table: str = "embeddings") -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def knn_ks(sf_dir: str) -> list[int]:
-    """The k-NN index tree for the corpus at ``sf_dir`` — the same
+def knn_ks(n: int) -> list[int]:
+    """The k-NN index tree for an ``n``-vector corpus — the same
     deterministic rule vector6._knn_index applies."""
     from ..operators.similarity import adaptive_grid
     from .vector3 import _KM_K
     from .vector6 import _KNN_TARGET_BLOCK
 
-    return adaptive_grid(n_rows(sf_dir), _KNN_TARGET_BLOCK, coarse_k=_KM_K)
+    return adaptive_grid(n, _KNN_TARGET_BLOCK, coarse_k=_KM_K)
 
 
 def _train_ctes(k: int, iters: int, train_cap: int) -> str:
@@ -235,13 +246,14 @@ def probe_ctes(ks: list[int], iters: int, nprobe: int) -> str:
     return ",\n".join(parts)
 
 
-def knn_home_probe_ctes(sf_dir: str, nprobe: int) -> tuple[str, list[str], str]:
-    """(ctes, block_cols, home_name) for the k-NN index at this
-    corpus: home assignment + ``pb`` probe set at ``nprobe``."""
+def knn_home_probe_ctes(n: int, nprobe: int) -> tuple[str, list[str], str]:
+    """(ctes, block_cols, home_name) for the k-NN index of an
+    ``n``-vector corpus: home assignment + ``pb`` probe set at
+    ``nprobe``."""
     from .vector3 import _KM_ITERS
     from .vector5 import _TRAIN_SAMPLE
 
-    ks = knn_ks(sf_dir)
+    ks = knn_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
     return (
         home_sql + ",\n" + probe_ctes(ks, _KM_ITERS, nprobe),
@@ -250,15 +262,15 @@ def knn_home_probe_ctes(sf_dir: str, nprobe: int) -> tuple[str, list[str], str]:
     )
 
 
-def q212_oracle_at(sf_dir: str) -> str:
-    """Scale-aware twin of vector6._Q212_ORACLE: within-deepest-block
-    top-k neighbors under the tree adaptive_grid picks for THIS
-    corpus."""
+def q212_oracle(n: int) -> str:
+    """q212's oracle (the blocked k-NN graph): within-deepest-block
+    top-k neighbors under the tree adaptive_grid picks for an
+    ``n``-vector corpus."""
     from .vector3 import _KM_ITERS
     from .vector5 import _TRAIN_SAMPLE
     from .vector6 import _KNN_K
 
-    ks = knn_ks(sf_dir)
+    ks = knn_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
     home = f"lvl{len(ks) - 1}"
     on = " AND ".join(f"a.{c} = b.{c}" for c in cols)
@@ -279,17 +291,19 @@ FROM r WHERE rnk <= {_KNN_K}
 """
 
 
-def mp_sym_ctes_at(sf_dir: str, sym_name: str = "sym") -> str:
-    """Scale-aware twin of vector6._mp_sym_ctes: ``sym(a, b)`` = the
-    multi-probe eps-edge list under THIS corpus's tree (probe x home
-    candidates, eps filter, symmetric DISTINCT). MATERIALIZED so a
-    recursive consumer (reach) re-scans a 1.5k-row table per iteration
-    instead of re-evaluating the whole twin (measured 257 s -> 2.7 s
-    at sf0.1). ``sym_name`` lets a nested scope avoid shadowing an
+def mp_sym_ctes(n: int, sym_name: str = "sym") -> str:
+    """CTEs ending in ``sym(a, b)`` = the multi-probe eps-edge list
+    under an ``n``-vector corpus's tree (probe x home candidates at
+    the depth-scaled budget, eps filter, symmetric DISTINCT — directed
+    (a, b) can arise both from a probing b's home and, after the
+    swap, from b probing a's home). MATERIALIZED so a recursive
+    consumer (reach) re-scans a 1.5k-row table per iteration instead
+    of re-evaluating the whole edge build (measured 257 s -> 2.7 s at
+    sf0.1). ``sym_name`` lets a nested scope avoid shadowing an
     outer MATERIALIZED sym (DuckDB rejects the duplicate alias)."""
     from .vector6 import _DBSCAN_EPS_COS, _dbscan_nprobe
 
-    ctes, cols, home = knn_home_probe_ctes(sf_dir, _dbscan_nprobe(knn_ks(sf_dir)))
+    ctes, cols, home = knn_home_probe_ctes(n, _dbscan_nprobe(knn_ks(n)))
     on = " AND ".join(f"p.{c} = h.{c}" for c in cols)
     return f"""{ctes},
 cd AS (
@@ -307,21 +321,19 @@ cd AS (
 )"""
 
 
-def sem_ks(sf_dir: str) -> list[int]:
-    """The SemDeDup tree for this corpus — vector5._semantic_tree's
-    rule (target block 4, coarse 16, fanout 8): [16, 8] at the
-    fixture, [16, 8, 4] at sf0.1."""
+def sem_ks(n: int) -> list[int]:
+    """The SemDeDup tree for an ``n``-vector corpus — vector5.
+    _semantic_tree's rule (target block 4, coarse 16, fanout 8):
+    [16, 8] at the fixture, [16, 8, 4] at sf0.1."""
     from ..operators.similarity import adaptive_grid
     from .vector3 import _KM_K
     from .vector5 import _ADAPT_TARGET_BLOCK, _SUB_K
 
-    return adaptive_grid(
-        n_rows(sf_dir), _ADAPT_TARGET_BLOCK, coarse_k=_KM_K, fanout=_SUB_K
-    )
+    return adaptive_grid(n, _ADAPT_TARGET_BLOCK, coarse_k=_KM_K, fanout=_SUB_K)
 
 
-def q163_oracle_at(sf_dir: str) -> str:
-    """Scale-aware twin of q163 (SemDeDup on the adaptive tree):
+def q163_oracle(n: int) -> str:
+    """q163's oracle (SemDeDup on the adaptive tree):
     deepest-block membership from home_ctes at the SemDeDup tree,
     hub-capped within-block pairs (every member vs the block's first
     _PAIR_HUB_CAP members in md5 order — all-pairs wherever the block
@@ -331,7 +343,7 @@ def q163_oracle_at(sf_dir: str) -> str:
     from .vector3 import _KM_ITERS, _SEM_THRESHOLD
     from .vector5 import _PAIR_HUB_CAP, _TRAIN_SAMPLE
 
-    ks = sem_ks(sf_dir)
+    ks = sem_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
     home = f"lvl{len(ks) - 1}"
     pc = ", ".join(cols)
@@ -371,9 +383,9 @@ WHERE m.rn = 1
 """
 
 
-def tree_probe_oracle_at(sf_dir: str, target_cell: int) -> str:
-    """Scale-aware twin of the tree-probe incremental dedup (q164 at
-    target cell 32, q165 at 8): home assignment from home_ctes at this
+def tree_probe_oracle(n: int, target_cell: int) -> str:
+    """The tree-probe incremental dedup's oracle (q164 at target cell
+    32, q165 at 8): home assignment from home_ctes at an ``n``-vector
     corpus's tree, per-BRANCH probe descent (top-p0 coarse cells, then
     top-p_sub sub-cells within each probed branch at every deeper
     level — vector5._tree_probe_scored's rule, which differs from the
@@ -385,7 +397,7 @@ def tree_probe_oracle_at(sf_dir: str, target_cell: int) -> str:
     from .vector3 import _KM_ITERS, _KM_K, _NPROBE, _SUB_K
     from .vector5 import _TRAIN_SAMPLE, _TREE_PSUB
 
-    ks = adaptive_grid(n_rows(sf_dir), target_cell, coarse_k=_KM_K, fanout=_SUB_K)
+    ks = adaptive_grid(n, target_cell, coarse_k=_KM_K, fanout=_SUB_K)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
     home = f"lvl{len(ks) - 1}"
     parts = [
@@ -444,14 +456,14 @@ WHERE rn = 1
 """
 
 
-def q166_oracle_at(sf_dir: str) -> str:
-    """q166's twin with the adaptive-probe arm regenerated for this
-    corpus (the exact arm — q132's full label scan — is scale-exact
-    already)."""
+def q166_oracle(n: int) -> str:
+    """q166's oracle: the adaptive-probe arm (q164) generated for an
+    ``n``-vector corpus against the exact arm (q132's full label scan,
+    scale-exact as written)."""
     from .vector2 import _Q132_ORACLE
     from .vector5 import _IVF_TARGET_CELL
 
-    ap = tree_probe_oracle_at(sf_dir, _IVF_TARGET_CELL)
+    ap = tree_probe_oracle(n, _IVF_TARGET_CELL)
     return f"""
 WITH exact AS (SELECT * FROM ({_Q132_ORACLE})),
 ap AS (SELECT * FROM ({ap})),
@@ -470,10 +482,10 @@ FROM common
 """
 
 
-def q167_oracle_at(sf_dir: str) -> str:
-    """q167's twin with the adaptive row regenerated (exact_1level and
-    fixed_2level stay the pinned forms — they are DEFINED as the fixed
-    grids at every scale)."""
+def q167_oracle(n: int) -> str:
+    """q167's oracle: the adaptive row generated for an ``n``-vector
+    corpus (exact_1level and fixed_2level stay the pinned forms — they
+    are DEFINED as the fixed grids at every scale)."""
     from .vector3 import _Q143_ORACLE, _Q149_ORACLE
 
     def stats(variant: str, inner: str) -> str:
@@ -484,7 +496,7 @@ def q167_oracle_at(sf_dir: str) -> str:
 FROM ({inner})"""
 
     return (
-        stats("adaptive", q163_oracle_at(sf_dir))
+        stats("adaptive", q163_oracle(n))
         + "\nUNION ALL\n"
         + stats("exact_1level", _Q143_ORACLE)
         + "\nUNION ALL\n"
@@ -492,13 +504,14 @@ FROM ({inner})"""
     )
 
 
-def q169_oracle_at(sf_dir: str) -> str:
-    """q169's twin: per-level block stats over THIS corpus's SemDeDup
-    tree (one report row per level, however deep the tree is here)."""
+def q169_oracle(n: int) -> str:
+    """q169's oracle: per-level block stats over an ``n``-vector
+    corpus's SemDeDup tree (one report row per level, however deep
+    the tree is there)."""
     from .vector3 import _KM_ITERS
     from .vector5 import _TRAIN_SAMPLE
 
-    ks = sem_ks(sf_dir)
+    ks = sem_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
     selects = []
     for lvl in range(len(ks)):

@@ -74,8 +74,9 @@ def q203_curriculum_phases(spark, sf_dir):
     ranks only its own partition, so the same plan holds at 100 TB.
     The oracle keeps the SQL-twin ROW_NUMBER window, pinning the
     BUCKETING POLICY while the implementation stays distributed
-    (tools/rank_race_experiment.py proves histogram-identity of the
-    two forms and a 1.6x single-box win for this one at 20M rows).
+    (tools/rank_race_experiment.py, at commit 669f295, proved
+    histogram-identity of the two forms and a 1.6x single-box win for
+    this one at 20M rows; SCALE.md records the numbers).
     N rides along as max(rn) — a broadcast one-row aggregate over the
     already-checkpointed ranked frame, no second scan of documents."""
     d = load(spark, sf_dir, "documents").select(

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .gridsql import FIXTURE_ROWS, n_rows
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -36,15 +38,13 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL; None => rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
-    # Scale-aware oracle twin (round-12, verdict item #3): a callable
-    # (sf_dir) -> SQL that regenerates the oracle for the CORPUS SIZE
-    # at that path — used by the builder's own sweeps (tools/
-    # oracle_check.py) so adaptive-grid queries hash-match at ANY
-    # sweep scale, not just the fixture the static string pins. The
-    # static ``oracle`` stays the driver-contract surface
-    # (__spark_entry__.oracle_sql()); at the sf0.01 fixture both must
-    # produce identical results (the adaptive rule reproduces the
-    # pinned grid there — the q163/q149 equality pattern).
+    # Adaptive-grid family only: (sf_dir) -> SQL, the query's one
+    # oracle generator evaluated at the embeddings row count found at
+    # ``sf_dir`` (queries/gridsql.py), so the query hash-matches at ANY
+    # sweep scale (tools/oracle_check.py). ``oracle`` — the driver
+    # contract, __spark_entry__.oracle_sql() — is the same generator
+    # at the fixture's row count, so the two are equal there by
+    # construction.
     oracle_fn: Callable[[str], str] | None = None
 
 
@@ -53,17 +53,28 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def query(
     name: str,
-    oracle: str | None = None,
+    oracle: str | Callable[[int], str] | None = None,
     tags: tuple[str, ...] = (),
-    oracle_fn: Callable[[str], str] | None = None,
 ):
-    """Decorator registering a query under ``name``."""
+    """Decorator registering a query under ``name``. ``oracle`` is the
+    DuckDB SQL or, for the adaptive-grid family, a generator
+    ``(n) -> SQL`` over the embeddings row count: the driver string is
+    ``oracle(FIXTURE_ROWS)`` and ``oracle_fn`` regenerates it for the
+    corpus at any ``sf_dir``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
+        if callable(oracle):
+            sql = oracle(FIXTURE_ROWS)
+
+            def oracle_fn(sf_dir: str) -> str:
+                return oracle(n_rows(sf_dir))
+
+        else:
+            sql, oracle_fn = oracle, None
         REGISTRY[name] = QuerySpec(
-            name, fn, oracle, tags, (fn.__doc__ or "").strip(), oracle_fn
+            name, fn, sql, tags, (fn.__doc__ or "").strip(), oracle_fn
         )
         return fn
 

@@ -724,7 +724,8 @@ def q209_moments_blas_gate(spark, sf_dir):
     where the gate trips means the BLAS partials are broken (dtype,
     transpose, batch boundary) — exactly the failure the decimal
     anchor exists to catch. Scale: the BLAS form is the d=512+ path
-    (tools/moments_dsweep.py measures the d-scaling law); both sides
+    (SCALE.md records the d-scaling law, measured with
+    tools/moments_dsweep.py at commit 669f295); both sides
     here are bounded collects of d^2-ish rows."""
     emb = load(spark, sf_dir, "embeddings")
     g_blas, _s, n = S.moments(

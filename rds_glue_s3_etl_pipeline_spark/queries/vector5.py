@@ -4,23 +4,28 @@ the fixed-grid law, round 7's #1 finding.
 The round-7 100x probe measured the fixture-pinned grids of
 q149/q150/q162 at 37-64x per decade: any blocking scheme with a FIXED
 total block count B has within-block pairs ∝ N²/B — quadratic at any
-depth. The fix was proven in tools/ivf_cells_experiment.py (k ∝ corpus
-cuts the quadratic term by exactly the predicted 9.9x) but existed
-only as an experiment. This module registers it:
+depth. The fix was proven in tools/ivf_cells_experiment.py (at commit
+669f295; k ∝ corpus cuts the quadratic term by exactly the predicted
+9.9x) but existed only as an experiment. This module registers it:
 
 * q163: SemDeDup whose grid comes from operators.similarity.
   adaptive_grid(corpus_count) — block size held ~constant, depth grows
   as log N. At the sf0.01 fixture the rule reproduces q149's pinned
-  (16, 8) grid EXACTLY, so the query hash-matches q149's unrolled
-  oracle there (the strongest possible gate: bit-equality with the
-  fixture-pinned exact form) and only deepens beyond fixture scale.
+  (16, 8) grid EXACTLY, so q163 returns q149's rows there (the
+  strongest possible gate: bit-equality with the fixture-pinned exact
+  form) and only deepens beyond fixture scale.
 * q164: incremental vector dedup probing a corpus-adaptive TREE index
   (cell size held ~constant; new vectors multi-probe the coarse level
   and descend). At sf0.01 the tree is the flat k=16 codebook and the
-  probe is exactly q150's nprobe=4 — hash-matched to q150's oracle.
+  probe is exactly q150's nprobe=4 — q164 returns q150's rows there.
 * q165: the tree-probe machinery FORCED to depth 2 at fixture scale
-  (target cell 8 → (16, 4) grid) with its own unrolled oracle — the
-  multi-level descent is bit-verified, not just exercised at scale.
+  (target cell 8 → (16, 4) grid) — the multi-level descent is
+  bit-verified against the driver's oracle, not just exercised at
+  scale.
+
+Every oracle here is one generator over the corpus row count
+(queries/gridsql.py): the driver string is that generator at the
+fixture, and tools/oracle_check.py regenerates it at any scale.
 * q166/q167: registered recall/survivor gates — adaptive vs the exact
   forms (q132 / q143 / q149) on the same data, the q145/q155 pattern.
 
@@ -31,6 +36,8 @@ decade curve lives in SCALE.md next to the fixed-grid table.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -44,20 +51,22 @@ from ..operators.similarity import (
     kmeans_assign,
     spherical_kmeans_codebook,
 )
+from .gridsql import (
+    q163_oracle,
+    q166_oracle,
+    q167_oracle,
+    q169_oracle,
+    tree_probe_oracle,
+)
 from .registry import query
 from .vector import _NEAR_DUP_THRESHOLD
-from .vector2 import _Q132_ORACLE
 from .vector3 import (
     _KM_ITERS,
     _KM_K,
     _NPROBE,
-    _Q143_ORACLE,
-    _Q149_ORACLE,
-    _Q150_ORACLE,
     _SEM_THRESHOLD,
     _SUB_K,
     _init_centroids,
-    _km_ctes,
     _survivor_groups,
 )
 
@@ -161,13 +170,7 @@ def _semantic_tree(spark, sf_dir):
     return fin, cur, block_cols
 
 
-def _q163_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q163_oracle_at
-
-    return q163_oracle_at(sf_dir)
-
-
-@query("q163_semantic_dedup_adaptive", oracle=_Q149_ORACLE, tags=("vector", "dedup", "graph", "EXT"), oracle_fn=_q163_oracle_at)
+@query("q163_semantic_dedup_adaptive", oracle=q163_oracle, tags=("vector", "dedup", "graph", "EXT"))
 def q163_semantic_dedup_adaptive(spark, sf_dir):
     """SemDeDup with a CORPUS-ADAPTIVE hierarchical grid: per-level
     codebook sizes come from adaptive_grid(count, target_block=4) —
@@ -178,10 +181,11 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
     fixture-pinned q149/q162 grids were measured quadratic
     (64x / 37x per decade, SCALE.md round-7 fixed-grid law).
 
-    The oracle is q149's unrolled SQL VERBATIM: at the sf0.01/sf0.001
-    fixtures (500 vectors) the rule yields exactly q149's (16, 8)
-    grid, so adaptive == fixed is proven by hash equality — the
-    strongest form of the survivor-count gate — while the SAME code
+    The oracle is gridsql.q163_oracle at the corpus's row count: at
+    the sf0.01/sf0.001 fixtures (500 vectors) the rule yields exactly
+    q149's (16, 8) grid, so q163 and q149 return identical rows —
+    adaptive == fixed by hash equality, the strongest form of the
+    survivor-count gate — while the SAME code
     deepens to (16, 8, 4) at sf0.1 and (16, 8, 8, 8, 7) at the 100x
     fixture. Survivor policy (keep-the-outlier per component, q143's
     contract) is untouched; what the finer grid trades is pair recall,
@@ -228,29 +232,19 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def _tree_probe_scored(
-    spark,
-    sf_dir,
-    target_cell: int,
-    p0: int = _NPROBE,
-    p_sub: int = _TREE_PSUB,
-    query_pred=None,
-):
-    """Instrumentable core of the tree probe (shared by q164/q165 and
-    tools/ann_adaptive_probe.py): build a corpus-adaptive tree index
-    (trained coarse codebook, sampled sub-codebooks per level from
-    adaptive_grid(count, target_cell)), assign the whole corpus to
-    leaf blocks, then score NEW vectors (vec_id % 5 == 0; optionally
-    narrowed further by ``query_pred`` so a 100x probe's exact
-    ground-truth side stays affordable) against history inside probed
-    leaves only: top-``p0`` coarse cells, then the top-``p_sub``
-    sub-cells per probed branch at each deeper level —
-    p0 x p_sub^(depth-1) leaves per new vector.
+def _tree_probe_scored(spark, sf_dir, target_cell: int):
+    """Core of the tree probe (shared by q164/q165): build a
+    corpus-adaptive tree index (trained coarse codebook, sampled
+    sub-codebooks per level from adaptive_grid(count, target_cell)),
+    assign the whole corpus to leaf blocks, then score NEW vectors
+    (vec_id % 5 == 0) against history inside probed leaves only:
+    top-_NPROBE coarse cells, then the top-_TREE_PSUB sub-cells per
+    probed branch at each deeper level — _NPROBE x
+    _TREE_PSUB^(depth-1) leaves per new vector.
 
-    Returns (scored, ks): the PRE-threshold candidate set
-    (new_vec_id, hist_vec_id, label, cos_sim) — the probe tool counts
-    it to measure candidate volume across (grid, p0, p_sub) dials —
-    plus the per-level codebook sizes.
+    Returns the PRE-threshold candidate set (new_vec_id, hist_vec_id,
+    label, cos_sim). The dial measurements over (grid, p0, p_sub)
+    were taken with tools/ann_adaptive_probe.py (at commit 669f295).
 
     Scale shape: leaf size is ~target_cell by construction, so
     candidates per new vector are probed_leaves x target_cell — they
@@ -304,10 +298,7 @@ def _tree_probe_scored(
     # Probe level 0: rank ALL coarse cells per new vector (broadcast
     # codebook, the q150 discipline), keep the top nprobe; carry the
     # query vector + norm down the tree for the deeper rankings.
-    new_q = ev.filter(F.col("vec_id") % 5 == 0)
-    if query_pred is not None:
-        new_q = new_q.filter(query_pred)
-    new_q = new_q.select(
+    new_q = ev.filter(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("p_vec"),
         F.col("embedding").alias("qv"),
         V.norm(F.col("embedding")).alias("qnrm"),
@@ -323,11 +314,11 @@ def _tree_probe_scored(
             F.round(V.cosine(F.col("qv"), F.col("cv")), 4).alias("c_cos"),
         )
         .withColumn("rn", F.row_number().over(w_p0))
-        .filter(F.col("rn") <= p0)
+        .filter(F.col("rn") <= _NPROBE)
         .drop("c_cos", "rn")
     )
     # Deeper levels: within each probed branch, rank that block's
-    # sub-codebook and keep the top p_sub sub-cells. Broadcast the
+    # sub-codebook and keep the top _TREE_PSUB sub-cells. Broadcast the
     # level codebook only while it is broadcast-sized (same bound as
     # the assignment side); past that the join keys on the block
     # prefix and shuffle-joins with identical results.
@@ -343,7 +334,7 @@ def _tree_probe_scored(
             probe.join(F.broadcast(sub) if can_bcast else sub, list(prefix_cols))
             .withColumn("__scos", scos)
             .withColumn("rn", F.row_number().over(w_lvl))
-            .filter(F.col("rn") <= p_sub)
+            .filter(F.col("rn") <= _TREE_PSUB)
             .drop("__sv", "__snrm", "__scos", "rn")
         )
     probe = probe.select(
@@ -376,7 +367,7 @@ def _tree_probe_scored(
             cos.alias("cos_sim"),
         )
     )
-    return scored, ks
+    return scored
 
 
 def best_match_per_new(scored):
@@ -399,29 +390,22 @@ def best_match_per_new(scored):
 
 
 def _tree_probe_dedup(spark, sf_dir, target_cell: int):
-    """q164/q165's composition of the instrumentable core: probe with
-    the registered dials, keep matches above the near-dup threshold,
-    best match per new vector — the q132/q150 output contract."""
-    scored, _ks = _tree_probe_scored(spark, sf_dir, target_cell)
-    return best_match_per_new(scored)
+    """q164/q165's composition of the probe core: keep matches above
+    the near-dup threshold, best match per new vector — the q132/q150
+    output contract."""
+    return best_match_per_new(_tree_probe_scored(spark, sf_dir, target_cell))
 
 
-def _q164_oracle_at(sf_dir: str) -> str:
-    from .gridsql import tree_probe_oracle_at
-
-    return tree_probe_oracle_at(sf_dir, _IVF_TARGET_CELL)
-
-
-@query("q164_incremental_vector_dedup_adaptive", oracle=_Q150_ORACLE, tags=("vector", "dedup", "EXT"), oracle_fn=_q164_oracle_at)
+@query("q164_incremental_vector_dedup_adaptive", oracle=partial(tree_probe_oracle, target_cell=_IVF_TARGET_CELL), tags=("vector", "dedup", "EXT"))
 def q164_incremental_vector_dedup_adaptive(spark, sf_dir):
     """Incremental-ingest vector dedup probing a CORPUS-ADAPTIVE tree
     index — the registered form of the cells-∝-corpus experiment
-    (tools/ivf_cells_experiment.py): the index holds cell size at
-    ~{_IVF_TARGET_CELL} vectors by deepening with the corpus instead
-    of letting fixed cells grow. At the sf0.01 fixture the rule gives
-    the flat trained k=16 codebook and the probe is exactly q150's
-    top-{_NPROBE} multi-probe, so the oracle is q150's unrolled SQL
-    verbatim (hash-equality with the fixture-pinned form); at sf0.1
+    (tools/ivf_cells_experiment.py at commit 669f295): the index holds
+    cell size at ~{_IVF_TARGET_CELL} vectors by deepening with the
+    corpus instead of letting fixed cells grow. At the sf0.01 fixture
+    the rule gives the flat trained k=16 codebook and the probe is
+    exactly q150's top-{_NPROBE} multi-probe, so q164 returns q150's
+    rows there (hash-equality with the fixture-pinned form); at sf0.1
     the tree is (16, 4), at the 100x fixture (16, 8, 8, 7).
 
     Why a TREE and not flat k ∝ N: flat assignment/training cost is
@@ -438,93 +422,20 @@ def q164_incremental_vector_dedup_adaptive(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # q165: the descent machinery bit-verified — a target cell small enough
-# that the tree is 2-level AT FIXTURE SCALE, with its own unrolled
-# oracle (coarse k-means CTEs + sampled sub-codebook + 2-level probe).
+# that the tree is 2-level AT FIXTURE SCALE, so the driver's oracle
+# (gridsql.tree_probe_oracle: coarse k-means CTEs + sampled
+# sub-codebook + 2-level probe) checks the descent.
 # --------------------------------------------------------------------------
 
-_TREE_SUB_K = 4  # adaptive_grid(500, 8, 16, 8) == [16, 4]
 
-_Q165_ORACLE = f"""
-WITH {_km_ctes(_KM_K, _KM_ITERS)},
-fin AS (
-  SELECT a.vec_id, a.c_id, e.v
-  FROM assign{_KM_ITERS} a JOIN e ON e.vec_id = a.vec_id
-),
-sub AS (
-  SELECT c_id, vec_id AS s_id, v AS sv FROM (
-    SELECT c_id, vec_id, v,
-           ROW_NUMBER() OVER (PARTITION BY c_id
-                              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-    FROM fin
-  ) WHERE rn <= {_TREE_SUB_K}
-),
-sa AS (
-  SELECT vec_id, c_id, s_id FROM (
-    SELECT f.vec_id, f.c_id, s.s_id,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(f.v, s.sv), 4) DESC,
-                                       s.s_id) AS rn
-    FROM fin f JOIN sub s ON s.c_id = f.c_id
-  ) WHERE rn = 1
-),
-el AS (
-  SELECT e0.vec_id, e0.label, e.v, sa.c_id, sa.s_id
-  FROM embeddings e0
-  JOIN e ON e.vec_id = e0.vec_id
-  JOIN sa ON sa.vec_id = e0.vec_id
-),
-probe0 AS (
-  SELECT vec_id, c_id FROM (
-    SELECT e.vec_id, c.c_id,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 4) DESC,
-                                       c.c_id) AS rn
-    FROM e CROSS JOIN cent{_KM_ITERS} c
-    WHERE e.vec_id % 5 = 0
-  ) WHERE rn <= {_NPROBE}
-),
-probe1 AS (
-  SELECT p_vec, p_cell, s_id AS p_sub FROM (
-    SELECT p.vec_id AS p_vec, p.c_id AS p_cell, s.s_id,
-           ROW_NUMBER() OVER (PARTITION BY p.vec_id, p.c_id
-                              ORDER BY ROUND(list_cosine_similarity(q.v, s.sv), 4) DESC,
-                                       s.s_id) AS rn
-    FROM probe0 p
-    JOIN e q ON q.vec_id = p.vec_id
-    JOIN sub s ON s.c_id = p.c_id
-  ) WHERE rn <= {_TREE_PSUB}
-),
-scored AS (
-  SELECT n.vec_id AS new_vec_id, h.vec_id AS hist_vec_id,
-         CAST(n.label AS BIGINT) AS label,
-         ROUND(list_cosine_similarity(n.v, h.v), 4) AS cos_sim
-  FROM probe1 p
-  JOIN el h ON h.c_id = p.p_cell AND h.s_id = p.p_sub AND h.vec_id % 5 <> 0
-  JOIN el n ON n.vec_id = p.p_vec AND n.label = h.label
-)
-SELECT new_vec_id, hist_vec_id AS best_hist_vec_id, label, cos_sim
-FROM (SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY new_vec_id ORDER BY cos_sim DESC, hist_vec_id) AS rn
-      FROM scored
-      WHERE cos_sim >= {_NEAR_DUP_THRESHOLD})
-WHERE rn = 1
-"""
-
-
-def _q165_oracle_at(sf_dir: str) -> str:
-    from .gridsql import tree_probe_oracle_at
-
-    return tree_probe_oracle_at(sf_dir, _TREE_TARGET_CELL)
-
-
-@query("q165_vector_dedup_tree_probe", oracle=_Q165_ORACLE, tags=("vector", "dedup", "EXT"), oracle_fn=_q165_oracle_at)
+@query("q165_vector_dedup_tree_probe", oracle=partial(tree_probe_oracle, target_cell=_TREE_TARGET_CELL), tags=("vector", "dedup", "EXT"))
 def q165_vector_dedup_tree_probe(spark, sf_dir):
     """q164's tree machinery FORCED multi-level at fixture scale:
     target cell {_TREE_TARGET_CELL} makes adaptive_grid yield a
-    (16, {_TREE_SUB_K}) tree on the 500-vector fixture, so the
-    sub-codebook sampling, per-branch descent (top-{_NPROBE} coarse x
+    (16, 4) tree on the 500-vector fixture, so the sub-codebook
+    sampling, per-branch descent (top-{_NPROBE} coarse x
     top-{_TREE_PSUB} sub-cells = 8 probed leaves of 64) and the
-    leaf-keyed candidate join all run — and the unrolled DuckDB twin
+    leaf-keyed candidate join all run — and the DuckDB oracle
     reproduces every ranking and match bit for bit. Without this, the
     depth>1 code path of the adaptive family would only ever execute
     in scale probes, beyond the driver's oracle. Same output contract
@@ -537,31 +448,8 @@ def q165_vector_dedup_tree_probe(spark, sf_dir):
 # against the EXACT incremental dedup (q132) on the same data.
 # --------------------------------------------------------------------------
 
-_Q166_ORACLE = f"""
-WITH exact AS (SELECT * FROM ({_Q132_ORACLE})),
-ap AS (SELECT * FROM ({_Q150_ORACLE})),
-common AS (
-  SELECT e.new_vec_id,
-         CASE WHEN e.best_hist_vec_id = a.best_hist_vec_id THEN 1 ELSE 0 END AS same_best
-  FROM exact e JOIN ap a USING (new_vec_id)
-)
-SELECT
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM exact) AS n_exact,
-  (SELECT CAST(COUNT(*) AS BIGINT) FROM ap) AS n_probe,
-  CAST(COUNT(*) AS BIGINT) AS n_common,
-  CAST(COALESCE(SUM(same_best), 0) AS BIGINT) AS n_same_best,
-  ROUND(COUNT(*) / (SELECT COUNT(*) FROM exact), 4) AS recovery
-FROM common
-"""
 
-
-def _q166_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q166_oracle_at
-
-    return q166_oracle_at(sf_dir)
-
-
-@query("q166_vector_dedup_recall_gate", oracle=_Q166_ORACLE, tags=("vector", "dedup", "EXT"), oracle_fn=_q166_oracle_at)
+@query("q166_vector_dedup_recall_gate", oracle=q166_oracle, tags=("vector", "dedup", "EXT"))
 def q166_vector_dedup_recall_gate(spark, sf_dir):
     """The q145-pattern quality gate for the adaptive probe: run the
     EXACT incremental dedup (q132, full label-block scan) and the
@@ -620,30 +508,7 @@ def q166_vector_dedup_recall_gate(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def _grid_stats_sql(variant: str, inner: str) -> str:
-    return f"""SELECT '{variant}' AS variant,
-       CAST(COUNT(*) AS BIGINT) AS n_groups,
-       CAST(SUM(n_members) AS BIGINT) AS n_dup_docs,
-       CAST(MAX(n_members) AS BIGINT) AS max_group
-FROM ({inner})"""
-
-
-_Q167_ORACLE = (
-    _grid_stats_sql("adaptive", _Q149_ORACLE)
-    + "\nUNION ALL\n"
-    + _grid_stats_sql("exact_1level", _Q143_ORACLE)
-    + "\nUNION ALL\n"
-    + _grid_stats_sql("fixed_2level", _Q149_ORACLE)
-)
-
-
-def _q167_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q167_oracle_at
-
-    return q167_oracle_at(sf_dir)
-
-
-@query("q167_semantic_dedup_grid_gate", oracle=_Q167_ORACLE, tags=("vector", "dedup", "EXT"), oracle_fn=_q167_oracle_at)
+@query("q167_semantic_dedup_grid_gate", oracle=q167_oracle, tags=("vector", "dedup", "EXT"))
 def q167_semantic_dedup_grid_gate(spark, sf_dir):
     """Survivor-count gate across the three SemDeDup blocking tiers on
     the SAME corpus: exact single-level (q143), fixed 2-level (q149),
@@ -654,7 +519,8 @@ def q167_semantic_dedup_grid_gate(spark, sf_dir):
     190 dup docs vs the exact 68 / 299 (big outlier clusters split),
     and the adaptive row is IDENTICAL to fixed_2level there because
     the adaptive rule reproduces the (16, 8) grid at fixture scale —
-    the oracle encodes exactly that equality. Beyond fixture scale the
+    the oracle's adaptive row, generated at the fixture's row count,
+    equals its fixed_2level row there. Beyond fixture scale the
     adaptive row diverges (deeper grid, measured in SCALE.md); the
     gate is how a corpus build decides whether the recall trade at its
     scale is acceptable before pruning."""
@@ -695,49 +561,8 @@ def q167_semantic_dedup_grid_gate(spark, sf_dir):
 # the observable behind both the adaptive-grid law and the hub cap.
 # --------------------------------------------------------------------------
 
-_Q169_ORACLE = f"""
-WITH {_km_ctes(_KM_K, _KM_ITERS)},
-fin AS (
-  SELECT a.vec_id, a.c_id, e.v
-  FROM assign{_KM_ITERS} a JOIN e ON e.vec_id = a.vec_id
-),
-sub AS (
-  SELECT c_id, vec_id AS s_id, v AS sv FROM (
-    SELECT c_id, vec_id, v,
-           ROW_NUMBER() OVER (PARTITION BY c_id
-                              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-    FROM fin
-  ) WHERE rn <= {_SUB_K}
-),
-sa AS (
-  SELECT vec_id, c_id, s_id FROM (
-    SELECT f.vec_id, f.c_id, s.s_id,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(f.v, s.sv), 4) DESC,
-                                       s.s_id) AS rn
-    FROM fin f JOIN sub s ON s.c_id = f.c_id
-  ) WHERE rn = 1
-),
-l0 AS (SELECT c_id, COUNT(*) AS c FROM fin GROUP BY c_id),
-l1 AS (SELECT c_id, s_id, COUNT(*) AS c FROM sa GROUP BY c_id, s_id)
-SELECT CAST(0 AS BIGINT) AS level, CAST(COUNT(*) AS BIGINT) AS n_blocks,
-       CAST(MAX(c) AS BIGINT) AS max_block, CAST(SUM(c) AS BIGINT) AS n_rows,
-       ROUND(SUM(c) / COUNT(*), 4) AS avg_block
-FROM l0
-UNION ALL
-SELECT CAST(1 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(MAX(c) AS BIGINT),
-       CAST(SUM(c) AS BIGINT), ROUND(SUM(c) / COUNT(*), 4)
-FROM l1
-"""
 
-
-def _q169_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q169_oracle_at
-
-    return q169_oracle_at(sf_dir)
-
-
-@query("q169_adaptive_grid_report", oracle=_Q169_ORACLE, tags=("vector", "dedup", "EXT"), oracle_fn=_q169_oracle_at)
+@query("q169_adaptive_grid_report", oracle=q169_oracle, tags=("vector", "dedup", "EXT"))
 def q169_adaptive_grid_report(spark, sf_dir):
     """The adaptive grid's HEALTH REPORT: per hierarchy level, block
     count, largest block, row total, and mean block size — the index
@@ -747,9 +572,10 @@ def q169_adaptive_grid_report(spark, sf_dir):
     but max 2,195 (a clone-dense block geometry cannot split — the
     row that justifies the hub cap, and the alarm a production corpus
     build pages on when a crawl dumps near-identical content). The
-    oracle unrolls the same k-means + sub-codebook CTEs as q149/q163
-    and aggregates block sizes per level; at fixture scale the grid is
-    (16, 8), so two report rows, hash-exact."""
+    oracle (gridsql.q169_oracle) builds the same k-means +
+    sub-codebook CTEs as q163's and aggregates block sizes per level;
+    at fixture scale the grid is (16, 8), so two report rows,
+    hash-exact."""
     _fin, cur, block_cols = _semantic_tree(spark, sf_dir)
     # The per-level stats below reference the fully blocked corpus once
     # PER LEVEL (depth ∝ log N plan copies of the level chain) —

@@ -12,12 +12,12 @@ adaptive_grid(N, 32), so block size holds ~32 at any corpus size and
 pair work stays linear — the fixed 16-cell form measured quadratic:
 45 s at 10x) with candidates within-block only — the IVF-nprobe=1
 regime — and q213 pins the recall price of that blocking the same way
-q166 pins the dedup grid's. At the sf0.01 oracle fixture the adaptive
-rule reproduces the single-level 16-cell grid, so every STATIC oracle
-here is the _km_ctes fixed-grid SQL twin (the q163/q149 equality
-pattern); since round 12 each query also carries a SCALE-AWARE twin
-(queries/gridsql.py, QuerySpec.oracle_fn) that regenerates the SQL
-for the corpus at hand, hash-verified at sf0.1.
+q166 pins the dedup grid's. Every grid-family oracle here is ONE
+generator over the corpus row count (queries/gridsql.py): the
+driver-contract string is that generator at the sf0.01 fixture, where
+the adaptive rule yields the single-level 16-cell grid, and
+tools/oracle_check.py regenerates it for the corpus at hand
+(QuerySpec.oracle_fn), hash-verified at sf0.1.
 
 Reference scope: beyond-reference training-data families (SURVEY
 §2.11); the reference job has no vector surface.
@@ -30,8 +30,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
+from .gridsql import knn_home_probe_ctes, mp_sym_ctes, q212_oracle
 from .registry import query
-from .vector3 import _KM_ITERS, _KM_K, _init_centroids, _km_ctes
+from .vector3 import _KM_ITERS, _KM_K, _init_centroids
 
 _KNN_K = 3
 # Fixed-size exact-arm query sample: md5-ordered LIMIT, so the recall
@@ -44,34 +45,12 @@ _KNN_SAMPLE = 64
 # the vectors sharing its k-means cell.
 # --------------------------------------------------------------------------
 
-_Q212_ORACLE = f"""
-WITH {_km_ctes(_KM_K, _KM_ITERS)},
-fin AS (
-  SELECT a.vec_id, a.c_id, e.v
-  FROM assign{_KM_ITERS} a JOIN e ON e.vec_id = a.vec_id
-),
-p AS (
-  SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-         ROUND(list_cosine_similarity(a.v, b.v), 4) AS cs
-  FROM fin a JOIN fin b ON a.c_id = b.c_id AND a.vec_id <> b.vec_id
-),
-r AS (
-  SELECT vec_id, nbr_id, cs,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cs DESC, nbr_id) AS rnk
-  FROM p
-)
-SELECT vec_id, nbr_id, CAST(rnk AS BIGINT) AS rnk, cs
-FROM r WHERE rnk <= {_KNN_K}
-"""
-
-
 # Neighbor blocks target ~32 members: big enough that top-3 recall is
 # meaningful, small enough that the within-block pair term is N*32.
 # adaptive_grid(500, 32, coarse_k=16) == [16] — at the sf0.01 oracle
-# fixture the adaptive rule reproduces EXACTLY the single-level
-# 16-cell grid the SQL twin encodes (the q163/q149 equality pattern);
-# beyond fixture scale the tree deepens and the implementation
-# diverges from the fixture-pinned oracle by design.
+# fixture the adaptive rule yields the single-level 16-cell grid;
+# beyond fixture scale the tree deepens, and the oracle generators
+# (queries/gridsql.py) deepen with it.
 _KNN_TARGET_BLOCK = 32
 
 
@@ -230,10 +209,9 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
     is nprobe² and the probe frame is unioned with the home block
     (probe ⊇ home — round-11 ADVICE), so candidate work stays
     N × (nprobe²+1) × block, LINEAR. A single-level tree (the sf0.01
-    fixture) keeps the plain top-``nprobe`` coarse probe, so the
-    fixture-pinned oracles are untouched; the depth-2 rule has an
-    exact scale-aware SQL twin (gridsql.probe_ctes, hash-verified at
-    sf0.1).
+    fixture) keeps the plain top-``nprobe`` coarse probe. Every depth
+    has an exact SQL counterpart in the oracle generators
+    (gridsql.probe_ctes, hash-verified at sf0.1).
 
     Both sides read the PERSISTED index (_knn_index): home is the
     parquet artifact verbatim; the probe side rescores against the
@@ -380,13 +358,7 @@ def _blocked_knn(spark, sf_dir, nprobe: int = 1):
     )
 
 
-def _q212_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q212_oracle_at
-
-    return q212_oracle_at(sf_dir)
-
-
-@query("q212_knn_graph_blocked", oracle=_Q212_ORACLE, tags=("vector", "similarity", "EXT"), oracle_fn=_q212_oracle_at)
+@query("q212_knn_graph_blocked", oracle=q212_oracle, tags=("vector", "similarity", "EXT"))
 def q212_knn_graph_blocked(spark, sf_dir):
     """Blocked k-NN graph: assign every vector to its adaptive-grid
     block (depth from adaptive_grid(N, 32) — coarse Lloyd codebook on
@@ -395,9 +367,9 @@ def q212_knn_graph_blocked(spark, sf_dir):
     vector's top-3 by 4dp-rounded cosine (ties to the lower neighbor
     id). At the sf0.01 oracle fixture the adaptive rule yields exactly
     the single-level 16-cell grid (and the training sample IS the
-    corpus), so the _km_ctes SQL twin hash-matches the whole pipeline
-    — the q163/q149 equality pattern; beyond fixture scale the tree
-    deepens and block size holds ~32.
+    corpus); beyond fixture scale the tree deepens and block size
+    holds ~32. The oracle (gridsql.q212_oracle) follows the same tree
+    at every scale.
 
     Scale shape: training is sample-bounded (corpus never shuffles for
     it); the pair join shuffles on the block key with per-block
@@ -418,9 +390,9 @@ def q212_knn_graph_blocked(spark, sf_dir):
 _KNN_RECALL_MIN = 0.3  # below the fixture-measured 0.35-0.59 band; see docstring
 
 
-def _q213_sql(blocked_sql: str) -> str:
+def _q213_sql(n: int) -> str:
     return f"""
-WITH blocked AS ({blocked_sql}),
+WITH blocked AS ({q212_oracle(n)}),
 q AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_KNN_SAMPLE}
@@ -451,17 +423,7 @@ FROM n, hits h
 """
 
 
-def _q213_oracle() -> str:
-    return _q213_sql(_Q212_ORACLE)
-
-
-def _q213_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q212_oracle_at
-
-    return _q213_sql(q212_oracle_at(sf_dir))
-
-
-@query("q213_knn_recall_gate", oracle=_q213_oracle(), tags=("vector", "similarity", "gate", "EXT"), oracle_fn=_q213_oracle_at)
+@query("q213_knn_recall_gate", oracle=_q213_sql, tags=("vector", "similarity", "gate", "EXT"))
 def q213_knn_recall_gate(spark, sf_dir):
     """Recall of the blocked k-NN graph against exact brute force on a
     deterministic md5(vec_id) < '08' query sample (~1/32 of vectors —
@@ -517,15 +479,16 @@ def q213_knn_recall_gate(spark, sf_dir):
 # q214: the multi-probe dial — nprobe=2 k-NN graph recall on the same
 # sample, with the candidate cost alongside. Together with q213 this
 # registers the (recall, cost) curve's first two points for the GRAPH
-# case, the way tools/ann_adaptive_probe.py tabulates it for retrieval.
+# case, the way tools/ann_adaptive_probe.py (at commit 669f295)
+# tabulated it for retrieval.
 # --------------------------------------------------------------------------
 
 _KNN_NPROBE = 3
 # Operating point chosen from the measured recall/cost dial
-# (tools/knn_probe_dial.py, round 11) AFTER the probe budget was made
-# depth-scaled (nprobe parent cells x best nprobe² deepest blocks —
-# round-10's weak item was a deepest-only probe that hit a binary last
-# level at sf0.1 and decayed to 0.365):
+# (tools/knn_probe_dial.py at commit 669f295, round 11) AFTER the
+# probe budget was made depth-scaled (nprobe parent cells x best
+# nprobe² deepest blocks — round-10's weak item was a deepest-only
+# probe that hit a binary last level at sf0.1 and decayed to 0.365):
 #   nprobe    1      2      3      4
 #   sf0.01  0.396  0.505  0.583  0.620   (cand 15k/31k/47k/62k)
 #   sf0.1   0.349  0.432  0.542  0.651   (cand 110k/331k/643k/998k)
@@ -540,7 +503,7 @@ _KNN_NPROBE = 3
 # unreachable — 10x recall moved 0.417 → 0.4427 at the SAME candidate
 # budget); (3) the floor moves 0.4 → 0.38 per round-11 ADVICE for
 # real margin below the weakest measured scale. The 10x dial is FLAT
-# (0.391/0.427/0.443/0.453 at nprobe 1-4, tools/knn_probe_dial.py):
+# (0.391/0.427/0.443/0.453 at nprobe 1-4, same tool):
 # the replicated-rotated 10x corpus is near-orthogonal noise with no
 # cluster structure for an IVF tree to exploit, so recall saturates
 # and budget cannot buy margin there — 0.38 is the honest floor,
@@ -549,72 +512,8 @@ _KNN_NPROBE = 3
 _KNN_MP_RECALL_MIN = 0.38
 
 
-def _q214_oracle() -> str:
-    return f"""
-WITH {_km_ctes(_KM_K, _KM_ITERS)},
-probe AS (
-  SELECT vec_id, c_id FROM (
-    SELECT e.vec_id, c.c_id,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 4) DESC,
-                                       c.c_id) AS rn
-    FROM e CROSS JOIN cent{_KM_ITERS} c
-  ) WHERE rn <= {_KNN_NPROBE}
-),
-home AS (SELECT vec_id, c_id FROM assign{_KM_ITERS}),
-cand AS (
-  SELECT p.vec_id AS vec_id, h.vec_id AS nbr_id
-  FROM probe p JOIN home h ON h.c_id = p.c_id AND h.vec_id <> p.vec_id
-),
-scored AS (
-  SELECT c.vec_id, c.nbr_id,
-         ROUND(list_cosine_similarity(a.v, b.v), 4) AS cs
-  FROM cand c JOIN e a ON a.vec_id = c.vec_id JOIN e b ON b.vec_id = c.nbr_id
-),
-g AS (
-  SELECT vec_id, nbr_id FROM (
-    SELECT vec_id, nbr_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cs DESC, nbr_id) AS rnk
-    FROM scored
-  ) WHERE rnk <= {_KNN_K}
-),
-q AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_KNN_SAMPLE}
-),
-corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-exact AS (
-  SELECT vec_id, nbr_id FROM (
-    SELECT q.vec_id, c.vec_id AS nbr_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(q.v, c.v), 4) DESC,
-                                       c.vec_id) AS rnk
-    FROM q JOIN corpus c ON c.vec_id <> q.vec_id
-  ) WHERE rnk <= {_KNN_K}
-),
-hits AS (
-  SELECT COUNT(*) AS n_hits
-  FROM exact e2 JOIN g ON g.vec_id = e2.vec_id AND g.nbr_id = e2.nbr_id
-),
-nc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM cand),
-n AS (SELECT COUNT(DISTINCT vec_id) AS n_queries FROM q)
-SELECT CAST(n.n_queries AS BIGINT) AS n_queries,
-       CAST({_KNN_K} AS BIGINT) AS k,
-       CAST({_KNN_NPROBE} AS BIGINT) AS nprobe,
-       nc.n_candidates,
-       CAST(h.n_hits AS BIGINT) AS n_hits,
-       CAST(h.n_hits AS DOUBLE) / (n.n_queries * {_KNN_K}) AS recall,
-       CASE WHEN CAST(h.n_hits AS DOUBLE) / (n.n_queries * {_KNN_K})
-                 >= {_KNN_MP_RECALL_MIN}
-            THEN 'ok' ELSE 'FAIL recall' END AS recall_gate
-FROM n, nc, hits h
-"""
-
-
-def _q214_oracle_at(sf_dir: str) -> str:
-    from .gridsql import knn_home_probe_ctes
-
-    ctes, cols, home = knn_home_probe_ctes(sf_dir, _KNN_NPROBE)
+def _q214_sql(n: int) -> str:
+    ctes, cols, home = knn_home_probe_ctes(n, _KNN_NPROBE)
     on = " AND ".join(f"p.{c} = h.{c}" for c in cols)
     return f"""
 WITH {ctes},
@@ -666,7 +565,7 @@ FROM n, nc, hits h
 """
 
 
-@query("q214_knn_multiprobe_gate", oracle=_q214_oracle(), tags=("vector", "similarity", "gate", "EXT"), oracle_fn=_q214_oracle_at)
+@query("q214_knn_multiprobe_gate", oracle=_q214_sql, tags=("vector", "similarity", "gate", "EXT"))
 def q214_knn_multiprobe_gate(spark, sf_dir):
     """The nprobe dial applied to the k-NN graph: the query side probes
     its 2 nearest blocks AT THE DEEPEST adaptive-grid level, the
@@ -674,12 +573,11 @@ def q214_knn_multiprobe_gate(spark, sf_dir):
     AND candidate count against the same exact sample as q213 — the
     two registered points of the graph's (recall, cost) curve
     (fixture: ~0.40 recall at nprobe=1 vs ~0.51 at nprobe=2,
-    candidates ~2x). At the sf0.01 fixture the adaptive tree is the
-    single 16-cell level, so the SQL twin (top-2 of cent{iters},
-    corpus on assign{iters}) hash-matches exactly. Each candidate pair
-    appears exactly once (a neighbor's home block can match at most
-    one of the query's distinct probes), so no dedup shuffle is
-    needed. Scale: N x nprobe x block candidates — the dial's LINEAR
+    candidates ~2x). The oracle probes the same depth-scaled block set
+    in SQL (gridsql.probe_ctes) and hash-matches at every scale. Each
+    candidate pair appears exactly once (a neighbor's home block can
+    match at most one of the query's distinct probes), so no dedup
+    shuffle is needed. Scale: N x nprobe x block candidates — the dial's LINEAR
     cost is visible in n_candidates rather than hidden (the fixed-grid
     form measured 106 s at 10x; this one rides the q212 tree)."""
     cand = _knn_candidates(spark, sf_dir, _KNN_NPROBE)
@@ -747,9 +645,9 @@ def q214_knn_multiprobe_gate(spark, sf_dir):
 # before trusting weak labels).
 # --------------------------------------------------------------------------
 
-def _q215_sql(g_sql: str) -> str:
+def _q215_sql(n: int) -> str:
     return f"""
-WITH g AS ({g_sql}),
+WITH g AS ({q212_oracle(n)}),
 lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
 votes AS (
   SELECT g.vec_id, nl.label AS nbr_label, COUNT(*) AS n_votes
@@ -775,16 +673,7 @@ GROUP BY l.label
 """
 
 
-_Q215_ORACLE = _q215_sql(_Q212_ORACLE)
-
-
-def _q215_oracle_at(sf_dir: str) -> str:
-    from .gridsql import q212_oracle_at
-
-    return _q215_sql(q212_oracle_at(sf_dir))
-
-
-@query("q215_label_propagation_audit", oracle=_Q215_ORACLE, tags=("vector", "similarity", "curation", "EXT"), oracle_fn=_q215_oracle_at)
+@query("q215_label_propagation_audit", oracle=_q215_sql, tags=("vector", "similarity", "curation", "EXT"))
 def q215_label_propagation_audit(spark, sf_dir):
     """One round of label propagation over the blocked k-NN graph
     (q212), scored against the stored labels per label class: each
@@ -1024,7 +913,8 @@ def q221_hard_negatives(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 # Probe budget for eps-edge generation, chosen from the measured
-# recall dial at eps 0.4 (round 12, tools/dbscan_mp_dial.py):
+# recall dial at eps 0.4 (round 12, tools/dbscan_mp_dial.py at
+# commit 669f295):
 #   nprobe            1      2      3      4      5      6
 #   edge recall f/s01 .37/.13 .71/.44 .81/.66 .90/.79 —/.86 —/.90
 #   pair recall f/s01 .22/.007 .60/.06 .82/.19 1.0/.30 —/.39 —/.56
@@ -1035,10 +925,10 @@ def q221_hard_negatives(spark, sf_dir):
 # combinatorially), so every missed edge costs COMPOUNDING pair
 # recall. The probe budget therefore scales with TREE DEPTH, the
 # q214 precedent (round-13 verdict item #3): a depth-1 tree (fixture
-# scales) keeps nprobe=4 — the fixture knee, pair recall 1.0, and the
-# pinned static oracles are untouched; a depth>=2 tree means the
-# corpus outgrew one grid level, its components chain across blocks,
-# and the deeper budget buys sf0.1 edge recall 0.79 -> 0.90 and pair
+# scales) keeps nprobe=4 — the fixture knee, pair recall 1.0; a
+# depth>=2 tree means the corpus outgrew one grid level, its
+# components chain across blocks, and the deeper budget buys sf0.1
+# edge recall 0.79 -> 0.90 and pair
 # recall 0.30 -> 0.56 for 2.25x candidate work (still linear:
 # N x nprobe² x block). q233 floors the measured band at each depth.
 _DBSCAN_NPROBE = 4
@@ -1056,47 +946,10 @@ def _dbscan_nprobe(ks) -> int:
     adaptive tree deepens (blocks shrink relative to the eps-ball, so
     true eps-edges increasingly cross blocks; the dial table above
     prices the trade). Shared by the Spark edge builder
-    (_mp_eps_edges, q228's refresh) and the scale-aware oracle twin
-    (gridsql.mp_sym_ctes_at) so both engines always probe the same
+    (_mp_eps_edges, q228's refresh) and the oracle generator
+    (gridsql.mp_sym_ctes) so both engines always probe the same
     budget for a given corpus."""
     return _DBSCAN_NPROBE if len(ks) == 1 else _DBSCAN_NPROBE_DEEP
-
-
-def _mp_sym_ctes(sym_name: str = "sym") -> str:
-    """Oracle CTEs producing sym(a, b) = the multi-probe eps-edge list
-    via the fixed-grid SQL twin: probe = each vector's top-
-    _DBSCAN_NPROBE cells of the trained codebook (q214's probe CTE),
-    home = the argmax assignment, candidates = probe x home, eps
-    filter, then symmetric closure with DISTINCT (directed (a, b) can
-    arise both from a probing b's home and — after the swap — from b
-    probing a's home). The adaptive rule reproduces this single-level
-    16-cell grid exactly at the sf0.01 fixture (q163/q149 pattern);
-    beyond fixture scale the tree deepens by design and q233's truth
-    gates carry the divergence."""
-    return f"""{_km_ctes(_KM_K, _KM_ITERS)},
-probe AS (
-  SELECT vec_id, c_id FROM (
-    SELECT e.vec_id, c.c_id,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 4) DESC,
-                                       c.c_id) AS rn
-    FROM e CROSS JOIN cent{_KM_ITERS} c
-  ) WHERE rn <= {_DBSCAN_NPROBE}
-),
-home AS (SELECT vec_id, c_id FROM assign{_KM_ITERS}),
-cd AS (
-  SELECT p.vec_id AS a, h.vec_id AS b
-  FROM probe p
-  JOIN home h ON h.c_id = p.c_id AND h.vec_id <> p.vec_id
-  JOIN e ea ON ea.vec_id = p.vec_id
-  JOIN e eb ON eb.vec_id = h.vec_id
-  WHERE ROUND(list_cosine_similarity(ea.v, eb.v), 4) >= {_DBSCAN_EPS_COS}
-),
-{sym_name} AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT a, b FROM cd UNION ALL SELECT b, a FROM cd
-  )
-)"""
 
 
 def _mp_eps_candidates(probe, home, block_cols):
@@ -1179,7 +1032,7 @@ def _mp_eps_edges(spark, sf_dir, nprobe: int | None = None):
     corpus epoch. Edge rows are (a, b) directed-once — the
     duplicate-sensitivity contract of dbscan_from_edges. The probe
     budget defaults to the depth-scaled rule (_dbscan_nprobe) so the
-    artifact name, the Spark plan and the oracle twin stay in
+    artifact name, the Spark plan and the oracle generator stay in
     lockstep per corpus."""
     import os
 
@@ -1198,26 +1051,16 @@ def _mp_eps_edges(spark, sf_dir, nprobe: int | None = None):
     return spark.read.parquet(path)
 
 
-def _q223_oracle() -> str:
+def _q223_sql(n: int) -> str:
     from ..operators.dbscan import dbscan_oracle_tail
 
     return f"""
-WITH RECURSIVE {_mp_sym_ctes()},
+WITH RECURSIVE {mp_sym_ctes(n)},
 {dbscan_oracle_tail(_DBSCAN_MIN_NBRS)}
 """
 
 
-def _q223_oracle_at(sf_dir: str) -> str:
-    from ..operators.dbscan import dbscan_oracle_tail
-    from .gridsql import mp_sym_ctes_at
-
-    return f"""
-WITH RECURSIVE {mp_sym_ctes_at(sf_dir)},
-{dbscan_oracle_tail(_DBSCAN_MIN_NBRS)}
-"""
-
-
-@query("q223_dbscan_grid", oracle=_q223_oracle(), tags=("vector", "graph", "EXT"), oracle_fn=_q223_oracle_at)
+@query("q223_dbscan_grid", oracle=_q223_sql, tags=("vector", "graph", "EXT"))
 def q223_dbscan_grid(spark, sf_dir):
     """DBSCAN with multi-probe eps-edge generation: candidates =
     top-{_DBSCAN_NPROBE} probed blocks (query side) x home blocks
@@ -1225,10 +1068,11 @@ def q223_dbscan_grid(spark, sf_dir):
     {_DBSCAN_EPS_COS}, then the shared degree/CC/border pipeline
     (dbscan_from_edges — the eps-graph is no longer block-confined,
     so components are found by distributed star contraction over the
-    TINY eps-edge list, not per-block union-find). The oracle encodes
-    the fixed {_KM_K}-cell single-level grid, which adaptive_grid +
-    the plain top-nprobe coarse probe reproduce exactly at the sf0.01
-    fixture; beyond fixture scale the tree deepens by design and the
+    TINY eps-edge list, not per-block union-find). The oracle
+    (gridsql.mp_sym_ctes + the shared DBSCAN tail) builds the same
+    probe set for the corpus's own tree; at the sf0.01 fixture that is
+    the {_KM_K}-cell single-level grid with a plain top-nprobe coarse
+    probe. Beyond fixture scale the tree deepens by design and the
     truth gates (q233) measure what the probe set recovers: ~0.9 of
     true eps-edges, 1.000/0.304 of true co-membership pairs at
     fixture/sf0.1, precision exactly 1 (see _DBSCAN_NPROBE dial).
@@ -1261,7 +1105,7 @@ def q223_dbscan_grid(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def _q224_sql(sym_ctes: str) -> str:
+def _q224_sql(n: int) -> str:
     from ..operators.graph import cc_oracle_ctes
     from .planning import _LEAK_TRAIN_HI, _LEAK_VAL_HI
 
@@ -1269,7 +1113,7 @@ def _q224_sql(sym_ctes: str) -> str:
             WHEN SUBSTRING(md5(CAST(cluster_id AS VARCHAR)), 1, 2) < '{_LEAK_VAL_HI}' THEN 'val'
             ELSE 'test' END"""
     return f"""
-WITH RECURSIVE {sym_ctes},
+WITH RECURSIVE {mp_sym_ctes(n)},
 {cc_oracle_ctes("sym", "cl", "vec_id")},
 assigned AS (
   SELECT e2.vec_id, COALESCE(cl.cluster_id, e2.vec_id) AS cluster_id
@@ -1294,27 +1138,16 @@ GROUP BY sp.split
 """
 
 
-def _q224_oracle() -> str:
-    return _q224_sql(_mp_sym_ctes())
-
-
-def _q224_oracle_at(sf_dir: str) -> str:
-    from .gridsql import mp_sym_ctes_at
-
-    return _q224_sql(mp_sym_ctes_at(sf_dir))
-
-
-@query("q224_leakage_safe_split_grid", oracle=_q224_oracle(), tags=("vector", "gate", "EXT"), oracle_fn=_q224_oracle_at)
+@query("q224_leakage_safe_split_grid", oracle=_q224_sql, tags=("vector", "gate", "EXT"))
 def q224_leakage_safe_split_grid(spark, sf_dir):
     """q216's repair with linear edge generation: eps-edges from the
     multi-probe candidate join (the q223 edge set — ~0.9 of true
     eps-edges where the round-10/11 within-block form saw 13-37%), CC
     by star contraction over the tiny edge list, whole clusters hashed
     to one split, zero-leak re-proof over the same edge set in the
-    report. The oracle encodes the fixed {_KM_K}-cell single-level
-    grid + top-{_DBSCAN_NPROBE} probe, which the adaptive machinery
-    reproduces exactly at the fixture; beyond fixture scale the tree
-    deepens and q234 prices the split against TRUTH (at the
+    report. The oracle builds the same edge set in SQL
+    (gridsql.mp_sym_ctes) at every scale; beyond fixture scale the
+    tree deepens and q234 prices the split against TRUTH (at the
     re-anchored eps it is leak-free against truth too, not just
     against this blocked relation).
 
@@ -1415,7 +1248,7 @@ def _knn_block_topk(members_a, members_b, block_cols):
     )
 
 
-@query("q225_knn_graph_incremental", oracle=_Q212_ORACLE, tags=("vector", "pipeline", "EXT"), oracle_fn=_q212_oracle_at)
+@query("q225_knn_graph_incremental", oracle=q212_oracle, tags=("vector", "pipeline", "EXT"))
 def q225_knn_graph_incremental(spark, sf_dir):
     """The k-NN graph as maintained state: build the neighbor lists
     over history (vec_id % {_KNN_INC_MOD} != 0), persist them to
@@ -1465,7 +1298,7 @@ def q225_knn_graph_incremental(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query("q228_dbscan_grid_incremental", oracle=_q223_oracle(), tags=("vector", "graph", "pipeline", "EXT"), oracle_fn=_q223_oracle_at)
+@query("q228_dbscan_grid_incremental", oracle=_q223_sql, tags=("vector", "graph", "pipeline", "EXT"))
 def q228_dbscan_grid_incremental(spark, sf_dir):
     """Multi-probe DBSCAN as maintained state: persist the directed
     eps-edge list of the historical slice (vec_id % {_KNN_INC_MOD}
@@ -1502,8 +1335,9 @@ def q228_dbscan_grid_incremental(spark, sf_dir):
     one hash join of the probe table against the batch homes —
     LINEAR IN THE BATCH where the one-shot build is linear in the
     corpus (measured at 10x with a 1% batch: refresh-only 15.8 s vs
-    135.9 s live rebuild, 12% — tools/dbscan_refresh_probe.py; the
-    touched-block first cut measured 172 s, WORSE than rebuilding).
+    135.9 s live rebuild, 12% — tools/dbscan_refresh_probe.py at
+    commit 669f295; the touched-block first cut measured 172 s, WORSE
+    than rebuilding).
     Re-scoring 100 TB of candidates per nightly batch is the
     alternative this removes.
     """
@@ -1572,13 +1406,13 @@ def q228_dbscan_grid_incremental(spark, sf_dir):
 _DBSCAN_ROLE_AGREE_MIN = 0.5
 
 
-def _q229_sql(gr_sql: str) -> str:
-    # the label arm is named exl, NOT ex: _km_ctes (inside gr's twin)
-    # defines its own ex (the exploded vector table), and a
-    # MATERIALIZED outer ex breaks the inner name resolution in DuckDB
+def _q229_sql(n: int) -> str:
+    # the label arm is named exl, NOT ex: a MATERIALIZED outer CTE
+    # that shares a name with a CTE inside gr's generated SQL breaks
+    # the inner name resolution in DuckDB
     return f"""
 WITH exl AS MATERIALIZED ({_q219_oracle()}),
-gr AS MATERIALIZED ({gr_sql}),
+gr AS MATERIALIZED ({_q223_sql(n)}),
 j AS (
   SELECT exl.vec_id, exl.role AS re, gr.role AS rg
   FROM exl JOIN gr USING (vec_id)
@@ -1616,15 +1450,7 @@ FROM counts
 """
 
 
-def _q229_oracle() -> str:
-    return _q229_sql(_q223_oracle())
-
-
-def _q229_oracle_at(sf_dir: str) -> str:
-    return _q229_sql(_q223_oracle_at(sf_dir))
-
-
-@query("q229_dbscan_agreement_gate", oracle=_q229_oracle(), tags=("vector", "graph", "gate", "EXT"), oracle_fn=_q229_oracle_at)
+@query("q229_dbscan_agreement_gate", oracle=_q229_sql, tags=("vector", "graph", "gate", "EXT"))
 def q229_dbscan_agreement_gate(spark, sf_dir):
     """Measured divergence between the two registered DBSCAN anchors —
     q219 (exact all-pairs eps-edges WITHIN LABEL blocks) and q223

@@ -59,12 +59,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
+from .gridsql import mp_sym_ctes
 from .registry import query
 from .vector6 import (
     _DBSCAN_EPS_COS,
     _DBSCAN_MIN_NBRS,
     _q219_oracle,
-    _q223_oracle,
+    _q223_sql,
     q219_dbscan_embeddings,
     q223_dbscan_grid,
 )
@@ -92,7 +93,7 @@ def _true_eps_edges(spark, sf_dir):
 
 def _true_sym_ctes() -> str:
     """Oracle CTEs producing sym(a, b) = the TRUE symmetric eps-edge
-    list — the unblocked twin of vector6's _mp_sym_ctes."""
+    list — the unblocked counterpart of gridsql.mp_sym_ctes."""
     return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 p AS (
   SELECT a.vec_id AS a, b.vec_id AS b
@@ -179,11 +180,11 @@ _TRUTH_LABEL_AGREE_MIN = 0.45
 _TRUTH_GRID_RECALL_MIN = 0.45
 
 
-def _q233_sql(gr_sql: str) -> str:
+def _q233_sql(n: int) -> str:
     return f"""
 WITH trth AS MATERIALIZED ({_q232_oracle()}),
 exl AS MATERIALIZED ({_q219_oracle()}),
-gr AS MATERIALIZED ({gr_sql}),
+gr AS MATERIALIZED ({_q223_sql(n)}),
 j AS MATERIALIZED (
   SELECT trth.vec_id, trth.role AS rt, exl.role AS re, gr.role AS rg
   FROM trth JOIN exl USING (vec_id) JOIN gr USING (vec_id)
@@ -239,17 +240,7 @@ FROM counts
 """
 
 
-def _q233_oracle() -> str:
-    return _q233_sql(_q223_oracle())
-
-
-def _q233_oracle_at(sf_dir: str) -> str:
-    from .vector6 import _q223_oracle_at
-
-    return _q233_sql(_q223_oracle_at(sf_dir))
-
-
-@query("q233_dbscan_truth_gate", oracle=_q233_oracle(), tags=("vector", "graph", "gate", "EXT"), oracle_fn=_q233_oracle_at)
+@query("q233_dbscan_truth_gate", oracle=_q233_sql, tags=("vector", "graph", "gate", "EXT"))
 def q233_dbscan_truth_gate(spark, sf_dir):
     """Three-way DBSCAN agreement against TRUTH: per-vector role
     agreement of the label-blocked anchor (q219) and the grid anchor
@@ -367,7 +358,7 @@ _TRUE_LEAK_MAX_GRID = 0.2
 _TRUE_LEAK_MAX_LABEL = 0.7
 
 
-def _q234_sql(gsp_sym_ctes: str) -> str:
+def _q234_sql(n: int) -> str:
     from ..operators.graph import cc_oracle_ctes
     from .planning import _LEAK_TRAIN_HI, _LEAK_VAL_HI
     from .vector import _Q34_ORACLE
@@ -394,7 +385,7 @@ lsp AS (
   SELECT vec_id, ({split}) AS split FROM assigned
 ),
 gsp AS (
-  WITH RECURSIVE {gsp_sym_ctes},
+  WITH RECURSIVE {mp_sym_ctes(n, sym_name="gsym")},
   {cc_oracle_ctes("gsym", "cl", "vec_id")},
   assigned AS (
     SELECT e2.vec_id, COALESCE(cl.cluster_id, e2.vec_id) AS cluster_id
@@ -431,19 +422,7 @@ GROUP BY sp.policy, sp.split
 """
 
 
-def _q234_oracle() -> str:
-    from .vector6 import _mp_sym_ctes
-
-    return _q234_sql(_mp_sym_ctes(sym_name="gsym"))
-
-
-def _q234_oracle_at(sf_dir: str) -> str:
-    from .gridsql import mp_sym_ctes_at
-
-    return _q234_sql(mp_sym_ctes_at(sf_dir, sym_name="gsym"))
-
-
-@query("q234_split_leakage_truth", oracle=_q234_oracle(), tags=("vector", "gate", "EXT"), oracle_fn=_q234_oracle_at)
+@query("q234_split_leakage_truth", oracle=_q234_sql, tags=("vector", "gate", "EXT"))
 def q234_split_leakage_truth(spark, sf_dir):
     """The q216/q224 zero-leak proofs re-run against TRUTH: both split
     policies (label-blocked clusters, grid clusters) are re-checked

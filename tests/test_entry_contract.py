@@ -40,6 +40,47 @@ def test_contract_shapes():
     assert all("rows-only" in REGISTRY[n].tags for n in rows_only)
 
 
+# Queries whose tree depth follows the corpus size, so their oracle SQL
+# is generated from the embeddings row count (queries/gridsql.py).
+ADAPTIVE_GRID = {
+    "q163_semantic_dedup_adaptive",
+    "q164_incremental_vector_dedup_adaptive",
+    "q165_vector_dedup_tree_probe",
+    "q166_vector_dedup_recall_gate",
+    "q167_semantic_dedup_grid_gate",
+    "q169_adaptive_grid_report",
+    "q212_knn_graph_blocked",
+    "q213_knn_recall_gate",
+    "q214_knn_multiprobe_gate",
+    "q215_label_propagation_audit",
+    "q223_dbscan_grid",
+    "q224_leakage_safe_split_grid",
+    "q225_knn_graph_incremental",
+    "q228_dbscan_grid_incremental",
+    "q229_dbscan_agreement_gate",
+    "q233_dbscan_truth_gate",
+    "q234_split_leakage_truth",
+}
+
+
+def test_grid_oracle_is_its_generator_at_the_fixture():
+    """One SQL source per adaptive-grid query: the driver string
+    (``oracle``) must be exactly the scale-aware generator
+    (``oracle_fn``) at both fixtures, and both fixtures must hold the
+    row count the driver string was generated at. No Spark needed."""
+    from rds_glue_s3_etl_pipeline_spark.queries.gridsql import FIXTURE_ROWS, n_rows
+
+    fixtures = ("/root/testdata/sf0.01", "/root/testdata/sf0.001")
+    for sf in fixtures:
+        assert n_rows(sf) == FIXTURE_ROWS, sf
+    generated = {n for n, spec in REGISTRY.items() if spec.oracle_fn is not None}
+    assert ADAPTIVE_GRID <= generated
+    for name in generated:
+        spec = REGISTRY[name]
+        for sf in fixtures:
+            assert spec.oracle == spec.oracle_fn(sf), (name, sf)
+
+
 @pytest.mark.parametrize("name", SAMPLE)
 def test_oracle_parity_sample(spark, sf_dir, name):
     con = duckdb.connect()

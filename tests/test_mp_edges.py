@@ -220,12 +220,13 @@ def test_gridsql_depth2_twin_hash_matches_spark(spark, tmp_path):
     from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY
     from rds_glue_s3_etl_pipeline_spark.queries.gridsql import (
         knn_ks,
-        q212_oracle_at,
+        n_rows,
+        q212_oracle,
     )
 
     out = str(tmp_path / "fix212")
     _write_embeddings(spark, out, 600)
-    assert len(knn_ks(out)) == 2  # the point of the test: not fixture depth
+    assert len(knn_ks(n_rows(out))) == 2  # the point of the test: not fixture depth
 
     sdf = (
         REGISTRY["q212_knn_graph_blocked"]
@@ -240,7 +241,7 @@ def test_gridsql_depth2_twin_hash_matches_spark(spark, tmp_path):
         f"CREATE VIEW embeddings AS SELECT * FROM '{out}/embeddings.parquet/*.parquet'"
     )
     ddf = (
-        con.execute(q212_oracle_at(out))
+        con.execute(q212_oracle(n_rows(out)))
         .df()
         .sort_values(["vec_id", "rnk"])
         .reset_index(drop=True)
@@ -272,7 +273,7 @@ def test_gridsql_depth3_twin_probe_set_matches_spark(spark, tmp_path, monkeypatc
     monkeypatch.setattr(similarity, "adaptive_grid", lambda *a, **kw: list(ks))
     out = str(tmp_path / "fix_d3")
     _write_embeddings(spark, out, 60)
-    assert gridsql.knn_ks(out) == ks  # the forced depth-3 tree is live
+    assert gridsql.knn_ks(gridsql.n_rows(out)) == ks  # the forced depth-3 tree is live
 
     nprobe = 2
     home, probe, block_cols = vector6._knn_assignments(spark, out, nprobe=nprobe)

@@ -119,3 +119,38 @@ def test_gated_broadcast_over_gate_falls_back(spark):
     # no broadcast hint applied: the logical plan has no ResolvedHint
     assert "ResolvedHint" not in gated._jdf.queryExecution().logical().toString()
     assert big.join(gated, "k").count() == 500
+
+
+def test_local_relation_fast_path_pinned(spark):
+    """gated_broadcast's job-free fast path reflects on JVM plan
+    internals (the LocalRelation class name and ``data().size()``).
+    Pin it on the installed Spark: a pandas createDataFrame with a
+    schema (the shape of graph._local_cc_result) must report its exact
+    row count, a distributed frame must report None, and gating the
+    local frame must submit no Spark job — an upgrade that renames
+    either internal fails here instead of silently paying the probe."""
+    import pandas as pd
+
+    from rds_glue_s3_etl_pipeline_spark.operators.skew import (
+        _local_relation_rows,
+        gated_broadcast,
+    )
+
+    pdf = pd.DataFrame({"id": [1, 2, 3, 4, 5, 6, 7], "cluster_id": [1, 1, 1, 4, 4, 6, 6]})
+    local = spark.createDataFrame(pdf, schema="id long, cluster_id long")
+    assert _local_relation_rows(local) == 7
+    assert _local_relation_rows(spark.range(5)) is None
+
+    sc = spark.sparkContext
+    group = "test_local_relation_fast_path"
+    sc.setJobGroup(group, "gated_broadcast job accounting")
+    try:
+        gated = gated_broadcast(local, max_rows=100)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert "ResolvedHint" in gated._jdf.queryExecution().analyzed().toString()
+        # control: the distributed path's count probe IS a job here
+        gated_broadcast(spark.range(5), max_rows=100)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

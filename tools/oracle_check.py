@@ -134,13 +134,6 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--json", help="write per-query status to this path")
     ap.add_argument(
-        "--driver-strings",
-        action="store_true",
-        help="ignore scale-aware oracle_fn twins and check the static "
-        "driver-contract oracle strings only — the faithful replica of "
-        "the driver's sf0.01 gate",
-    )
-    ap.add_argument(
         "--vanilla",
         action="store_true",
         help="use a bare SparkSession with NO engine configs — the "
@@ -177,19 +170,10 @@ def main() -> int:
             print(f"ROWS {name}: {len(sdf)} rows (no oracle)")
             results[name] = {"status": "rows_only", "rows": len(sdf)}
             continue
-        # Scale-aware twin when the query provides one (adaptive-grid
-        # family): regenerate the SQL for THIS corpus size so the
-        # check is exact at any sweep scale, not just the fixture.
-        # --driver-strings forces the static driver-contract strings
-        # (the faithful replica of the driver's own gate at sf0.01).
-        oracle = spec.oracle
-        if spec.oracle_fn and not args.driver_strings:
-            try:
-                oracle = spec.oracle_fn(args.sf)
-            except NotImplementedError as e:
-                print(f"ROWS {name}: {len(sdf)} rows (oracle_fn out of scope: {e})")
-                results[name] = {"status": "rows_only", "rows": len(sdf)}
-                continue
+        # Adaptive-grid family: regenerate the SQL for THIS corpus
+        # size so the check is exact at any sweep scale. At the
+        # driver's fixture this is the driver string itself.
+        oracle = spec.oracle_fn(args.sf) if spec.oracle_fn else spec.oracle
         try:
             ddf = con.execute(oracle).df()
         except Exception as e:  # noqa: BLE001
