@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 K_HASHES = 4
 BITS_PER_KEY = 32
 MIN_BITS = 1 << 13
@@ -130,7 +132,7 @@ def bits_to_words(spark, bits: bytes, m: int, epoch: int) -> DataFrame:
     words = np.frombuffer(bits, dtype="<u8")
     nz = np.flatnonzero(words)
     if len(nz) == 0:
-        return spark.createDataFrame([], schema="epoch int, word_id long, word long")
+        return local_frame(spark, [], schema="epoch int, word_id long, word long")
     pdf = pd.DataFrame(
         {
             "epoch": np.full(len(nz), epoch, dtype=np.int32),

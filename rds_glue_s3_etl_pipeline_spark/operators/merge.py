@@ -19,12 +19,17 @@ The reference executes this as an O(N×M) driver-side nested loop
 (``:125-129``) after collecting the whole JDBC table with ``toPandas()``
 (``:94``). Here it is a single equi left-outer join + per-column
 ``coalesce`` — Catalyst picks broadcast-hash or sort-merge, AQE handles
-skew, and nothing ever lands on the driver.
+skew, and nothing ever lands on the driver. Keys whose sides disagree
+in type are compared in one common type; exact integers on both sides
+(integral types, or a JDBC ``DECIMAL(p, 0)`` with ``p <= 18``) compare
+as ``bigint``, so the dedup sort, the join builds and the probes never
+run on BigDecimal keys. The audit's top-N ids and its total come from
+one Spark action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,6 +48,13 @@ def _is_missing(col: Column, dtype: T.DataType) -> Column:
     return col.isNull()
 
 
+def _exact_integer(t: T.DataType) -> bool:
+    """Every value of ``t`` is an integer that fits a long."""
+    if isinstance(t, T.DecimalType):
+        return t.scale == 0 and t.precision <= 18
+    return isinstance(t, T.IntegralType)
+
+
 def _common_key_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
     """Comparison type for join keys whose sides disagree (SURVEY §7c:
     the reference's S3 JSON arrives int64 while a JDBC id can surface as
@@ -54,17 +66,26 @@ def _common_key_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
     string instead would compare ``"7" != "007"``. Non-numeric strings
     cast to NULL and simply never match, which is the correct outcome
     for a malformed id.
+
+    Two exact-integer sides (integral types, or ``DECIMAL(p, 0)`` with
+    ``p <= 18``, e.g. a JDBC ``DECIMAL(12,0)`` id against an int64 feed
+    id) compare as ``bigint``: every such value fits a long, so the cast
+    is exact and injective — it never fails and matches exactly what a
+    wide-decimal comparison would — while the dedup sort, the join
+    builds and the probes hash and compare longs instead of BigDecimals.
+    Decimals with a fraction or more than 18 digits keep the wide
+    decimal.
     """
     if a == b:
         return None
+    if _exact_integer(a) and _exact_integer(b):
+        return T.LongType()
     is_num_a = isinstance(a, T.NumericType)
     is_num_b = isinstance(b, T.NumericType)
     if is_num_a and is_num_b:
         if any(isinstance(t, (T.DoubleType, T.FloatType)) for t in (a, b)):
             return T.DoubleType()
-        if any(isinstance(t, T.DecimalType) for t in (a, b)):
-            return T.DecimalType(38, 18)
-        return T.LongType()
+        return T.DecimalType(38, 18)
     if is_num_a or is_num_b:
         return T.DecimalType(38, 18)
     return T.StringType()
@@ -178,11 +199,35 @@ def unmatched_audit(fallback: DataFrame, primary: DataFrame, key: str = "id") ->
 def audit_summary(audit_df: DataFrame, key: str = "id", show: int = 10) -> dict:
     """Top-N ids + remainder count, the reference's Slack audit message
     shape (``gule_test_job.py:170-185``). Driver-side by design — the
-    payload is a human notification, so only ``show`` rows ever leave
-    the cluster (sort + limit is a TakeOrdered, not a full collect).
+    payload is a human notification, so only each partition's first
+    ``show`` keys ever leave the cluster.
+
+    One action answers both questions. The total is an ``Observation``;
+    the ids are each partition's head after a local sort (the low 33
+    bits of ``monotonically_increasing_id`` are the row's index within
+    its partition), merged here in Spark's ascending order: NULL first,
+    NaN last. Nothing above the observation can re-run it, so each row
+    is counted once. An ordered ``limit`` over it would not do: when AQE
+    learns at run time that no more rows than the limit exist, it drops
+    the limit, and the global sort's range-partition sampling job counts
+    every row a second time. No rows back means an empty input, and the
+    total is 0 without reading the observation, which Spark leaves
+    unfilled when it proves the input empty.
     """
-    ids = [r[0] for r in audit_df.select(key).orderBy(key).limit(show).collect()]
-    total = audit_df.count()
+    obs = Observation()
+    local_index = F.monotonically_increasing_id() % (1 << 33)
+    heads = (
+        audit_df.observe(obs, F.count(F.lit(1)).alias("n"))
+        .select(F.col(key).alias("k"))
+        .sortWithinPartitions("k")
+        .withColumn("i", local_index)
+        .filter(F.col("i") < max(show, 1))
+        .collect()
+    )
+    ids = sorted(
+        (r["k"] for r in heads), key=lambda v: (v is not None, v != v, v)
+    )[:show]
+    total = obs.get["n"] if heads else 0
     return {
         "total_unmatched": total,
         "displayed_ids": ids,

@@ -49,10 +49,15 @@ def run_concurrently(*thunks: Callable[[], T], max_workers: int | None = None) -
     """
     if len(thunks) <= 1:
         return [t() for t in thunks]
-    try:  # propagate JVM-side thread locals (job group/description)
+    try:  # propagate JVM-side thread locals (job group/description/tags)
         from pyspark import inheritable_thread_target
+        from pyspark.sql import SparkSession
 
-        wrapped = [inheritable_thread_target(t) for t in thunks]
+        # With the session, the wrapper also copies its job tags
+        # (spark.addTag); without one PySpark warns on every call.
+        session = SparkSession.getActiveSession()
+        wrap = inheritable_thread_target(session) if session else inheritable_thread_target
+        wrapped = [wrap(t) for t in thunks]
     except Exception:  # pragma: no cover - fallback for odd runtimes
         wrapped = list(thunks)
     with ThreadPoolExecutor(

@@ -9,7 +9,11 @@ Reference stage map (``/root/reference/gule_test_job.py``):
   :213-221  success/failure notifications
 
 Every stage is a DataFrame transform; nothing materializes on the
-driver except the ≤10-row audit sample and the final row count.
+driver except the ≤10-row audit sample and the final row count. The
+reference runs audit and write one after the other; here they depend
+only on the two cached inputs, so they run concurrently on two driver
+threads (``operators.par.run_concurrently``) and their notifications
+are sent afterwards in the reference's order.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .notify import Notifier, NullNotifier, format_audit_message
 from .operators.merge import audit_summary, precedence_merge, unmatched_audit
+from .operators.par import run_concurrently
 from .sources.sinks import write_single_csv
 
 
@@ -83,7 +88,9 @@ def run_merge_pipeline(
             raise PipelineError(msg)
 
     # Stage 2: distributed precedence merge (:114-156). Both inputs
-    # feed the merge AND the audit — cache to scan each source once.
+    # feed the merge AND the audit, whose jobs run at the same time —
+    # cache to scan each source once (concurrent tasks on one block
+    # wait for the first to store it rather than re-reading the source).
     primary = primary.cache()
     fallback = fallback.cache()
     merged = precedence_merge(
@@ -91,30 +98,55 @@ def run_merge_pipeline(
     )
 
     # Stage 3: audit (:166-193) — non-fatal by reference semantics.
+    def audit_step() -> dict:
+        return audit_summary(unmatched_audit(fallback, primary, key=key), key=key)
+
+    # Stage 4: load (:200-211). The reference counts rows with a
+    # separate len(df) on the driver; a naive translation (write, then
+    # merged.count()) runs the whole merge plan TWICE. Observation
+    # rides the write job itself — the count arrives as a metric of
+    # the same action, zero extra passes.
+    def write_step() -> int:
+        obs = Observation("merge_metrics")
+        write_single_csv(
+            merged.observe(obs, F.count(F.lit(1)).alias("rows")), output_path
+        )
+        return obs.get["rows"]
+
     try:
-        audit = audit_summary(unmatched_audit(fallback, primary, key=key), key=key)
+        (audit, audit_err), (n, write_err) = run_concurrently(
+            _outcome(audit_step), _outcome(write_step)
+        )
+    finally:
+        primary.unpersist()
+        fallback.unpersist()
+
+    # Notifications in the reference's order: audit (:188-198), then
+    # success or failure (:213-221).
+    try:
+        if audit_err is not None:
+            raise audit_err
         if audit["total_unmatched"] > 0:
             notifier.notify(format_audit_message(audit))
     except Exception as e:  # noqa: BLE001
         notifier.notify(f"WARNING: audit failed: {e}")
         audit = {"total_unmatched": -1, "displayed_ids": [], "remaining_count": 0}
+    if write_err is not None:
+        notifier.notify(f"ERROR: failed to write output: {write_err}")
+        raise write_err
+    notifier.notify(f"SUCCESS: wrote {n} merged records to {output_path}")
+    return PipelineResult(output_path=output_path, merged_rows=n, audit=audit)
 
-    # Stage 4: load (:200-211) + success notification (:213-215).
-    # The reference counts rows with a separate len(df) on the driver;
-    # a naive translation (write, then merged.count()) runs the whole
-    # merge plan TWICE. Observation rides the write job itself — the
-    # count arrives as a metric of the same action, zero extra passes.
-    obs = Observation("merge_metrics")
-    try:
-        write_single_csv(
-            merged.observe(obs, F.count(F.lit(1)).alias("rows")), output_path
-        )
-        n = obs.get["rows"]
-        notifier.notify(f"SUCCESS: wrote {n} merged records to {output_path}")
-        return PipelineResult(output_path=output_path, merged_rows=n, audit=audit)
-    except Exception as e:
-        notifier.notify(f"ERROR: failed to write output: {e}")
-        raise
-    finally:
-        primary.unpersist()
-        fallback.unpersist()
+
+def _outcome(step: Callable[[], object]) -> Callable[[], tuple]:
+    """Wrap ``step`` to return ``(result, None)`` or ``(None, error)``,
+    so one failing step neither hides the other's outcome nor cancels
+    its notification."""
+
+    def run() -> tuple:
+        try:
+            return step(), None
+        except Exception as e:  # noqa: BLE001
+            return None, e
+
+    return run

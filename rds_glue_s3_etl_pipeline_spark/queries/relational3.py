@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.udfs import order_gap_stats
 from ..operators.prefix import global_row_number
+from ..session import local_frame
 from .registry import DEC, query
 
 # --------------------------------------------------------------------------
@@ -68,7 +69,7 @@ def q46_range_join(spark, sf_dir):
     map-side, no shuffle). For large range sides, bucketize the time
     axis and equi-join on bucket first (the asof_join pattern)."""
     e = load(spark, sf_dir, "events")
-    periods = spark.createDataFrame(_PERIODS, "promo string, p_start string, p_end string")
+    periods = local_frame(spark, _PERIODS, "promo string, p_start string, p_end string")
     periods = periods.select(
         "promo",
         F.col("p_start").cast("timestamp").alias("p_start"),

@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import local_frame
 from .registry import O_DSUM, dsum, query
 
 # --------------------------------------------------------------------------
@@ -75,7 +76,7 @@ def q117_mergeable_quantiles(spark, sf_dir):
         F.sum("c").over(w_cum).alias("cum"),
         F.sum("c").over(Window.partitionBy()).alias("n"),
     )
-    qs = spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    qs = local_frame(spark, [(0.5,), (0.9,), (0.99,)], "q double")
     target = F.ceil(F.col("q") * F.col("n")).cast("long")
     hit = (
         F.broadcast(qs)

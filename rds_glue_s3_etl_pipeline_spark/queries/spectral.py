@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators import bloom as B
 from ..operators import spectral as S
+from ..session import local_frame
 from .registry import query
 
 _DIM = 64  # fixture embedding dimensionality (all SFs)
@@ -203,7 +204,8 @@ def q197_pca_spectrum_gate(spark, sf_dir):
         else f"FAIL tr={tr_ok} fr={fr_ok} dec={dec_ok}"
     )
     recon_msg = "ok" if recon_ok else f"FAIL mse={mse:.3e} dropped={dropped:.3e}"
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, _DIM, trace_dec, spectrum_msg, recon_msg)],
         schema="n_vectors long, dim long, trace_var double, spectrum_ok string, recon_ok string",
     )
@@ -372,7 +374,8 @@ def q198_bloom_decontaminate(spark, sf_dir):
     fn_gate = "ok" if int(stats["n_missed"]) == 0 else f"FAIL missed={stats['n_missed']}"
     fp_bound = max(5, (n_train + 99) // 100)
     fp_gate = "ok" if n_fp <= fp_bound else f"FAIL fp={n_fp} bound={fp_bound}"
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_train, n_eval, n_contam, fn_gate, fp_gate)],
         schema="n_train long, n_eval long, n_contam long, fn_gate string, fp_gate string",
     )
@@ -459,7 +462,8 @@ def q202_bloom_snapshot_lifecycle(spark, sf_dir):
         "ok" if int(flags["n_diverged"]) == 0 else f"FAIL diverged={flags['n_diverged']}"
     )
     n_contam = train.join(F.broadcast(all_keys), "key", "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(2, n_eval_keys, n_contam, chain_gate, flags_gate)],
         schema="n_epochs long, n_eval_keys long, n_contam long, chain_gate string, flags_gate string",
     )
@@ -578,7 +582,8 @@ def q206_bloom_stream_ingest(spark, sf_dir):
     )
     flags_gate = "ok" if diverged == 0 else f"FAIL diverged={diverged}"
     n_contam = train.join(F.broadcast(all_keys), "key", "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(3, n_eval_keys, n_contam, chain_gate, flags_gate)],
         schema="n_batches long, n_eval_keys long, n_contam long, chain_gate string, flags_gate string",
     )
@@ -629,7 +634,8 @@ def q207_whitening_gate(spark, sf_dir):
     decorrelation_gate = (
         "ok" if off_dev <= 1e-6 else f"FAIL off_dev={off_dev:.3e}"
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, rank, identity_gate, decorrelation_gate)],
         schema="n_vectors long, rank long, identity_gate string, decorrelation_gate string",
     )
@@ -738,7 +744,8 @@ def q209_moments_blas_gate(spark, sf_dir):
     )
     gate = "ok" if max_dev <= 1e-9 * scale else f"FAIL dev={max_dev:.3e}"
     d = g_blas.shape[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, d, d * (d + 1) // 2, gate)],
         schema="n_vectors long, d long, n_entries long, agreement_gate string",
     )

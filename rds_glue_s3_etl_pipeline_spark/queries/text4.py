@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as X
+from ..session import local_frame
 from .registry import query
 
 _BPE_TOP = 20
@@ -110,8 +111,8 @@ def q152_bpe_train(spark, sf_dir):
     rows = [
         (i + 1, a, b, int(n)) for i, (a, b, n) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "step int, left string, right string, n_occurrences long"
+    return local_frame(
+        spark, rows, "step int, left string, right string, n_occurrences long"
     )
 
 

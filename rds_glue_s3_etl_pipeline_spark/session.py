@@ -14,7 +14,8 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -103,6 +104,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema``
+    field order), planned as a ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` goes through ``parallelize``: a
+    PythonRDD, so every action on it starts Python workers (a warm
+    ``toPandas`` of an 8-row table took 0.39-0.41 s that way and
+    0.10-0.11 s this way on 2 local cores). An Arrow table built with
+    the schema's exact Arrow types keeps large longs and NULLs exact
+    and works for an empty ``rows``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    columns = {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}
+    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 @contextmanager

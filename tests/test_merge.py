@@ -9,8 +9,10 @@ import math
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rds_glue_s3_etl_pipeline_spark.operators.merge import (
+    _common_key_type,
     audit_summary,
     precedence_merge,
     unmatched_audit,
@@ -172,3 +174,117 @@ def test_merge_broadcast_fallback_with_coercion(spark):
     rows = merged.collect()
     assert len(rows) == 1 and rows[0]["bonus"] == 70
     assert "BroadcastHashJoin" in merged._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "a, b, want",
+    [
+        (T.LongType(), T.DecimalType(12, 0), T.LongType()),
+        (T.IntegerType(), T.DecimalType(18, 0), T.LongType()),
+        (T.DecimalType(10, 0), T.DecimalType(12, 0), T.LongType()),
+        (T.LongType(), T.IntegerType(), T.LongType()),
+        (T.LongType(), T.DecimalType(19, 0), T.DecimalType(38, 18)),
+        (T.LongType(), T.DecimalType(10, 2), T.DecimalType(38, 18)),
+        (T.LongType(), T.StringType(), T.DecimalType(38, 18)),
+        (T.DoubleType(), T.DecimalType(12, 0), T.DoubleType()),
+        (T.StringType(), T.BinaryType(), T.StringType()),
+        (T.DecimalType(12, 0), T.DecimalType(12, 0), None),
+    ],
+)
+def test_common_key_type_table(a, b, want):
+    """Exact-integer sides (integral, or DECIMAL(p, 0) with p <= 18)
+    compare as bigint; a fraction, more than 18 digits or a string
+    keeps the wide decimal. The rule is symmetric."""
+    assert _common_key_type(a, b) == want
+    assert _common_key_type(b, a) == want
+
+
+def test_merge_and_audit_decimal_id_equal_long_id(spark):
+    """A DECIMAL(12,0) fallback id (the JDBC shape) merges and audits
+    exactly like the same ids as long — duplicates, NULL keys, 12-digit
+    ids and several partitions — and the executed merge joins on
+    bigint, not decimal(38,18)."""
+    from decimal import Decimal
+
+    big = 999_999_999_990
+    primary = spark.createDataFrame(
+        [(i, f"p{i}" if i % 3 else None) for i in (1, 2, 3, 5, 8, big, big + 7)]
+        + [(None, "nokey")],
+        "id long, name string",
+    ).repartition(3)
+    fb_rows = [
+        (1, 1, "a", 10), (2, 2, "b", 20), (2, 3, "b2", 21), (5, 4, None, 50),
+        (big, 5, "z", 90), (big, 6, "z2", 91), (4, 7, "u", 40),
+        (big + 1, 8, "u2", 41), (None, 9, "n", 0),
+    ]
+    fb_long = spark.createDataFrame(
+        fb_rows, "id long, seq int, name string, bonus int"
+    ).repartition(4)
+    fb_dec = spark.createDataFrame(
+        [(None if i is None else Decimal(i), *rest) for i, *rest in fb_rows],
+        "id decimal(12,0), seq int, name string, bonus int",
+    ).repartition(4)
+
+    def merged_rows(fb):
+        df = precedence_merge(primary, fb, fallback_order_col="seq")
+        rows = sorted(df.collect(), key=lambda r: (r["id"] is None, r["id"] or 0))
+        return df, [r.asDict() for r in rows]
+
+    dec_df, dec_rows = merged_rows(fb_dec)
+    _, long_rows = merged_rows(fb_long)
+    assert dec_rows == long_rows
+    assert len(dec_rows) == 8
+    plan = dec_df._jdf.queryExecution().executedPlan().toString()
+    assert "decimal(38,18)" not in plan
+    assert "bigint" in plan
+
+    s_dec = audit_summary(unmatched_audit(fb_dec, primary), show=2)
+    s_long = audit_summary(unmatched_audit(fb_long, primary), show=2)
+    s_dec["displayed_ids"] = [None if i is None else int(i) for i in s_dec["displayed_ids"]]
+    assert s_dec == s_long
+    assert s_long == {
+        "total_unmatched": 3,
+        "displayed_ids": [None, 4],
+        "remaining_count": 1,
+    }
+
+
+def test_audit_summary_matches_count_and_sorted_collect(spark):
+    """The total counted under the TakeOrdered equals a separate
+    count(), and the ids equal a sorted collect, on multi-partition
+    input with duplicate and NULL keys, on empty input, and with
+    show=0."""
+    rows = [(None if i % 11 == 0 else i % 37, i) for i in range(500)]
+    df = spark.createDataFrame(rows, "id long, v long").repartition(8)
+    want_ids = [r["id"] for r in df.orderBy("id").limit(10).collect()]
+    s = audit_summary(df)
+    assert s["total_unmatched"] == df.count() == 500
+    assert s["displayed_ids"] == want_ids
+    assert s["remaining_count"] == 490
+
+    s0 = audit_summary(df, show=0)
+    assert s0 == {"total_unmatched": 500, "displayed_ids": [], "remaining_count": 500}
+
+    empty = spark.createDataFrame([], "id long, v long").repartition(4)
+    assert audit_summary(empty) == {
+        "total_unmatched": 0,
+        "displayed_ids": [],
+        "remaining_count": 0,
+    }
+
+
+def test_audit_summary_exact_when_audit_fits_the_limit(spark):
+    """Fewer unmatched rows than ``show``, on cached inputs, repeated:
+    the case where AQE learns the row count at run time. With an
+    ordered limit over the observation it dropped the limit and the
+    range-partition sampling job counted every row twice (2 unmatched
+    rows reported as 4 from the second call on)."""
+    for _ in range(4):
+        primary = spark.createDataFrame([(i,) for i in range(100, 105)], "id long").cache()
+        fallback = spark.createDataFrame([(1,), (2,)], "id long").cache()
+        try:
+            s = audit_summary(unmatched_audit(fallback, primary))
+        finally:
+            primary.unpersist()
+            fallback.unpersist()
+        assert s == {"total_unmatched": 2, "displayed_ids": [1, 2], "remaining_count": 0}

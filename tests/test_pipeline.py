@@ -244,3 +244,80 @@ def test_xml_roundtrip_with_nested_struct(spark, tmp_path):
     assert len(got) == 2
     assert got[1]["addr"]["city"] == "NYC" and got[2]["addr"]["zip"] == 94103
     assert got[2]["name"] == "bob"
+
+
+@pytest.fixture
+def merge_inputs(spark):
+    primary = spark.createDataFrame(
+        [(1, "alice"), (2, None), (3, "carol")], "id long, name string"
+    )
+    fallback = spark.createDataFrame(
+        [(2, "bob"), (9, "zed")], "id long, name string"
+    )
+    return primary, fallback
+
+
+def _assert_released(*dfs):
+    assert not any(df.is_cached for df in dfs)
+
+
+def test_pipeline_notifies_audit_then_success(spark, tmp_path, merge_inputs):
+    """Audit and write run concurrently, but the notifications keep the
+    reference order: the audit message, then SUCCESS."""
+    primary, fallback = merge_inputs
+    notifier = CollectingNotifier()
+    out = str(tmp_path / "ok.csv")
+    result = run_merge_pipeline(primary, fallback, out, notifier=notifier)
+    assert notifier.messages == [
+        "Unmatched RDS records: 1 (ids: 9)",
+        f"SUCCESS: wrote 3 merged records to {out}",
+    ]
+    assert result.merged_rows == 3
+    _assert_released(primary, fallback)
+
+
+def test_pipeline_audit_failure_warns_then_succeeds(
+    spark, tmp_path, merge_inputs, monkeypatch
+):
+    """A failing audit is non-fatal: WARNING first, then the write's
+    SUCCESS."""
+    from rds_glue_s3_etl_pipeline_spark import pipeline
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("audit boom")
+
+    monkeypatch.setattr(pipeline, "audit_summary", boom)
+    primary, fallback = merge_inputs
+    notifier = CollectingNotifier()
+    out = str(tmp_path / "warn.csv")
+    result = run_merge_pipeline(primary, fallback, out, notifier=notifier)
+    assert notifier.messages == [
+        "WARNING: audit failed: audit boom",
+        f"SUCCESS: wrote 3 merged records to {out}",
+    ]
+    assert result.audit["total_unmatched"] == -1
+    _assert_released(primary, fallback)
+
+
+def test_pipeline_write_failure_reports_audit_then_error(
+    spark, tmp_path, merge_inputs, monkeypatch
+):
+    """A failing write still lets the audit report first; then ERROR,
+    and the write's exception reaches the caller."""
+    from rds_glue_s3_etl_pipeline_spark import pipeline
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pipeline, "write_single_csv", boom)
+    primary, fallback = merge_inputs
+    notifier = CollectingNotifier()
+    with pytest.raises(OSError, match="disk full"):
+        run_merge_pipeline(
+            primary, fallback, str(tmp_path / "err.csv"), notifier=notifier
+        )
+    assert notifier.messages == [
+        "Unmatched RDS records: 1 (ids: 9)",
+        "ERROR: failed to write output: disk full",
+    ]
+    _assert_released(primary, fallback)

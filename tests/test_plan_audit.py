@@ -77,6 +77,20 @@ def test_driver_literal_relation_is_benign(spark, sf_dir):
     assert all(f.benign for f in finds)
 
 
+def test_local_frame_relation_is_benign(spark, sf_dir):
+    """session.local_frame plans as a LocalTableScan (rows embedded in
+    the plan): bounded like the PythonRDD literal relation."""
+    from rds_glue_s3_etl_pipeline_spark.session import local_frame
+
+    probe = local_frame(spark, [(0.25,), (0.5,), (0.75,)], "q double")
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_totalprice")
+    plan = _plan(o.crossJoin(F.broadcast(probe)))
+    assert "LocalTableScan" in plan
+    finds = classify_nljs(plan)
+    assert finds
+    assert all(f.benign for f in finds)
+
+
 def test_justification_matches_only_its_shape(spark, sf_dir):
     # a checkpointed (opaque) relation: benign ONLY under a matching
     # shape-signature justification; a wrong signature stays red.

@@ -31,6 +31,9 @@ heuristic guess):
   relation (spark.createDataFrame of a Python list): bounded by
   construction — it physically fit in the driver.  A localCheckpoint
   leaf (``at localCheckpoint at``) is NOT bounded and stays INF.
+- ``LocalTableScan``                         -> the same driver-local
+  literal relation in its Arrow form (``session.local_frame``, or a
+  pandas ``createDataFrame``): its rows are embedded in the plan.
 - joins multiply bounds, unions add them, grouping/limits/projections
   never increase them.
 
@@ -283,6 +286,10 @@ def bound(n: Node) -> float:
             # Python list) — bounded by construction.
             return BOUNDED_THRESHOLD
         return INF
+    if name == "LocalTableScan":
+        # rows embedded in the plan — bounded by construction, like
+        # the PythonRDD literal relation above.
+        return BOUNDED_THRESHOLD
     if name in _JOIN_NODES:
         if "LeftSemi" in n.line or "LeftAnti" in n.line:
             return bound(n.children[0]) if n.children else INF
