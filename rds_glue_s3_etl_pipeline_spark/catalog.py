@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,11 +36,32 @@ DIM_TABLES = frozenset({"region", "nation", "supplier", "customer", "part"})
 # hashing, vector folds) or aggregate at volume.
 FACT_TABLES = frozenset({"lineitem", "orders", "events", "documents", "embeddings"})
 
+# Session confs that change what parquet schema inference returns for
+# the same file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# Absolute table path -> (fingerprint + inference confs, inferred schema).
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
 
 def load(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool | None = None
 ) -> DataFrame:
     """Load one table. Parquet scan → pushdown/pruning come free.
+
+    Schema inference costs one Spark job per read, so only the first
+    load of a table infers; the inferred ``StructType`` is kept in a
+    module-level map keyed by the table's absolute path, and later
+    loads read through ``spark.read.schema(cached).parquet(path)``
+    (no job). An entry holds for one ``table_fingerprint`` (path,
+    mtime, size of every data file) and one set of the parquet confs
+    that change what inference returns (``_INFERENCE_CONFS``); when
+    either differs, the next load infers again and replaces the entry.
 
     ``events.ts`` has been written by the fixture generator as parquet
     TIMESTAMP(NANOS) in some rounds and TIMESTAMP(MICROS,
@@ -67,14 +89,13 @@ def load(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, sf_dir, name)
+    if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) fixtures
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":  # TIMESTAMP(MICROS, !adjustedToUTC)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if parallel is None:
         parallel = name in FACT_TABLES
     if parallel:
@@ -110,6 +131,22 @@ def table_fingerprint(sf_dir: str, name: str) -> tuple:
             st = os.stat(p)
             out.append((p, st.st_mtime_ns, st.st_size))
     return tuple(out)
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table, inferring its schema only on a miss in ``_SCHEMAS``."""
+    path = f"{sf_dir}/{name}.parquet"
+    key = (
+        table_fingerprint(sf_dir, name),
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    slot = os.path.abspath(path)
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[slot] = (key, df.schema)
+    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -71,10 +71,14 @@ def q135_bigram_lm_score(spark, sf_dir):
     smoothed bigram LM trained on the corpus itself — the perplexity-
     bucket quality gate (CCNet / Wenzek et al. 2020 shape).
 
-    Plan: one posexplode, a per-doc lag window for bigrams, two hash
-    aggregations for the LM tables (map-side combinable — shuffle is
-    |bigram vocab|, not token count), then a shuffle-hash join of doc
-    bigrams against the LM and a final per-doc aggregation. No UDFs.
+    Plan: one posexplode, a per-doc lag window for bigrams, ONE hash
+    aggregation of the bigram counts ``cb`` (map-side combinable —
+    shuffle is |bigram vocab|, not token count), from which ``cp`` is a
+    ``sum(cb)`` window over ``prev`` on that vocab-sized table, so the
+    token-sized bigrams are aggregated once. The broadcast ``v`` (its
+    own scan of ``documents``) is cross-joined onto that table to give
+    one LM row ``lm(prev, cur, term)`` per distinct bigram; doc bigrams
+    join ``lm`` once, then a final per-doc aggregation. No UDFs.
 
     At 100 TB the LM side is what changes, not the plan: score against
     a PRUNED REFERENCE LM (top-M bigrams + unigram backoff, trained on
@@ -96,17 +100,19 @@ def q135_bigram_lm_score(spark, sf_dir):
         )
         .filter(F.col("prev").isNotNull())
     )
-    cb = big.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cb"))
-    cp = big.groupBy("prev").agg(F.count(F.lit(1)).alias("cp"))
     vv = toks.agg(F.countDistinct("tok").alias("v"))
     p = (F.col("cb") + F.lit(1)).cast("double") / (
         F.col("cp") + F.col("v")
     ).cast("double")
-    return (
-        big.join(cb, ["prev", "cur"])
-        .join(cp, ["prev"])
+    lm = (
+        big.groupBy("prev", "cur")
+        .agg(F.count(F.lit(1)).alias("cb"))
+        .withColumn("cp", F.sum("cb").over(Window.partitionBy("prev")))
         .crossJoin(F.broadcast(vv))
-        .select("doc_id", (-F.log(p)).cast("decimal(18,8)").alias("term"))
+        .select("prev", "cur", (-F.log(p)).cast("decimal(18,8)").alias("term"))
+    )
+    return (
+        big.join(lm, ["prev", "cur"])
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),

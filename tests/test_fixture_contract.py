@@ -35,6 +35,17 @@ def test_events_ts_is_timestamp(spark, sf_dir):
     df.select(F.unix_millis("ts").alias("ms")).schema
 
 
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_events_ts_is_timestamp_on_second_load(spark, sf_dir):
+    """The second load reads through the kept inferred schema (nanos as
+    bigint, or TIMESTAMP_NTZ); the normalization must still apply."""
+    first = load(spark, sf_dir, "events")
+    second = load(spark, sf_dir, "events")
+    assert isinstance(second.schema["ts"].dataType, TimestampType)
+    assert second.schema == first.schema
+    second.select(F.unix_millis("ts").alias("ms")).schema
+
+
 def test_events_ts_values_sane(spark):
     """Catch unit mistakes (micros-read-as-nanos → 1970-era rows): every
     fixture timestamp must land in a plausible decade."""

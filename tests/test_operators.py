@@ -553,6 +553,52 @@ def test_bigram_lm_hand_computed(spark, tmp_path):
     assert row["avg_nll"] == pytest.approx(expected, rel=1e-6)
 
 
+def _bigram_lm_reference(texts):
+    """Pure-Python q135: add-one bigram LM over the corpus, each NLL
+    term rounded half-up to decimal(18,8) (Spark's double → decimal
+    cast), summed exactly, then divided by the doc's bigram count."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    toks = {d: t.split() for d, t in texts.items()}
+    bigrams = {d: list(zip(ts, ts[1:])) for d, ts in toks.items()}
+    cb = Counter(b for bs in bigrams.values() for b in bs)
+    cp = Counter(prev for bs in bigrams.values() for prev, _ in bs)
+    v = len({t for ts in toks.values() for t in ts})
+    out = {}
+    for d, bs in bigrams.items():
+        if not bs:
+            continue
+        terms = [
+            Decimal(repr(-math.log((cb[b] + 1) / (cp[b[0]] + v)))).quantize(
+                Decimal("1E-8"), rounding=ROUND_HALF_UP
+            )
+            for b in bs
+        ]
+        out[d] = (len(bs), float(str(sum(terms))) / len(bs))
+    return out
+
+
+def test_bigram_lm_matches_reference(spark, tmp_path):
+    """q135 against the pure-Python reference on three docs. 'a' has two
+    successors (b, c), so summing cp over the wrong grouping moves
+    p(b|a) and p(c|a); 'z' is a token with no bigram, so it counts in
+    V = 4 and a V taken from the bigrams alone (3) moves every term.
+    The doc without a bigram has no row."""
+    from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY
+
+    texts = {1: "a b a c", 2: "b a", 3: "z"}
+    spark.createDataFrame(
+        [(d, t, "en", "unit", len(t)) for d, t in texts.items()],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["avg_nll"])
+        for r in REGISTRY["q135_bigram_lm_score"].fn(spark, str(tmp_path)).collect()
+    }
+    assert got == _bigram_lm_reference(texts)
+
+
 def test_hash_split_deterministic_and_complete(spark, tmp_path):
     """q138: every doc gets exactly one split, assignment depends only
     on doc_id (md5('42') = 'a1d0...' -> bucket 'a1' -> train), and the
