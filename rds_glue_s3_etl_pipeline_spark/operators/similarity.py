@@ -10,6 +10,8 @@ reproducible across runs with zero driver-side state to broadcast.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import vector as V
@@ -242,6 +244,24 @@ def kmeans_update(
     )
 
 
+def init_centroids(e: DataFrame, k: int, vec_alias: str = "cv") -> DataFrame:
+    """The seedless pseudo-random codebook (c_id, ``vec_alias``): the
+    first k vectors of (vec_id, embedding) in md5(vec_id) order —
+    deterministic on any engine, no RNG state. The cast-to-binary md5
+    detail must match the DuckDB twin's ``md5(CAST(vec_id AS
+    VARCHAR))`` byte-for-byte; every sample-codebook consumer (the
+    vector3/vector4 IVF, PQ and SemDeDup queries, curation, and
+    :func:`train_codebook`) goes through here so the discipline lives
+    in one place."""
+    return (
+        e.orderBy(
+            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
+        )
+        .limit(k)
+        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias(vec_alias))
+    )
+
+
 def spherical_kmeans(
     embeddings: DataFrame,
     init_centroids: DataFrame,
@@ -292,6 +312,33 @@ def spherical_kmeans_codebook(
         # truncated immediately either way.
         cent = kmeans_update(assigned, vec_col).localCheckpoint(eager=False)
     return cent
+
+
+# Lloyd training corpus cap: the codebook trains on the first
+# _TRAIN_SAMPLE vectors in seedless md5(vec_id) order (md5 is uniform,
+# so this is a uniform deterministic sample — same discipline as
+# init_centroids, whose first-k pick is by construction a PREFIX of
+# this sample, so initialization is unchanged). Below the cap the
+# sample IS the corpus and training is bit-identical to the
+# fixture-pinned forms (oracle equality intact); above it the k-means
+# update rounds touch _TRAIN_SAMPLE rows instead of N — the standard
+# production pattern (train on a sample, assign everything) that
+# removes the O(N x k x iters) train term the 100x diagnosis measured
+# at 41.8 s of q163's wall. The final assignment pass stays over the
+# full corpus.
+_TRAIN_SAMPLE = 10_000
+
+
+def train_codebook(e: DataFrame, k: int, iters: int = 2) -> DataFrame:
+    """The trained coarse codebook (c_id, cv) of (vec_id, embedding):
+    the md5 training slice (first _TRAIN_SAMPLE rows in md5(vec_id)
+    order — TakeOrdered, a per-partition heap, never a global sort),
+    its first ``k`` rows as initial centroids (init_centroids), then
+    ``iters`` Lloyd rounds (spherical_kmeans_codebook)."""
+    train = e.orderBy(
+        F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
+    ).limit(_TRAIN_SAMPLE)
+    return spherical_kmeans_codebook(train, init_centroids(train, k), iters)
 
 
 # --------------------------------------------------------------------------
@@ -348,10 +395,9 @@ def block_sub_codebook(
 ) -> DataFrame:
     """Per-block sampled sub-codebook: the first ``k_sub`` members of
     each block in md5(id) order — the seedless deterministic sample
-    every codebook consumer uses (queries.vector3._init_centroids
-    discipline), so any engine reproduces it bit for bit. Returns
-    (*block_cols, id_out, __sv, __snrm); bounded by #blocks x k_sub
-    rows."""
+    every codebook consumer uses (init_centroids discipline), so any
+    engine reproduces it bit for bit. Returns (*block_cols, id_out,
+    __sv, __snrm); bounded by #blocks x k_sub rows."""
     w_pick = Window.partitionBy(*block_cols).orderBy(
         F.md5(F.col(id_col).cast("string").cast("binary")), F.col(id_col)
     )
@@ -454,6 +500,85 @@ def block_sub_assign(
         .filter(F.col("__rn") <= nprobe)
         .drop("__sv", "__snrm", "__scos", "__rn")
     )
+
+
+# Broadcast a level's sub-codebook only while it is genuinely
+# broadcast-sized; past this the level join keys on the block columns
+# and shuffle-joins co-located by block with identical results.
+_SUB_BROADCAST_ROWS = 1_000_000
+
+
+@dataclass(frozen=True)
+class TreeLevel:
+    """One sub-codebook level: the block columns it splits, the column
+    it adds, its md5-sampled sub-codebook, whether that is broadcast,
+    and the frame it assigns (the corpus blocked down to ``prefix``)."""
+
+    prefix: tuple[str, ...]
+    id_out: str
+    sub: DataFrame
+    broadcast: bool
+    members: DataFrame
+
+
+@dataclass(frozen=True)
+class GridTree:
+    """What :func:`adaptive_grid_tree` built. ``coarse`` is the
+    checkpointed (vec_id, embedding, c_id, cos_sim, nrm) assignment;
+    ``blocked`` adds one ``block_cols`` column per level."""
+
+    ks: list[int]
+    codebook: DataFrame
+    coarse: DataFrame
+    levels: list[TreeLevel]
+    blocked: DataFrame
+    block_cols: list[str]
+
+
+def adaptive_grid_tree(
+    e: DataFrame,
+    target_block: int,
+    coarse_k: int = 16,
+    fanout: int = 8,
+    iters: int = 2,
+) -> GridTree:
+    """Build the corpus-adaptive blocking tree over (vec_id, embedding):
+    per-level sizes from adaptive_grid(count, target_block), the coarse
+    codebook trained on the md5 sample (train_codebook), every vector
+    assigned to it (kmeans_assign, plus its norm), then one md5-sampled
+    sub-codebook level per remaining ``ks`` entry (block_sub_codebook +
+    block_sub_assign). The SemDeDup tree (q163/q169), the tree-probe
+    dedup (q164/q165) and the k-NN index (q212-q236) are all this
+    build; gridsql.home_ctes is its DuckDB twin.
+
+    The coarse assignment is the one materialization (eager
+    localCheckpoint): it holds the corpus-sized scoring work and every
+    level reads it twice (sub-codebook sample and assignment). Levels
+    stay lineage over it; a caller that reads the blocked frame
+    several times materializes what it needs.
+    """
+    import math
+
+    # one column-pruned count job (parquet row-group metadata): the only
+    # driver-side value the grid choice needs
+    ks = adaptive_grid(e.count(), target_block, coarse_k=coarse_k, fanout=fanout)
+    codebook = train_codebook(e, ks[0], iters)
+    coarse = (
+        kmeans_assign(e, codebook)
+        .withColumn("nrm", V.norm(F.col("embedding")))
+        .localCheckpoint(eager=True)
+    )
+    blocked, block_cols, levels = coarse, ["c_id"], []
+    for i, k_sub in enumerate(ks[1:]):
+        prefix, id_out = tuple(block_cols), f"s{i}_id"
+        sub = block_sub_codebook(blocked, prefix, k_sub, id_out)
+        bcast = math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS
+        levels.append(TreeLevel(prefix, id_out, sub, bcast, blocked))
+        blocked = block_sub_assign(
+            blocked, prefix, k_sub, id_out, hint_broadcast=bcast, sub=sub
+        )
+        block_cols.append(id_out)
+    return GridTree(ks, codebook, coarse, levels, blocked, block_cols)
 
 
 # --------------------------------------------------------------------------

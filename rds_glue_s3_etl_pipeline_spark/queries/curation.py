@@ -40,13 +40,13 @@ from ..functions import vector as V
 from ..scratch import scratch_dir
 from .registry import query
 from .text import _SHINGLE_N
-from .vector3 import _KM_ITERS, _KM_K, _init_centroids, _km_ctes
+from .vector3 import _KM_ITERS, _KM_K, _km_ctes
 
 # --------------------------------------------------------------------------
 # q183: cluster-balanced resampling. Assign every vector to its
 # trained k-means cell (q142's codebook), then keep at most _CB_CAP
 # members per cell, chosen by deterministic md5 rank (seedless
-# "random" — the same discipline as _init_centroids). The kept set is
+# "random" — the same discipline as init_centroids). The kept set is
 # the balanced corpus; cell_n preserves the original density so the
 # sampler can log what it flattened.
 # --------------------------------------------------------------------------
@@ -82,10 +82,10 @@ def q183_cluster_balanced_sample(spark, sf_dir):
     the corpus, holding per-partition window size ~constant at any
     scale. The md5 rank makes the sample deterministic with no RNG
     state to coordinate across executors."""
-    from ..operators.similarity import spherical_kmeans
+    from ..operators.similarity import init_centroids, spherical_kmeans
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fin = spherical_kmeans(e, _init_centroids(e), iters=_KM_ITERS).select(
+    fin = spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS).select(
         "vec_id", "c_id"
     )
     sized = fin.groupBy("c_id").agg(F.count(F.lit(1)).alias("cell_n"))

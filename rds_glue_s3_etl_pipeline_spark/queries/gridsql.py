@@ -16,9 +16,9 @@ and ``QuerySpec.oracle_fn(sf_dir)`` is ``gen(n_rows(sf_dir))``.
 
 Every generator mirrors one Spark code path bit-for-bit:
 
-* ``_train_ctes``       <-> vector5._train_slice + _init_centroids +
-                            operators.similarity.spherical_kmeans_codebook
-* ``home_ctes``         <-> vector6._knn_index's level loop
+* ``_train_ctes``       <-> operators.similarity.train_codebook (md5
+                            training slice + init_centroids + Lloyd)
+* ``home_ctes``         <-> operators.similarity.adaptive_grid_tree
                             (kmeans_assign + block_sub_codebook/assign)
 * ``probe_ctes``        <-> vector6._knn_assignments (depth-scaled
                             multi-probe + the home-block union)
@@ -41,6 +41,7 @@ from __future__ import annotations
 import os
 
 from ..operators.graph import cc_oracle_ctes
+from ..operators.similarity import _TRAIN_SAMPLE
 
 _COS = "list_cosine_similarity"
 
@@ -82,7 +83,7 @@ def _train_ctes(k: int, iters: int, train_cap: int) -> str:
     """Lloyd trained on the md5-bounded training slice: ``e`` (all
     vectors), ``tr`` (the slice — identical to e wherever N <= cap,
     which is every oracle-sweep scale), ``cent0``..``cent{iters}``.
-    Mirrors _train_slice + _init_centroids + spherical_kmeans_codebook:
+    Mirrors operators.similarity.train_codebook:
     4dp assignment round with c_id tie-break, 6dp exact-decimal means
     re-entered into DOUBLE via the string hop."""
     parts = [
@@ -251,7 +252,6 @@ def knn_home_probe_ctes(n: int, nprobe: int) -> tuple[str, list[str], str]:
     ``n``-vector corpus: home assignment + ``pb`` probe set at
     ``nprobe``."""
     from .vector3 import _KM_ITERS
-    from .vector5 import _TRAIN_SAMPLE
 
     ks = knn_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
@@ -267,7 +267,6 @@ def q212_oracle(n: int) -> str:
     top-k neighbors under the tree adaptive_grid picks for an
     ``n``-vector corpus."""
     from .vector3 import _KM_ITERS
-    from .vector5 import _TRAIN_SAMPLE
     from .vector6 import _KNN_K
 
     ks = knn_ks(n)
@@ -322,8 +321,8 @@ cd AS (
 
 
 def sem_ks(n: int) -> list[int]:
-    """The SemDeDup tree for an ``n``-vector corpus — vector5.
-    _semantic_tree's rule (target block 4, coarse 16, fanout 8):
+    """The SemDeDup tree for an ``n``-vector corpus — q163/q169's
+    rule (target block 4, coarse 16, fanout 8):
     [16, 8] at the fixture, [16, 8, 4] at sf0.1."""
     from ..operators.similarity import adaptive_grid
     from .vector3 import _KM_K
@@ -341,7 +340,7 @@ def q163_oracle(n: int) -> str:
     keep-the-outlier survivor per component (min coarse cosine, vec_id
     tie-break)."""
     from .vector3 import _KM_ITERS, _SEM_THRESHOLD
-    from .vector5 import _PAIR_HUB_CAP, _TRAIN_SAMPLE
+    from .vector5 import _PAIR_HUB_CAP
 
     ks = sem_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
@@ -395,7 +394,7 @@ def tree_probe_oracle(n: int, target_cell: int) -> str:
     from ..operators.similarity import adaptive_grid
     from .vector import _NEAR_DUP_THRESHOLD
     from .vector3 import _KM_ITERS, _KM_K, _NPROBE, _SUB_K
-    from .vector5 import _TRAIN_SAMPLE, _TREE_PSUB
+    from .vector5 import _TREE_PSUB
 
     ks = adaptive_grid(n, target_cell, coarse_k=_KM_K, fanout=_SUB_K)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)
@@ -509,7 +508,6 @@ def q169_oracle(n: int) -> str:
     corpus's SemDeDup tree (one report row per level, however deep
     the tree is there)."""
     from .vector3 import _KM_ITERS
-    from .vector5 import _TRAIN_SAMPLE
 
     ks = sem_ks(n)
     home_sql, cols = home_ctes(ks, _KM_ITERS, _TRAIN_SAMPLE)

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import cc_oracle_ctes, connected_components_star
-from ..operators.similarity import spherical_kmeans
+from ..operators.similarity import init_centroids, spherical_kmeans
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -92,22 +92,6 @@ SELECT vec_id, c_id, cos_sim FROM assign{_KM_ITERS}
 """
 
 
-def _init_centroids(e, k: int = _KM_K, vec_alias: str = "cv"):
-    """q59's seedless pseudo-random codebook: the first k vectors in
-    md5(vec_id) order — deterministic on any engine, no RNG state.
-    The cast-to-binary md5 detail must match the DuckDB twin's
-    ``md5(CAST(vec_id AS VARCHAR))`` byte-for-byte; every sample-
-    codebook consumer (q142/q143/q146/q148/q149/q150) goes through
-    here so the discipline lives in one place."""
-    return (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
-        )
-        .limit(k)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias(vec_alias))
-    )
-
-
 @query("q142_kmeans_ivf", oracle=_Q142_ORACLE, tags=("vector", "similarity", "EXT"))
 def q142_kmeans_ivf(spark, sf_dir):
     """IVF assignment against a TRAINED codebook: {_KM_ITERS} rounds of
@@ -125,7 +109,7 @@ def q142_kmeans_ivf(spark, sf_dir):
     twin reproduces the final assignment bit for bit.
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    assigned = spherical_kmeans(e, _init_centroids(e), iters=_KM_ITERS)
+    assigned = spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
     return assigned.select("vec_id", "c_id", "cos_sim")
 
 
@@ -209,7 +193,7 @@ def _coarse_fin(spark, sf_dir):
     self-join consumes it twice and the survivor pick a third time."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return (
-        spherical_kmeans(e, _init_centroids(e), iters=_KM_ITERS)
+        spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         # Precompute each vector's norm ONCE: the pair cosine below is
         # then a single dot-product fold per pair instead of three
         # (dot + both norms) — same doubles, same operation order, so
@@ -524,7 +508,7 @@ def q146_pq_topk(spark, sf_dir):
     twin reproduces every score bit for bit.
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _init_centroids(e, k=_PQ_KSUB, vec_alias="v")
+    cent = init_centroids(e, _PQ_KSUB, vec_alias="v")
     ms = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
     subs = e.select("vec_id", ms, "embedding").select(
         "vec_id",
@@ -641,7 +625,7 @@ def q147_ivf_trained_topk(spark, sf_dir):
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fin = (
-        spherical_kmeans(e, _init_centroids(e), iters=_KM_ITERS)
+        spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         .select("vec_id", "c_id", "embedding")
         .localCheckpoint(eager=True)  # train once; probe + lookup reuse it
     )
@@ -696,7 +680,7 @@ def q148_codebook_balance(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     from ..operators.similarity import kmeans_assign, kmeans_update
 
-    cent0 = _init_centroids(e)
+    cent0 = init_centroids(e, _KM_K)
     # Round-0 assignment computed ONCE and reused both as the "sample"
     # report row source and as the first Lloyd update's input — calling
     # spherical_kmeans separately would redo this exact O(N x k) pass.
@@ -907,7 +891,7 @@ def q150_incremental_vector_dedup_ivf(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ev = e.select("vec_id", "embedding")
-    cent = spherical_kmeans_codebook(ev, _init_centroids(ev), iters=_KM_ITERS)
+    cent = spherical_kmeans_codebook(ev, init_centroids(ev, _KM_K), iters=_KM_ITERS)
     fin = (
         kmeans_assign(ev, cent)
         .select("vec_id", "c_id", "embedding")

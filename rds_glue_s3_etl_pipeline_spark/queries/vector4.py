@@ -27,7 +27,6 @@ from .vector3 import (
     _PQ_N_QUERIES,
     _PQ_TOP_K,
     _Q146_ORACLE,
-    _init_centroids,
     _pq_adc_topk,
 )
 
@@ -132,10 +131,10 @@ def q160_pq_trained_topk(spark, sf_dir):
     stays an M x {_PQ_KSUB}-row broadcast artifact; nothing new
     shuffles with corpus size.
     """
-    from ..operators.similarity import pq_encode, pq_train_codebooks
+    from ..operators.similarity import init_centroids, pq_encode, pq_train_codebooks
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _init_centroids(e, k=_PQ_KSUB, vec_alias="v")
+    cent = init_centroids(e, _PQ_KSUB, vec_alias="v")
     ms = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
     subs = e.select("vec_id", ms, "embedding").select(
         "vec_id",
@@ -250,12 +249,13 @@ def q158_pq_recall(spark, sf_dir):
 from pyspark.sql import Window
 from .vector3 import (
     _KM_ITERS,
+    _KM_K,
     _SEM_THRESHOLD,
     _SUB_K,
     _km_ctes,
     _survivor_groups,
 )
-from ..operators.similarity import spherical_kmeans
+from ..operators.similarity import init_centroids, spherical_kmeans
 
 _SUB2_K = 4
 
@@ -370,7 +370,7 @@ def q162_semantic_dedup_3level(spark, sf_dir):
     fixture."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fin = (
-        spherical_kmeans(e, _init_centroids(e), iters=_KM_ITERS)
+        spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         .withColumn("nrm", V.norm(F.col("embedding")))
         .localCheckpoint(eager=True)
     )

@@ -45,11 +45,9 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import vector as V
 from ..operators.similarity import (
-    adaptive_grid,
-    block_sub_assign,
-    block_sub_codebook,
-    kmeans_assign,
-    spherical_kmeans_codebook,
+    _TRAIN_SAMPLE,  # noqa: F401  re-exported: the tree build's training cap
+    adaptive_grid_tree,
+    kmeans_assign_topn,
 )
 from .gridsql import (
     q163_oracle,
@@ -66,7 +64,6 @@ from .vector3 import (
     _NPROBE,
     _SEM_THRESHOLD,
     _SUB_K,
-    _init_centroids,
     _survivor_groups,
 )
 
@@ -79,25 +76,6 @@ _ADAPT_TARGET_BLOCK = 4   # SemDeDup pair-join block size
 _IVF_TARGET_CELL = 32     # incremental-dedup probe cell size
 _TREE_TARGET_CELL = 8     # q165: forces a 2-level (16, 4) tree at sf0.01
 _TREE_PSUB = 2            # probe branching per sub-level of the tree
-
-# Broadcast the per-level sub-codebook only while it is genuinely
-# broadcast-sized; past this the level join keys on the block columns
-# and shuffle-joins co-located by block with identical results.
-_SUB_BROADCAST_ROWS = 1_000_000
-
-# Lloyd training corpus cap: the coarse codebook trains on the first
-# _TRAIN_SAMPLE vectors in seedless md5(vec_id) order (md5 is uniform,
-# so this is a uniform deterministic sample — same discipline as
-# _init_centroids, whose first-k pick is by construction a PREFIX of
-# this sample, so initialization is unchanged). Below the cap the
-# sample IS the corpus and training is bit-identical to the
-# fixture-pinned forms (oracle equality intact); above it the k-means
-# update rounds touch _TRAIN_SAMPLE rows instead of N — the standard
-# production pattern (train on a sample, assign everything) that
-# removes the O(N x k x iters) train term the 100x diagnosis measured
-# at 41.8 s of q163's wall. The final assignment pass stays over the
-# full corpus.
-_TRAIN_SAMPLE = 10_000
 
 # Per-block pair fan-out cap (q163): inside a block, every member is
 # compared against the block's first _PAIR_HUB_CAP members in md5
@@ -115,59 +93,6 @@ _TRAIN_SAMPLE = 10_000
 # hub — rare inside a block that is only large because it is dense.
 # Same df-cap discipline as MinHash's MAX_SHINGLE_DF=64.
 _PAIR_HUB_CAP = 64
-
-
-def _count_rows(e) -> int:
-    """Corpus count driving the grid choice — one column-pruned count
-    job (parquet row-group metadata); the only driver-side value the
-    adaptive family needs."""
-    return e.count()
-
-
-def _train_slice(e, id_col: str = "vec_id"):
-    """The deterministic Lloyd-training sample (see _TRAIN_SAMPLE):
-    first _TRAIN_SAMPLE rows in md5(id) order — TakeOrdered (per-
-    partition heap), never a global sort."""
-    return e.orderBy(
-        F.md5(F.col(id_col).cast("string").cast("binary")), F.col(id_col)
-    ).limit(_TRAIN_SAMPLE)
-
-
-def _semantic_tree(spark, sf_dir):
-    """q163/q169's shared index build: adaptive grid from the corpus
-    count, coarse codebook Lloyd-trained on the bounded md5 sample
-    (_TRAIN_SAMPLE), full-corpus assignment, then one md5-sampled
-    sub-codebook level per remaining grid entry. Returns
-    (fin, blocked, block_cols): the coarse assignment carrying the
-    survivor-policy cosine, the fully block-assigned corpus, and the
-    block key columns."""
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ks = adaptive_grid(
-        _count_rows(e), _ADAPT_TARGET_BLOCK, coarse_k=_KM_K, fanout=_SUB_K
-    )
-    train = _train_slice(e)
-    cent = spherical_kmeans_codebook(
-        train, _init_centroids(train, k=ks[0]), iters=_KM_ITERS
-    )
-    fin = (
-        kmeans_assign(e, cent)
-        .withColumn("nrm", V.norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
-    )
-    cur = fin.select("vec_id", "c_id", "embedding", "nrm")
-    block_cols = ["c_id"]
-    n_blocks = ks[0]
-    for i, k_sub in enumerate(ks[1:]):
-        cur = block_sub_assign(
-            cur,
-            tuple(block_cols),
-            k_sub,
-            f"s{i}_id",
-            hint_broadcast=(n_blocks * k_sub <= _SUB_BROADCAST_ROWS),
-        )
-        block_cols.append(f"s{i}_id")
-        n_blocks *= k_sub
-    return fin, cur, block_cols
 
 
 @query("q163_semantic_dedup_adaptive", oracle=q163_oracle, tags=("vector", "dedup", "graph", "EXT"))
@@ -198,7 +123,11 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
     groups rank every centroid identically at every depth; at fixture
     scale no block reaches the cap, so the oracle equality is exact).
     """
-    fin, cur, block_cols = _semantic_tree(spark, sf_dir)
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    tree = adaptive_grid_tree(
+        e, _ADAPT_TARGET_BLOCK, coarse_k=_KM_K, fanout=_SUB_K, iters=_KM_ITERS
+    )
+    block_cols = tree.block_cols
     # Hub-capped pair generation: rank members within their block by
     # the same seedless md5 order the codebooks use; the hub side is
     # rank <= cap, and (a.rank < b.rank) emits each unordered pair
@@ -208,7 +137,7 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
     w_rank = Window.partitionBy(*block_cols).orderBy(
         F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
     )
-    ranked = cur.withColumn("__brn", F.row_number().over(w_rank))
+    ranked = tree.blocked.withColumn("__brn", F.row_number().over(w_rank))
     a = ranked.filter(F.col("__brn") <= _PAIR_HUB_CAP).alias("a")
     b = ranked.alias("b")
     cond = F.col("a.__brn") < F.col("b.__brn")
@@ -224,7 +153,7 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
         .filter(cos >= _SEM_THRESHOLD)
         .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
     )
-    return _survivor_groups(fin, pairs)
+    return _survivor_groups(tree.coarse, pairs)
 
 
 # --------------------------------------------------------------------------
@@ -233,13 +162,11 @@ def q163_semantic_dedup_adaptive(spark, sf_dir):
 
 
 def _tree_probe_scored(spark, sf_dir, target_cell: int):
-    """Core of the tree probe (shared by q164/q165): build a
-    corpus-adaptive tree index (trained coarse codebook, sampled
-    sub-codebooks per level from adaptive_grid(count, target_cell)),
-    assign the whole corpus to leaf blocks, then score NEW vectors
-    (vec_id % 5 == 0) against history inside probed leaves only:
-    top-_NPROBE coarse cells, then the top-_TREE_PSUB sub-cells per
-    probed branch at each deeper level — _NPROBE x
+    """Core of the tree probe (shared by q164/q165): build the
+    corpus-adaptive tree (adaptive_grid_tree at target_cell), then
+    score NEW vectors (vec_id % 5 == 0) against history inside probed
+    leaves only: top-_NPROBE coarse cells, then the top-_TREE_PSUB
+    sub-cells per probed branch at each deeper level — _NPROBE x
     _TREE_PSUB^(depth-1) leaves per new vector.
 
     Returns the PRE-threshold candidate set (new_vec_id, hist_vec_id,
@@ -260,69 +187,29 @@ def _tree_probe_scored(spark, sf_dir, target_cell: int):
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ev = e.select("vec_id", "embedding")
-    ks = adaptive_grid(
-        _count_rows(ev), target_cell, coarse_k=_KM_K, fanout=_SUB_K
+    tree = adaptive_grid_tree(
+        ev, target_cell, coarse_k=_KM_K, fanout=_SUB_K, iters=_KM_ITERS
     )
-    train = _train_slice(ev)
-    cent = spherical_kmeans_codebook(
-        train, _init_centroids(train, k=ks[0]), iters=_KM_ITERS
-    )
-    fin = (
-        kmeans_assign(ev, cent)
-        .select("vec_id", "c_id", "embedding")
-        .localCheckpoint(eager=True)
-    )
-    cur = fin.withColumn("nrm", V.norm(F.col("embedding")))
-    block_cols = ["c_id"]
-    n_blocks = ks[0]
-    level_subs = []  # (prefix_cols, id_out, codebook df, bcast?) per sub-level
-    for i, k_sub in enumerate(ks[1:]):
-        id_out = f"s{i}_id"
-        # (Measured r16: lazily checkpointing each level's sub codebook
-        # for its two consumers ADDED jobs — the broadcast exchange
-        # already dedupes the shared subtree — so it stays lineage.)
-        sub = block_sub_codebook(cur, tuple(block_cols), k_sub, id_out)
-        can_bcast = n_blocks * k_sub <= _SUB_BROADCAST_ROWS
-        cur = block_sub_assign(
-            cur,
-            tuple(block_cols),
-            k_sub,
-            id_out,
-            hint_broadcast=can_bcast,
-            sub=sub,
-        )
-        level_subs.append((tuple(block_cols), id_out, sub, can_bcast))
-        block_cols.append(id_out)
-        n_blocks *= k_sub
+    block_cols = tree.block_cols
 
-    # Probe level 0: rank ALL coarse cells per new vector (broadcast
-    # codebook, the q150 discipline), keep the top nprobe; carry the
-    # query vector + norm down the tree for the deeper rankings.
+    # Probe level 0: each new vector's top-_NPROBE coarse cells (the
+    # q150 discipline); carry the query vector + norm down the tree for
+    # the deeper rankings.
     new_q = ev.filter(F.col("vec_id") % 5 == 0).select(
-        F.col("vec_id").alias("p_vec"),
-        F.col("embedding").alias("qv"),
-        V.norm(F.col("embedding")).alias("qnrm"),
+        F.col("vec_id").alias("p_vec"), F.col("embedding").alias("qv")
     )
-    w_p0 = Window.partitionBy("p_vec").orderBy(F.desc("c_cos"), F.asc("c_id"))
     probe = (
-        new_q.crossJoin(F.broadcast(cent))
-        .select(
-            "p_vec",
-            "qv",
-            "qnrm",
-            "c_id",
-            F.round(V.cosine(F.col("qv"), F.col("cv")), 4).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(w_p0))
-        .filter(F.col("rn") <= _NPROBE)
-        .drop("c_cos", "rn")
+        kmeans_assign_topn(new_q, tree.codebook, _NPROBE, id_col="p_vec", vec_col="qv")
+        .select("p_vec", "qv", "c_id")
+        .withColumn("qnrm", V.norm(F.col("qv")))
     )
     # Deeper levels: within each probed branch, rank that block's
     # sub-codebook and keep the top _TREE_PSUB sub-cells. Broadcast the
     # level codebook only while it is broadcast-sized (same bound as
     # the assignment side); past that the join keys on the block
     # prefix and shuffle-joins with identical results.
-    for prefix_cols, id_out, sub, can_bcast in level_subs:
+    for lvl in tree.levels:
+        prefix_cols, id_out = lvl.prefix, lvl.id_out
         scos = F.round(
             V.dot(F.col("qv"), F.col("__sv")) / (F.col("qnrm") * F.col("__snrm")),
             4,
@@ -331,7 +218,9 @@ def _tree_probe_scored(spark, sf_dir, target_cell: int):
             F.desc("__scos"), F.asc(id_out)
         )
         probe = (
-            probe.join(F.broadcast(sub) if can_bcast else sub, list(prefix_cols))
+            probe.join(
+                F.broadcast(lvl.sub) if lvl.broadcast else lvl.sub, list(prefix_cols)
+            )
             .withColumn("__scos", scos)
             .withColumn("rn", F.row_number().over(w_lvl))
             .filter(F.col("rn") <= _TREE_PSUB)
@@ -341,7 +230,7 @@ def _tree_probe_scored(spark, sf_dir, target_cell: int):
         "p_vec", *[F.col(c).alias(f"p_{c}") for c in block_cols]
     )
 
-    el = cur.join(e.select("vec_id", "label"), "vec_id")
+    el = tree.blocked.join(e.select("vec_id", "label"), "vec_id")
     hist = el.filter(F.col("vec_id") % 5 != 0).alias("h")
     new = el.filter(F.col("vec_id") % 5 == 0).alias("n")
     leaf_cond = None
@@ -576,12 +465,16 @@ def q169_adaptive_grid_report(spark, sf_dir):
     sub-codebook CTEs as q163's and aggregates block sizes per level;
     at fixture scale the grid is (16, 8), so two report rows,
     hash-exact."""
-    _fin, cur, block_cols = _semantic_tree(spark, sf_dir)
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    tree = adaptive_grid_tree(
+        e, _ADAPT_TARGET_BLOCK, coarse_k=_KM_K, fanout=_SUB_K, iters=_KM_ITERS
+    )
+    block_cols = tree.block_cols
     # The per-level stats below reference the fully blocked corpus once
     # PER LEVEL (depth ∝ log N plan copies of the level chain) —
     # materialize it once; the block columns and counts are all the
     # stats read, so the checkpoint is the narrow (ids + blocks) frame.
-    cur = cur.select("vec_id", *block_cols).localCheckpoint(eager=True)
+    cur = tree.blocked.select("vec_id", *block_cols).localCheckpoint(eager=True)
     out = None
     for lvl in range(len(block_cols)):
         sizes = cur.groupBy(*block_cols[: lvl + 1]).agg(

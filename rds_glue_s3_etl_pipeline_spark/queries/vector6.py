@@ -32,7 +32,7 @@ from ..catalog import load
 from ..functions import vector as V
 from .gridsql import knn_home_probe_ctes, mp_sym_ctes, q212_oracle
 from .registry import query
-from .vector3 import _KM_ITERS, _KM_K, _init_centroids
+from .vector3 import _KM_ITERS, _KM_K
 
 _KNN_K = 3
 # Fixed-size exact-arm query sample: md5-ordered LIMIT, so the recall
@@ -88,16 +88,9 @@ def _knn_index_build(spark, sf_dir) -> dict:
     disk, so a long-lived service session carries no residue (the q33
     mechanism, now applicable because consumers read parquet)."""
     from ..catalog import table_fingerprint
-    from ..operators.similarity import (
-        adaptive_grid,
-        block_sub_assign,
-        block_sub_codebook,
-        kmeans_assign,
-        spherical_kmeans_codebook,
-    )
+    from ..operators.similarity import adaptive_grid_tree, block_sub_assign
     from ..scratch import scratch_dir
     from ..session import released_blocks
-    from .vector5 import _SUB_BROADCAST_ROWS, _count_rows, _train_slice
 
     import os
 
@@ -114,64 +107,40 @@ def _knn_index_build(spark, sf_dir) -> dict:
     stale_keys = [k for k in _KNN_INDEX_CACHE if k[0] == key[0] and k != key]
 
     idx_dir = scratch_dir("knn_index_")
-    keep = ["vec_id", "embedding", "nrm"]
     with released_blocks(spark):
         e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        ks = adaptive_grid(_count_rows(e), _KNN_TARGET_BLOCK, coarse_k=_KM_K)
-        train = _train_slice(e)
-        cent = spherical_kmeans_codebook(
-            train, _init_centroids(train, k=ks[0]), iters=_KM_ITERS
+        tree = adaptive_grid_tree(
+            e, _KNN_TARGET_BLOCK, coarse_k=_KM_K, iters=_KM_ITERS
         )
-        if len(ks) == 1:
-            home = (
-                kmeans_assign(e, cent)
-                .withColumn("nrm", V.norm(F.col("embedding")))
-                .select(*keep, "c_id")
-            )
-            block_cols = ["c_id"]
+        ks, block_cols = tree.ks, tree.block_cols
+        if not tree.levels:
             hint = True
-            cent.select("c_id", "cv").write.mode("overwrite").parquet(
-                f"{idx_dir}/codebook.parquet"
-            )
+            home = tree.blocked
+            tree.codebook.write.mode("overwrite").parquet(f"{idx_dir}/codebook.parquet")
         else:
             # The trained coarse codebook is part of the artifact too:
             # a depth-scaled multi-probe query side (nprobe parent
             # cells at the second-deepest level) needs it when the
             # parent level IS the coarse level (len(ks) == 2).
-            cent.select("c_id", "cv").write.mode("overwrite").parquet(
-                f"{idx_dir}/coarse.parquet"
-            )
-            cur = (
-                kmeans_assign(e, cent)
-                .withColumn("nrm", V.norm(F.col("embedding")))
-                .select(*keep, "c_id")
-            )
-            block_cols = ["c_id"]
-            n_blocks = ks[0]
-            for i, k_sub in enumerate(ks[1:-1]):
-                cur = block_sub_assign(
-                    cur,
-                    tuple(block_cols),
-                    k_sub,
-                    f"s{i}_id",
-                    hint_broadcast=(n_blocks * k_sub <= _SUB_BROADCAST_ROWS),
-                )
-                block_cols.append(f"s{i}_id")
-                n_blocks *= k_sub
-            cur = cur.localCheckpoint(eager=True)
-            last_id = f"s{len(ks) - 2}_id"
-            hint = n_blocks * ks[-1] <= _SUB_BROADCAST_ROWS
+            tree.codebook.write.mode("overwrite").parquet(f"{idx_dir}/coarse.parquet")
             # Both sides score against the SAME sampled sub-codebook —
-            # persisted so a multi-probe query side reproduces the
-            # assignment bit-for-bit without retraining.
-            sub = block_sub_codebook(cur, tuple(block_cols), ks[-1], last_id)
-            sub.write.mode("overwrite").parquet(f"{idx_dir}/codebook.parquet")
-            sub = spark.read.parquet(f"{idx_dir}/codebook.parquet")
+            # persisted, and home assigned against the read-back bytes,
+            # so a multi-probe query side reproduces the assignment
+            # bit-for-bit without retraining.
+            deepest = tree.levels[-1]
+            hint = deepest.broadcast
+            deepest.sub.write.mode("overwrite").parquet(f"{idx_dir}/codebook.parquet")
             home = block_sub_assign(
-                cur, tuple(block_cols), ks[-1], last_id, hint_broadcast=hint, sub=sub
+                deepest.members,
+                deepest.prefix,
+                ks[-1],
+                deepest.id_out,
+                hint_broadcast=hint,
+                sub=spark.read.parquet(f"{idx_dir}/codebook.parquet"),
             )
-            block_cols.append(last_id)
-        home.write.mode("overwrite").parquet(f"{idx_dir}/home.parquet")
+        home.select("vec_id", "embedding", "nrm", *block_cols).write.mode(
+            "overwrite"
+        ).parquet(f"{idx_dir}/home.parquet")
 
     meta = {"dir": idx_dir, "block_cols": block_cols, "ks": ks, "hint": hint}
     _KNN_INDEX_CACHE[key] = meta
@@ -221,6 +190,7 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
     sample is a deterministic function of the (unchanged) block
     membership. No retraining anywhere on the query path."""
     from ..operators.similarity import (
+        _SUB_BROADCAST_ROWS,
         block_sub_assign,
         block_sub_codebook,
         kmeans_assign_topn,
@@ -287,7 +257,7 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
                 lvl_prefix,
                 k_sub,
                 lvl_id,
-                hint_broadcast=(math.prod(ks[: i + 2]) <= 1_000_000),
+                hint_broadcast=(math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS),
                 sub=sub_lvl,
                 nprobe=nprobe,
             )
@@ -1645,19 +1615,15 @@ def q236_knn_index_refresh(spark, sf_dir):
     corpus size; the merged state is a parquet append in production.
     Deeper trees freeze their sampled sub-codebooks the same way (the
     persisted index already carries coarse + deepest levels)."""
-    from ..operators.similarity import kmeans_assign, spherical_kmeans_codebook
+    from ..operators.similarity import kmeans_assign, train_codebook
     from ..scratch import scratch_dir
-    from .vector5 import _train_slice
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_new = F.col("vec_id") % _KNN_INC_MOD == 0
     hist = e.filter(~is_new)
 
     idx_dir = scratch_dir("q236_index_epoch_")
-    train = _train_slice(hist)
-    cent = spherical_kmeans_codebook(
-        train, _init_centroids(train, k=_KM_K), iters=_KM_ITERS
-    )
+    cent = train_codebook(hist, _KM_K, iters=_KM_ITERS)
     # the FROZEN artifact: codebook persisted, then read back so the
     # refresh path scores against the parquet bytes (what production
     # reads), not the in-session lineage

@@ -22,6 +22,26 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def physical_memory_bytes() -> int | None:
+    """Physical RAM of this host, or None where ``os.sysconf`` cannot
+    say."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset:
+    half of physical RAM, between 1g and 48g. A local-mode heap sized
+    past the host lets the JVM grow until the kernel kills it (10.4 GB
+    RSS on a 15 GB host) instead of collecting."""
+    ram = physical_memory_bytes()
+    if ram is None:
+        return "48g"
+    return f"{max(1024, min(48 * 1024, ram // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "rds_glue_s3_etl_pipeline_spark",
     cpus: int | None = None,
@@ -96,7 +116,10 @@ def get_spark(
         # would kill on a large cluster. The broadcast VALUES stay
         # k-row-bounded; only the build time needs the headroom.
         .config("spark.sql.broadcastTimeout", "3600")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

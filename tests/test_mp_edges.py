@@ -177,10 +177,8 @@ def test_q236_frozen_codebook_refresh_equals_full_assign(spark, tmp_path):
     from rds_glue_s3_etl_pipeline_spark.catalog import load
     from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
         kmeans_assign,
-        spherical_kmeans_codebook,
+        train_codebook,
     )
-    from rds_glue_s3_etl_pipeline_spark.queries.vector3 import _init_centroids
-    from rds_glue_s3_etl_pipeline_spark.queries.vector5 import _train_slice
 
     out = str(tmp_path / "fix236")
     _write_embeddings(spark, out, 50)
@@ -188,8 +186,7 @@ def test_q236_frozen_codebook_refresh_equals_full_assign(spark, tmp_path):
     is_new = F.col("vec_id") % 10 == 0
     hist = e.filter(~is_new)
 
-    train = _train_slice(hist)
-    cent = spherical_kmeans_codebook(train, _init_centroids(train, k=4), iters=2)
+    cent = train_codebook(hist, 4, iters=2)
     cent.select("c_id", "cv").write.mode("overwrite").parquet(
         str(tmp_path / "cb.parquet")
     )

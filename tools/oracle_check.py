@@ -19,7 +19,10 @@ sys.path.insert(0, ".")
 
 from rds_glue_s3_etl_pipeline_spark.catalog import TABLES  # noqa: E402
 from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY  # noqa: E402
-from rds_glue_s3_etl_pipeline_spark.session import get_spark  # noqa: E402
+from rds_glue_s3_etl_pipeline_spark.session import (  # noqa: E402
+    get_spark,
+    physical_memory_bytes,
+)
 
 
 _SIZE_RE = r"^\d+(\.\d+)?\s*(B|KB|MB|GB|TB|KiB|MiB|GiB|TiB)$"
@@ -30,11 +33,8 @@ def _default_memlimit() -> str:
     multi-CTE 10x twins on the build host, but unconditionally RAISING
     DuckDB's limit above physical memory on a smaller machine would
     make OOM more likely than the 80%-of-RAM default it replaces."""
-    import os
-
-    try:
-        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError):
+    ram = physical_memory_bytes()
+    if ram is None:
         return "24GB"
     return f"{min(24_000_000_000, int(ram * 0.8)) // 1_000_000}MB"
 
