@@ -108,12 +108,14 @@ def release_blocks(spark) -> None:
     """Unpersist every pinned RDD block between timed queries. Pinned
     checkpoint blocks left by a finished query tax whichever
     memory-hungry query runs next (SCALE.md round-9: a measured 20s
-    one-time eviction stall on a 1s query). Queries now release their
-    own scoped blocks (session.released_blocks), but bench measurement
-    hygiene should not DEPEND on every future query remembering to —
-    between timings nothing live references these blocks (results are
-    materialized to a noop sink and dropped), so a sweep-level release
-    keeps each number attributable to its own query."""
+    one-time eviction stall on a 1s query). A ``session.checkpoint``
+    made inside a ``session.released_blocks`` scope is released when
+    the scope exits, but a query only opens scopes around its own
+    terminal writes, and bench runs queries outside any scope — so
+    their other checkpoints stay pinned. Between timings nothing live
+    references these blocks (results are materialized to a noop sink
+    and dropped), so this session-wide release keeps each number
+    attributable to its own query."""
     m = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(m.keySet().toArray()):
         m.get(rid).unpersist(False)

@@ -35,6 +35,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import checkpoint
+
 
 def _merge_pair(words: DataFrame, a: str, b: str) -> DataFrame:
     """Greedy leftmost merge of the pair (a, b) in every symbol array:
@@ -196,5 +198,5 @@ def bpe_apply(
         # the previous plan and Catalyst's analysis cost explodes long
         # before data moves. Checkpoint on a cadence to bound depth.
         if (i + 1) % 64 == 0 and i + 1 < len(merges):
-            w = w.localCheckpoint(eager=True)
+            w = checkpoint(w)
     return w

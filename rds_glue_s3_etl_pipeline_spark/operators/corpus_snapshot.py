@@ -47,6 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
 from ..streaming.ops import _write_epoch_partition
 from .graph import connected_components_star
 from .skew import BROADCAST_ROW_GATE
@@ -290,7 +291,7 @@ def refresh_snapshot(
     # computed (one driver round-trip instead of three for the
     # inc/affected/gate chain). The upstream here is deterministic, so
     # partial-then-complete materialization cannot skew.
-    inc = new_incident_edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
+    inc = checkpoint(new_incident_edges.select("doc_a", "doc_b"), eager=False)
     seed_ids = (
         inc.select(F.col("doc_a").alias("doc_id"))
         .union(inc.select(F.col("doc_b").alias("doc_id")))
@@ -305,11 +306,11 @@ def refresh_snapshot(
     # separate build job, and this collect is the action that
     # materializes the incident-edge checkpoint chain (previously a
     # limit/count probe + a broadcast build job did the same work).
-    aff = (
+    aff = checkpoint(
         hist.join(seed_ids, "doc_id", "left_semi")
         .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     cl_type = hist.schema["cluster_id"].dataType.simpleString()
     apdf = aff.limit(BROADCAST_ROW_GATE + 1).toPandas()

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 # Size-adaptive hybrid (optimization round 15): distributed contraction
 # rounds run only while the (exactly counted) edge list exceeds this
 # gate; at or below it the remaining graph is solved on the driver with
@@ -137,14 +139,14 @@ def connected_components_star(
     smaller-or-equal neighbors (and itself) onto that minimum.
     Fixpoint = edge set stable; final edges are stars (node → root).
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
         # eager=False: the signature probe right after materializes the
         # checkpoint — one driver round-trip per round instead of two
         # (same blocks, same lineage truncation).
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
     def _sig(df: DataFrame) -> tuple:
@@ -204,15 +206,15 @@ def connected_components_star(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
+        e = checkpoint(
             oriented.join(mins, "u")
             .select(F.col("v").alias("u"), "m")
             .union(mins.select(F.col("u"), F.col("m")))
             .filter(F.col("u") != F.col("m"))
             .select("u", F.col("m").alias("v"))
-            .distinct()
+            .distinct(),
             # Materialized by the signature probe below (see init).
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         new_sig = _sig(e)
         if new_sig == sig:
@@ -278,59 +280,61 @@ def pagerank(
     # single materialization of the operator; everything node-shaped
     # (nodes, N, degrees) derives from it for free.
     e_deg = e.join(deg, "src").repartition("src").persist()
-    # No materializing count(): CacheManager substitutes the persisted
-    # plan by canonical-plan match at analysis time, so the cache fills
-    # inside the first real job instead of a dedicated one.
-    nodes = e_deg.select(F.col("src").alias("node")).distinct()
-    # One row; checkpointed (plan truncated immediately, computed by
-    # the first consuming job) so the teleport term in every iteration
-    # reads a constant instead of re-counting distinct nodes.
-    n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n")).localCheckpoint(
-        eager=False
-    )
-    teleport = 1.0 - damping  # IEEE double, bit-identical to the SQL twin
-    ranks = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    for i in range(iters):
-        # The rank table is O(nodes): tiny next to the edge list on a
-        # dimension-scale graph (broadcast_ranks=True — map-only join,
-        # the only exchange per round is the small post-agg one), but
-        # NOT broadcastable on a web-scale graph where nodes are
-        # billions — there the default co-partitioned shuffle join is
-        # the survivable plan (edge side pre-partitioned on src, only
-        # the rank table moves).
-        rank_side = ranks.withColumnRenamed("node", "src")
-        if broadcast_ranks:
-            rank_side = F.broadcast(rank_side)
-        shares = (
-            e_deg.join(rank_side, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("outdeg"))
-                .cast("decimal(24,14)")
-                .alias("share"),
+    try:
+        # No materializing count(): CacheManager substitutes the persisted
+        # plan by canonical-plan match at analysis time, so the cache fills
+        # inside the first real job instead of a dedicated one.
+        nodes = e_deg.select(F.col("src").alias("node")).distinct()
+        # One row; checkpointed (plan truncated immediately, computed by
+        # the first consuming job) so the teleport term in every iteration
+        # reads a constant instead of re-counting distinct nodes.
+        n_df = checkpoint(
+            nodes.agg(F.count(F.lit(1)).cast("double").alias("n")), eager=False
+        )
+        teleport = 1.0 - damping  # IEEE double, bit-identical to the SQL twin
+        ranks = nodes.crossJoin(F.broadcast(n_df)).select(
+            "node", (F.lit(1.0) / F.col("n")).alias("rank")
+        )
+        for i in range(iters):
+            # The rank table is O(nodes): tiny next to the edge list on a
+            # dimension-scale graph (broadcast_ranks=True — map-only join,
+            # the only exchange per round is the small post-agg one), but
+            # NOT broadcastable on a web-scale graph where nodes are
+            # billions — there the default co-partitioned shuffle join is
+            # the survivable plan (edge side pre-partitioned on src, only
+            # the rank table moves).
+            rank_side = ranks.withColumnRenamed("node", "src")
+            if broadcast_ranks:
+                rank_side = F.broadcast(rank_side)
+            shares = (
+                e_deg.join(rank_side, "src")
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("outdeg"))
+                    .cast("decimal(24,14)")
+                    .alias("share"),
+                )
             )
-        )
-        summed = shares.groupBy("node").agg(
-            F.sum("share").cast("string").cast("double").alias("s")
-        )
-        ranks = summed.crossJoin(F.broadcast(n_df)).select(
-            "node",
-            (F.lit(teleport) / F.col("n") + F.lit(damping) * F.col("s")).alias(
-                "rank"
-            ),
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    # Materialize the (node-sized) result, then release the cached
-    # edge list — the returned DataFrame must not lazily re-read a
-    # persisted plan we are about to unpersist, and without the
-    # unpersist every pagerank call pins another edge-list copy in
-    # executor storage for the session lifetime.
-    ranks = ranks.localCheckpoint(eager=True)
-    e_deg.unpersist()
-    return ranks
+            summed = shares.groupBy("node").agg(
+                F.sum("share").cast("string").cast("double").alias("s")
+            )
+            ranks = summed.crossJoin(F.broadcast(n_df)).select(
+                "node",
+                (F.lit(teleport) / F.col("n") + F.lit(damping) * F.col("s")).alias(
+                    "rank"
+                ),
+            )
+            if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+                ranks = checkpoint(ranks)
+        # Materialize the (node-sized) result before the finally
+        # releases the cached edge list: the returned DataFrame must
+        # not lazily re-read a persisted plan that is unpersisted.
+        return checkpoint(ranks)
+    finally:
+        # On every exit, a raising iteration included: otherwise each
+        # pagerank call pins another edge-list copy in executor
+        # storage for the session lifetime.
+        e_deg.unpersist()
 
 
 def cc_oracle_ctes(edges: str = "sym", out: str = "cl", node: str = "vec_id") -> str:

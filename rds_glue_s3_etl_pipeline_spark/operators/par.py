@@ -20,6 +20,7 @@ the back-fill is the documented mitigation.
 
 from __future__ import annotations
 
+import contextvars
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
@@ -29,10 +30,6 @@ T = TypeVar("T")
 # Branches per gate are 2-3; a small cap keeps concurrent jobs from
 # fighting for executor slots (guide: "2-3 jobs in flight is plenty").
 _MAX_WORKERS = 3
-
-# Worker-thread name prefix; session.released_blocks checks it (see
-# run_concurrently).
-PAR_THREAD_PREFIX = "rds-par"
 
 
 def run_concurrently(*thunks: Callable[[], T], max_workers: int | None = None) -> list[T]:
@@ -46,6 +43,10 @@ def run_concurrently(*thunks: Callable[[], T], max_workers: int | None = None) -
     eager actions (checkpoints, convergence loops) and return a lazy
     result frame over the materialized state; the caller composes those
     frames on its own thread.
+
+    Each thunk runs in its own copy of the caller's context, so a
+    branch's ``session.checkpoint`` records into the caller's
+    ``released_blocks`` scope, and a scope the branch opens is its own.
     """
     if len(thunks) <= 1:
         return [t() for t in thunks]
@@ -60,16 +61,7 @@ def run_concurrently(*thunks: Callable[[], T], max_workers: int | None = None) -
         wrapped = [wrap(t) for t in thunks]
     except Exception:  # pragma: no cover - fallback for odd runtimes
         wrapped = list(thunks)
-    with ThreadPoolExecutor(
-        max_workers=min(max_workers or _MAX_WORKERS, len(thunks)),
-        # The prefix is LOAD-BEARING: session.released_blocks detects it
-        # and skips releasing inside a worker thread — a context exiting
-        # on one branch would otherwise unpersist checkpoint blocks a
-        # SIBLING branch created after the context opened (observed as
-        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND mid-query). Hygiene is
-        # preserved by the caller's own main-thread context / the
-        # bench's between-query sweep.
-        thread_name_prefix=PAR_THREAD_PREFIX,
-    ) as pool:
-        futures = [pool.submit(w) for w in wrapped]
+    workers = min(max_workers or _MAX_WORKERS, len(thunks))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(contextvars.copy_context().run, w) for w in wrapped]
         return [f.result() for f in futures]

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import vector as V
+from ..session import checkpoint
 
 
 def cosine_topk(
@@ -310,7 +311,7 @@ def spherical_kmeans_codebook(
         # its own job — one driver round-trip per Lloyd round instead
         # of two, the same discipline as the CC loops. The plan is
         # truncated immediately either way.
-        cent = kmeans_update(assigned, vec_col).localCheckpoint(eager=False)
+        cent = checkpoint(kmeans_update(assigned, vec_col), eager=False)
     return cent
 
 
@@ -563,10 +564,9 @@ def adaptive_grid_tree(
     # driver-side value the grid choice needs
     ks = adaptive_grid(e.count(), target_block, coarse_k=coarse_k, fanout=fanout)
     codebook = train_codebook(e, ks[0], iters)
-    coarse = (
+    coarse = checkpoint(
         kmeans_assign(e, codebook)
         .withColumn("nrm", V.norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
     )
     blocked, block_cols, levels = coarse, ["c_id"], []
     for i, k_sub in enumerate(ks[1:]):
@@ -672,5 +672,5 @@ def pq_train_codebooks(
         # eager=False: materialized by the next round's codebook
         # broadcast (or the caller's first action) — see
         # spherical_kmeans_codebook.
-        cent = pq_update(enc).localCheckpoint(eager=False)
+        cent = checkpoint(pq_update(enc), eager=False)
     return cent

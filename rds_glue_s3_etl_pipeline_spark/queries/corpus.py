@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import text as X
 from ..scratch import scratch_dir
+from ..session import checkpoint
 from .registry import query
 from .events3 import _Q124_ORACLE
 from .text import _JACCARD_THRESHOLD, _SHINGLE_N
@@ -36,15 +37,15 @@ def _hashed_shingles(spark, sf_dir):
     IS the persisted signature store; only the new batch is shingled
     fresh."""
     d = load(spark, sf_dir, "documents")
-    return (
+    return checkpoint(
         X.exploded_word_shingles(d, "text", "doc_id", _SHINGLE_N)
         .select("doc_id", F.xxhash64("sh").alias("h"))
-        .distinct()
+        .distinct(),
         # eager=False: the signature build right after (_signatures,
         # eager) is the first consumer and materializes this checkpoint
         # in the same job — one driver action for the sh+sig store
         # instead of two. Later consumers read the persisted blocks.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
 
@@ -63,9 +64,7 @@ def _signatures(sh, num_perm=32):
     # these signatures, inside the CC gate collect) materializes the
     # store in its own job; every later fold reads the pinned blocks.
     # One driver action less per snapshot query, same sharing.
-    return minhash_from_hashed_shingles(sh, num_perm=num_perm).localCheckpoint(
-        eager=False
-    )
+    return checkpoint(minhash_from_hashed_shingles(sh, num_perm=num_perm), eager=False)
 
 
 def _staged_edges(sh, num_perm=32, bands=32, sig=None):
@@ -252,16 +251,21 @@ def q161_snapshot_stream_ingest(spark, sf_dir):
             # the full shingle table — candidates never reference docs
             # outside the sliced signatures.
             sig_seen = sig.join(seen_or_batch, "doc_id", "left_semi")
-            refresh_snapshot(
-                spark,
-                snapshot_dir,
-                batch_df.select("doc_id", "n_chars"),
-                _incident_edges(sh, batch_ids, sig=sig_seen),
-                epoch_id=target,
-                # read with before_epoch=target above — reuse it instead
-                # of a second watermark probe + parquet read per fold
-                base=base,
-            )
+            # foreachBatch calls this on a py4j thread, which sees none
+            # of the query's context variables: the fold opens its own
+            # scope, and what the refresh pins dies with its epoch write.
+            with released_blocks(spark):
+                refresh_snapshot(
+                    spark,
+                    snapshot_dir,
+                    batch_df.select("doc_id", "n_chars"),
+                    _incident_edges(sh, batch_ids, sig=sig_seen),
+                    epoch_id=target,
+                    # read with before_epoch=target above — reuse it
+                    # instead of a second watermark probe + parquet
+                    # read per fold
+                    base=base,
+                )
 
         stream = (
             spark.readStream.schema("doc_id long, n_chars long")

@@ -38,6 +38,7 @@ from ..catalog import load
 from ..functions import text as X
 from ..functions import vector as V
 from ..scratch import scratch_dir
+from ..session import checkpoint
 from .registry import query
 from .text import _SHINGLE_N
 from .vector3 import _KM_ITERS, _KM_K, _km_ctes
@@ -257,10 +258,9 @@ def q185_domain_temperature_mix(spark, sf_dir):
     # Materialize the domain table once (#domains rows): tot, pw, and
     # z all derive from it — without this the documents scan re-runs
     # for every branch (the plan audit counted 4 scans).
-    cell = (
+    cell = checkpoint(
         d.groupBy("lang", "source")
         .agg(F.sum("n_chars").cast("long").alias("chars"))
-        .localCheckpoint(eager=True)
     )
     tot = cell.agg(F.sum("chars").cast("long").alias("total_chars"))
     share = F.col("chars") / F.col("total_chars").cast("double")
@@ -337,11 +337,10 @@ def q186_ngram_novelty(spark, sf_dir):
     rows, not row-pairs; AQE skew handling covers a pathological
     shingle."""
     d = load(spark, sf_dir, "documents")
-    sh = (
+    sh = checkpoint(
         X.exploded_word_shingles(d, "text", "doc_id", _SHINGLE_N)
         .select("doc_id", F.xxhash64("sh").alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     novel = (F.col("df") == 1).cast("long")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..session import checkpoint
 from .registry import query
 
 _TRI_SUPPORT = 2
@@ -67,7 +68,7 @@ def q153_triangle_enum(spark, sf_dir):
     """
     op = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     a, b = op.alias("a"), op.alias("b")
-    e = (
+    e = checkpoint(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -83,7 +84,6 @@ def q153_triangle_enum(spark, sf_dir):
         # dominant stage and feeds FIVE plan paths below (deg via both
         # orientations, then the orient join's three inputs) —
         # materialize it rather than lean on exchange reuse.
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -96,7 +96,7 @@ def q153_triangle_enum(spark, sf_dir):
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    orient = (
+    orient = checkpoint(
         e.join(du, "u")
         .join(dv, "v")
         .select(
@@ -105,7 +105,6 @@ def q153_triangle_enum(spark, sf_dir):
         )
         # The oriented edge list is read three times below (two wedge
         # sides + the closing join) — materialize it once.
-        .localCheckpoint(eager=True)
     )
     w1 = orient.alias("w1")
     w2 = orient.alias("w2")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..multimodal.codec import attach_binary_payload, extract_features
+from ..session import checkpoint
 from .registry import query
 
 _Q35_ORACLE = """
@@ -325,13 +326,12 @@ def _ahash_reps(fp):
     """Identical-hash collapse: one combinable groupBy, checkpointed
     because both sides of the band join (and q189's member mapping)
     read it."""
-    return (
+    return checkpoint(
         fp.groupBy("b0", "b1", "b2", "b3")
         .agg(
             F.min("doc_id").alias("rep"),
             F.count(F.lit(1)).alias("n_members"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -444,7 +444,7 @@ def q189_image_dedup_keep_best(spark, sf_dir):
     size); the pair join and CC run over representatives only."""
     from ..operators.graph import connected_components_star
 
-    fp = _ahash_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
+    fp = checkpoint(_ahash_fingerprints(spark, sf_dir))
     reps = _ahash_reps(fp)
     edges = _ahash_rep_pairs(reps).select("rep_a", "rep_b")
     cc = connected_components_star(edges, src="rep_a", dst="rep_b").select(
@@ -613,7 +613,7 @@ def q193_incremental_image_dedup(spark, sf_dir):
     rebuild everything from source bytes."""
     from ..multimodal.codec import AHASH_BANDS
 
-    fp = _ahash_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
+    fp = checkpoint(_ahash_fingerprints(spark, sf_dir))
 
     def banded(df, prefix):
         return df.select(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as X
+from ..session import checkpoint
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -572,10 +573,10 @@ def q216_leakage_safe_split(spark, sf_dir):
     # all-pairs scoring join evaluated twice (once inside CC's own
     # checkpoint, once live in the final job). eager=False: CC's first
     # convergence probe materializes it.
-    pairs = (
+    pairs = checkpoint(
         q34_cosine_near_dup(spark, sf_dir)
-        .select("vec_a", "vec_b")
-        .localCheckpoint(eager=False)
+        .select("vec_a", "vec_b"),
+        eager=False,
     )
     cl = connected_components_star(pairs, src="vec_a", dst="vec_b").select(
         F.col("id").alias("vec_id"), "cluster_id"

@@ -25,6 +25,7 @@ from ..functions import text as X
 from ..functions import vector as V
 from ..operators.graph import pagerank
 from ..operators.similarity import cosine_topk
+from ..session import checkpoint
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -276,7 +277,7 @@ def q137_pagerank(spark, sf_dir):
     """
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    cs = (
+    cs = checkpoint(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
             (F.col("o_custkey") * 2).alias("c"),
@@ -287,7 +288,6 @@ def q137_pagerank(spark, sf_dir):
         # references it twice, and without this the orders ⋈ lineitem
         # join + distinct would execute twice (no exchange reuse across
         # the union branches).
-        .localCheckpoint(eager=True)
     )
     ed = cs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
         cs.select(F.col("s").alias("src"), F.col("c").alias("dst"))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as X
+from ..session import checkpoint
 from .registry import query
 
 
@@ -207,11 +208,10 @@ def q23_ngram_jaccard_pairs(spark, sf_dir):
     # Materialized once (localCheckpoint): sizes, the df aggregate,
     # and both self-join sides all read this set — without it the
     # explode+hash+distinct re-runs per branch.
-    sh = (
+    sh = checkpoint(
         X.exploded_word_shingles(d, "text", "doc_id", _SHINGLE_N)
         .select("doc_id", F.xxhash64("sh").alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sh2 = df_capped_shingles(sh)
@@ -264,11 +264,10 @@ def staged_near_dup_edges(spark, sf_dir):
     # truncates lineage and shares the materialized set (the same
     # pattern operators/graph.py uses per CC round). On a cluster this
     # is the "shingle table you compute once per corpus snapshot".
-    sh = (
+    sh = checkpoint(
         X.exploded_word_shingles(d, "text", "doc_id", _SHINGLE_N)
         .select("doc_id", F.xxhash64("sh").alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sig = minhash_from_hashed_shingles(sh, num_perm=32)
     cand = lsh_candidate_pairs(sig, num_perm=32, bands=32)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as X
+from ..session import checkpoint
 from .registry import query
 
 _TOK_CTE = """
@@ -410,11 +411,10 @@ def q126_incremental_dedup(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     # Materialized once (localCheckpoint): sizes, the df aggregate,
     # and both join sides read this set.
-    sh = (
+    sh = checkpoint(
         X.exploded_word_shingles(d, "text", "doc_id", _SHINGLE_N)
         .select("doc_id", F.xxhash64("sh").alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # min_df=2 is lossless here too: a global-df-1 shingle exists on

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as X
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from .registry import query
 
 _BPE_TOP = 20
@@ -213,7 +213,7 @@ def q156_bpe_compression(spark, sf_dir):
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    syms = words_to_symbols(words).localCheckpoint(eager=True)
+    syms = checkpoint(words_to_symbols(words))
     # bpe_train returns only the merge table; the encoded vocabulary is
     # the map-only bpe_apply over the same checkpointed symbols.
     merges = bpe_train(syms, n_merges=_BPE_MERGES)

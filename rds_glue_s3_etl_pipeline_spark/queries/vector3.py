@@ -33,7 +33,14 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import cc_oracle_ctes, connected_components_star
-from ..operators.similarity import init_centroids, spherical_kmeans
+from ..operators.similarity import (
+    init_centroids,
+    kmeans_assign,
+    kmeans_update,
+    spherical_kmeans,
+    spherical_kmeans_codebook,
+)
+from ..session import checkpoint
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -192,14 +199,13 @@ def _coarse_fin(spark, sf_dir):
     precomputed for the pair cosine, checkpointed because the pair
     self-join consumes it twice and the survivor pick a third time."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return (
+    return checkpoint(
         spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         # Precompute each vector's norm ONCE: the pair cosine below is
         # then a single dot-product fold per pair instead of three
         # (dot + both norms) — same doubles, same operation order, so
         # bit-identical to V.cosine.
         .withColumn("nrm", V.norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -624,10 +630,10 @@ def q147_ivf_trained_topk(spark, sf_dir):
     per-query cost is O(N/#cells).
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fin = (
+    # train once; probe + lookup reuse it
+    fin = checkpoint(
         spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         .select("vec_id", "c_id", "embedding")
-        .localCheckpoint(eager=True)  # train once; probe + lookup reuse it
     )
     qa = fin.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "c_id"
@@ -678,16 +684,12 @@ def q148_codebook_balance(spark, sf_dir):
     report, produced from the already-materialized assignment table.
     """
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    from ..operators.similarity import kmeans_assign, kmeans_update
-
     cent0 = init_centroids(e, _KM_K)
     # Round-0 assignment computed ONCE and reused both as the "sample"
     # report row source and as the first Lloyd update's input — calling
     # spherical_kmeans separately would redo this exact O(N x k) pass.
-    assign0 = kmeans_assign(e, cent0).localCheckpoint(eager=True)
-    cent = kmeans_update(assign0).localCheckpoint(eager=True)
-    for _ in range(_KM_ITERS - 1):
-        cent = kmeans_update(kmeans_assign(e, cent)).localCheckpoint(eager=True)
+    assign0 = checkpoint(kmeans_assign(e, cent0))
+    cent = spherical_kmeans_codebook(e, kmeans_update(assign0), iters=_KM_ITERS - 1)
     a0 = assign0.select(F.lit("sample").alias("codebook"), "c_id")
     aN = kmeans_assign(e, cent).select(
         F.lit("trained").alias("codebook"), "c_id"
@@ -887,15 +889,12 @@ def q150_incremental_vector_dedup_ivf(spark, sf_dir):
     nprobe={_NPROBE} recovers 18/28 with 16/18 identical best-matches,
     at 3.6x wall on 10x data vs the exact join's 12.8x (SCALE.md).
     """
-    from ..operators.similarity import kmeans_assign, spherical_kmeans_codebook
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ev = e.select("vec_id", "embedding")
     cent = spherical_kmeans_codebook(ev, init_centroids(ev, _KM_K), iters=_KM_ITERS)
-    fin = (
+    fin = checkpoint(
         kmeans_assign(ev, cent)
         .select("vec_id", "c_id", "embedding")
-        .localCheckpoint(eager=True)
     )
     el = fin.join(e.select("vec_id", "label"), "vec_id").withColumn(
         "nrm", V.norm(F.col("embedding"))

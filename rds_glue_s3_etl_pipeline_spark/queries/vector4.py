@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
+from ..session import checkpoint
 from .registry import query
 from .vector import _Q24_ORACLE, _TOP_K
 from .vector3 import (
@@ -136,17 +137,20 @@ def q160_pq_trained_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cent = init_centroids(e, _PQ_KSUB, vec_alias="v")
     ms = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
-    subs = e.select("vec_id", ms, "embedding").select(
-        "vec_id",
-        "m",
-        F.slice(
-            V.as_double_array("embedding"), F.col("m") * _PQ_DSUB + 1, _PQ_DSUB
-        ).alias("sv"),
-        # THREE consumers re-derived this scan+explode from parquet
-        # (two training encodes + the final encode): checkpoint it once,
-        # materialized by the first training job (eager=False). At
-        # 100 TB this is two saved corpus scans per run.
-    ).localCheckpoint(eager=False)
+    # THREE consumers re-derived this scan+explode from parquet (two
+    # training encodes + the final encode): checkpoint it once,
+    # materialized by the first training job (eager=False). At 100 TB
+    # this is two saved corpus scans per run.
+    subs = checkpoint(
+        e.select("vec_id", ms, "embedding").select(
+            "vec_id",
+            "m",
+            F.slice(
+                V.as_double_array("embedding"), F.col("m") * _PQ_DSUB + 1, _PQ_DSUB
+            ).alias("sv"),
+        ),
+        eager=False,
+    )
     csubs0 = cent.select("c_id", ms, "v").select(
         "c_id",
         "m",
@@ -369,10 +373,9 @@ def q162_semantic_dedup_3level(spark, sf_dir):
     trade is measured by comparing the three group counts on the same
     fixture."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fin = (
+    fin = checkpoint(
         spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         .withColumn("nrm", V.norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
     )
     sa = _sub_assign(
         fin.select("vec_id", "c_id", "embedding", "nrm"), ("c_id",), _SUB_K, "s_id"

@@ -49,6 +49,7 @@ from ..operators.similarity import (
     adaptive_grid_tree,
     kmeans_assign_topn,
 )
+from ..session import checkpoint
 from .gridsql import (
     q163_oracle,
     q166_oracle,
@@ -474,7 +475,7 @@ def q169_adaptive_grid_report(spark, sf_dir):
     # PER LEVEL (depth ∝ log N plan copies of the level chain) —
     # materialize it once; the block columns and counts are all the
     # stats read, so the checkpoint is the narrow (ids + blocks) frame.
-    cur = tree.blocked.select("vec_id", *block_cols).localCheckpoint(eager=True)
+    cur = checkpoint(tree.blocked.select("vec_id", *block_cols))
     out = None
     for lvl in range(len(block_cols)):
         sizes = cur.groupBy(*block_cols[: lvl + 1]).agg(

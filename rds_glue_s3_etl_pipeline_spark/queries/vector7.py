@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
+from ..session import checkpoint
 from .gridsql import mp_sym_ctes
 from .registry import query
 from .vector6 import (
@@ -694,7 +695,7 @@ def q235_eps_percolation_guard(spark, sf_dir):
     # hop-1 eps hit set of every sample vector — materialized once
     # (sample x N scored rows, linear) and shared by the degree
     # estimate, the probe pick and the hop-2 closure check.
-    hits = (
+    hits = checkpoint(
         e.join(F.broadcast(qs), F.col("vec_id") != F.col("q_id"))
         .filter(
             F.round(V.cosine(F.col("q_v"), F.col("embedding")), 4)
@@ -704,8 +705,8 @@ def q235_eps_percolation_guard(spark, sf_dir):
             "q_id",
             F.col("vec_id").alias("c_id"),
             F.col("embedding").alias("c_v"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     deg = qs.join(
         hits.groupBy("q_id").agg(F.count(F.lit(1)).alias("d")), "q_id", "left"

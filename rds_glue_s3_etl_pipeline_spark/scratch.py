@@ -56,13 +56,13 @@ def scratch_dir(prefix: str) -> str:
 def parquet_checkpoint(df, prefix: str):
     """Materialize a DataFrame to managed-scratch parquet and return
     the read-back frame — the release-safe alternative to an eager
-    ``localCheckpoint`` for intermediates a query reuses several times.
+    ``session.checkpoint`` for intermediates a query reuses several
+    times.
 
-    Unlike localCheckpoint (whose truncated-lineage RDD becomes
-    unrecoverable once its blocks are unpersisted, so the q33
-    released_blocks mechanism must skip it), the returned frame reads
-    from files: nothing stays pinned in the block manager, and any
-    later stage can recompute from disk. On a real cluster the same
+    Unlike a checkpoint (whose truncated-lineage RDD becomes
+    unrecoverable once its ``released_blocks`` scope unpersists it),
+    the returned frame reads from files: nothing stays pinned in the
+    block manager, and any later stage can recompute from disk. On a real cluster the same
     call writes a job-scoped object-store prefix.
     """
     d = scratch_dir(prefix)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -150,50 +151,52 @@ def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
     return spark.createDataFrame(table, schema)
 
 
+# Ids of the RDDs pinned by ``checkpoint`` inside the innermost open
+# ``released_blocks`` scope; None outside every scope.
+_SCOPE: ContextVar[list[int] | None] = ContextVar("released_blocks", default=None)
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` — the engine's one way to pin an
+    intermediate — recording the pinned RDD's id in the innermost
+    ``released_blocks`` scope, if one is open. The id is read off the
+    returned frame's ``LogicalRDD`` plan (the same RDD for eager and
+    lazy checkpoints; ``tests/test_session.py`` pins this reflection)."""
+    out = df.localCheckpoint(eager=eager)
+    ids = _SCOPE.get()
+    if ids is not None:
+        ids.append(out._jdf.queryExecution().logical().rdd().id())
+    return out
+
+
 @contextmanager
 def released_blocks(spark: SparkSession):
-    """Release every RDD block pinned INSIDE this context (eager
-    localCheckpoint / persist) when it exits.
+    """Unpersist, on every exit, exactly the blocks ``checkpoint``
+    pinned in this scope (not in a scope nested inside it).
 
-    Why: queries that materialize intermediates (shingle tables, CC
-    rounds, snapshot builds) pin MEMORY_AND_DISK blocks that outlive
-    the query — the result DataFrame they return reads from parquet or
-    driver-side data, so the blocks are garbage, but the Python-ref ->
-    JVM-GC -> ContextCleaner chain reclaims them lazily. Until then
-    they squat in the unified memory pool, and the NEXT memory-hungry
-    job pays a one-time eviction storm (measured: 20s on a query that
-    runs in 1s clean). Scoped release (only ids created inside the
-    context) cannot touch blocks some earlier live DataFrame still
-    depends on.
+    Checkpoint blocks outlive the query that made them until the
+    Python-ref -> JVM-GC -> ContextCleaner chain reclaims them; until
+    then the NEXT memory-hungry job pays a one-time eviction storm
+    (measured: 20s on a query that runs in 1s clean, SCALE.md round 9).
+    Only valid when nothing RETURNED from the scope still reads the
+    released blocks: the scope must end with terminal writes or
+    bounded collects.
 
-    Only valid when nothing RETURNED from the context carries lineage
-    into the released blocks — i.e. the context must end with terminal
-    writes (parquet/snapshot) or bounded collects.
-
-    Concurrency guard: inside an operators/par.py worker thread the
-    release is SKIPPED — the before/after RDD-id diff cannot tell this
-    branch's blocks from a sibling branch's, so releasing here would
-    unpersist checkpoints the sibling is mid-query on (observed as
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). The caller's own main-thread
-    context or the bench's between-query sweep still reclaims them.
+    The scope is a context variable, so it follows the code, not the
+    thread: ``operators.par.run_concurrently`` runs each branch in a
+    copy of the caller's context (a branch records into the caller's
+    scope; a scope the branch opens is its own). A ``foreachBatch``
+    callback runs on a py4j thread that sees no scope and must open
+    its own.
     """
-    import threading
-
-    # Imported here (not module-top) to avoid a session<->operators
-    # import cycle; sharing the constant means a renamed prefix in
-    # par.py cannot silently re-enable the cross-branch unpersist bug
-    # this guard exists to prevent (round-15 ADVICE #2).
-    from .operators.par import PAR_THREAD_PREFIX
-
-    if threading.current_thread().name.startswith(PAR_THREAD_PREFIX):
-        yield
-        return
-    jsc = spark.sparkContext._jsc
-    before = {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+    ids: list[int] = []
+    token = _SCOPE.set(ids)
     try:
         yield
     finally:
-        m = jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            if int(rid) not in before:
-                m.get(rid).unpersist(False)
+        _SCOPE.reset(token)
+        pinned = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in ids:
+            rdd = pinned.get(rid)
+            if rdd is not None:
+                rdd.unpersist(False)

@@ -516,6 +516,50 @@ def test_pagerank_symmetric_pair_and_star(spark):
     assert sum(r1.values()) == pytest.approx(1.0, rel=1e-9)
 
 
+def test_pagerank_releases_edge_cache_when_an_iteration_raises(spark, monkeypatch):
+    """An iteration that raises leaves neither the persisted edge list
+    (its ``finally``) nor the checkpoints made so far (the caller's
+    ``released_blocks`` scope) behind."""
+    from pyspark import StorageLevel
+
+    from rds_glue_s3_etl_pipeline_spark import session
+    from rds_glue_s3_etl_pipeline_spark.operators import graph
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
+    frame_cls = type(edges)  # the classic (non-Connect) DataFrame class
+    persisted = []
+    real_persist = frame_cls.persist
+
+    def recording_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    real_checkpoint, calls = graph.checkpoint, []
+
+    def failing_checkpoint(df, eager=True):
+        out = real_checkpoint(df, eager)  # eager: fills the edge cache
+        calls.append(eager)
+        if len(calls) == 2:  # the N table, then the first rank round
+            raise RuntimeError("iteration failed")
+        return out
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    monkeypatch.setattr(graph, "checkpoint", failing_checkpoint)
+    jsc = spark.sparkContext._jsc
+
+    def pinned() -> set[int]:
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = pinned()
+    with pytest.raises(RuntimeError, match="iteration failed"):
+        with session.released_blocks(spark):
+            graph.pagerank(edges, iters=3, checkpoint_every=1)
+    assert calls == [False, True]
+    assert len(persisted) == 1
+    assert persisted[0].storageLevel == StorageLevel(False, False, False, False, 1)
+    assert pinned() - before == set()
+
+
 def test_sq8_dequantize_known_codes(spark):
     """SQ8 round-trip on hand values: exact endpoints, the 0.5 midpoint
     lands on code 128, and a constant dimension (max == min) passes

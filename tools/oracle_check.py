@@ -22,6 +22,7 @@ from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY  # noqa: E402
 from rds_glue_s3_etl_pipeline_spark.session import (  # noqa: E402
     get_spark,
     physical_memory_bytes,
+    released_blocks,
 )
 
 
@@ -142,6 +143,11 @@ def main() -> int:
     )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    # One line per query, in order, greppable in a redirected log: no
+    # console progress bar (it redraws with carriage returns and no
+    # newline) and no block-buffered stdout.
+    sys.stdout.reconfigure(line_buffering=True)
+    quiet = {"spark.ui.showConsoleProgress": "false"}
 
     if args.vanilla:
         from pyspark.sql import SparkSession
@@ -149,10 +155,11 @@ def main() -> int:
         spark = (
             SparkSession.builder.master("local[8]")
             .appName("oracle_check_vanilla")
+            .config(map=quiet)
             .getOrCreate()
         )
     else:
-        spark = get_spark("oracle_check", cpus=8)
+        spark = get_spark("oracle_check", cpus=8, extra_conf=quiet)
     con = duck_connect(args.sf)
     names = args.names or list(REGISTRY)
     results: dict[str, dict] = {}
@@ -160,7 +167,10 @@ def main() -> int:
     for name in names:
         spec = REGISTRY[name]
         try:
-            sdf = spec.fn(spark, args.sf).toPandas()
+            # A long sweep is a long-lived session: release what each
+            # query pinned before the next one runs.
+            with released_blocks(spark):
+                sdf = spec.fn(spark, args.sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             results[name] = {"status": "fail", "err": f"spark: {e}"[:300]}

@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, ".")
 
+from bench import release_blocks  # noqa: E402
 from rds_glue_s3_etl_pipeline_spark.queries import REGISTRY  # noqa: E402
 from rds_glue_s3_etl_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -98,10 +99,7 @@ def main() -> None:
             stats["wall"] = round(wall, 3)
             if best is None or wall < best["wall"]:
                 best = stats
-        # release any blocks the query pinned (bench.py hygiene)
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(m.keySet().toArray()):
-            m.get(rid).unpersist(False)
+        release_blocks(spark)
         results[name] = best
         print(
             f"{name:42s} wall {best['wall']:7.2f}s  jobs {best['jobs']:4d}  "
