@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (north-star extension):
-brute-force cosine top-k as the exact baseline, and random-hyperplane
-LSH bucketing as the 100 TB scale path (candidates only within a
-bucket).
+the exact cosine pair join (cosine_pairs) with its top-k tail, brute-
+force cosine top-k as the exact baseline, and random-hyperplane LSH
+bucketing as the 100 TB scale path (candidates only within a bucket).
 
 The hyperplanes are pseudo-random but fully deterministic: component
 (plane p, dim d) is derived from xxhash64(p, d) mapped to [-1, 1] —
@@ -18,6 +18,62 @@ from ..functions import vector as V
 from ..session import checkpoint
 
 
+def cosine_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    block_cols=(),
+) -> DataFrame:
+    """The exact cosine pair join every dedup, k-NN and eps-graph
+    scorer refines through: (*block_cols, a, b, cs), ``cs`` the
+    4dp-rounded cosine of a's and b's embeddings.
+
+    Each side contributes only ``vec_id`` (as a / b), ``embedding`` and
+    ``block_cols``, and its norm is folded once per row before the
+    join, so a pair costs one dot-product fold instead of three — the
+    same doubles in the same order as :func:`V.cosine`, bit for bit.
+    ``right=None`` is the self-join on a < b (each unordered pair
+    once); two frames give the directed pairs a != b. With
+    ``block_cols`` the sides equi-join on them; without, ``right`` is
+    broadcast into a nested-loop join (a sample or fixture-bounded
+    side — the exact arms and truth anchors).
+    """
+    block_cols = list(block_cols)
+
+    def side(df, name):
+        return df.select(
+            *block_cols,
+            F.col("vec_id").alias(name),
+            F.col("embedding").alias(f"{name}_v"),
+            V.norm(F.col("embedding")).alias(f"{name}_n"),
+        )
+
+    a = side(left, "a")
+    b = side(left if right is None else right, "b")
+    keep = F.col("a") < F.col("b") if right is None else F.col("a") != F.col("b")
+    pairs = (
+        a.join(b, block_cols).filter(keep)
+        if block_cols
+        else a.join(F.broadcast(b), keep)
+    )
+    cs = F.round(
+        V.dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")), 4
+    )
+    return pairs.select(*block_cols, "a", "b", cs.alias("cs"))
+
+
+def pair_topk(
+    pairs: DataFrame, k: int, by: str = "a", rank_col: str = "rank"
+) -> DataFrame:
+    """The top-k tail of :func:`cosine_pairs`: each ``by`` id's ``k``
+    best pairs by cs desc, ties to the smaller other id, ranked 1..k
+    in ``rank_col`` (a long)."""
+    other = "b" if by == "a" else "a"
+    w = Window.partitionBy(by).orderBy(F.desc("cs"), F.asc(other))
+    return pairs.withColumn(
+        rank_col, F.row_number().over(w).cast("long")
+    ).filter(F.col(rank_col) <= k)
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -25,33 +81,28 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
-    round_digits: int | None = 4,
 ) -> DataFrame:
-    """Exact top-k: broadcast the (small) query set against the corpus,
-    score with zip_with/aggregate (JVM, codegen), rank per query.
+    """Exact top-k (query_id_col, id_col, cos_sim, rank): broadcast the
+    (small) query set against the corpus, score the 4dp cosine with
+    zip_with/aggregate (JVM, codegen), rank per query.
 
     One pass over the corpus, no shuffle until the final per-query
     top-k window over #queries × #corpus scored rows (use a LIMIT-ed
     query set; for query sets too big to broadcast, use lsh_buckets).
+    Not on :func:`cosine_pairs`: that form fails q158 at sf0.1 with
+    Spark's INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when joined to the PQ
+    arm (see CHANGES.md).
     """
-    cos = V.cosine(F.col(vec_col), F.col("q_vec"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    scored = (
-        embeddings.join(
-            F.broadcast(
-                queries.select(
-                    F.col(query_id_col), F.col(vec_col).alias("q_vec")
-                )
-            ),
-            F.col(id_col) != F.col(query_id_col),
-        )
-        .select(query_id_col, id_col, cos.alias("cos_sim"))
-    )
+    cos = F.round(V.cosine(F.col(vec_col), F.col("q_vec")), 4)
+    scored = embeddings.join(
+        F.broadcast(
+            queries.select(F.col(query_id_col), F.col(vec_col).alias("q_vec"))
+        ),
+        F.col(id_col) != F.col(query_id_col),
+    ).select(query_id_col, id_col, cos.alias("cos_sim"))
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 
@@ -92,26 +143,22 @@ def lsh_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: bucket by hyperplane LSH, then
-    exact cosine only within buckets — the scalable variant of an
-    all-pairs cosine join."""
+    """Embedding near-duplicate pairs (vec_a, vec_b, cos_sim): bucket
+    by hyperplane LSH, then exact 4dp cosine only within buckets — the
+    scalable variant of an all-pairs cosine join."""
     b = embeddings.select(
-        id_col, vec_col, lsh_bucket(F.col(vec_col), n_planes).alias("bucket")
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        lsh_bucket(F.col(vec_col), n_planes).alias("bucket"),
     )
-    a, c = b.alias("a"), b.alias("b")
-    cos = V.cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
     return (
-        a.join(
-            c,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        cosine_pairs(b, block_cols=["bucket"])
+        .filter(F.col("cs") >= threshold)
         .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-            cos.alias("cos_sim"),
+            F.col("a").alias("vec_a"),
+            F.col("b").alias("vec_b"),
+            F.col("cs").alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
     )
 
 

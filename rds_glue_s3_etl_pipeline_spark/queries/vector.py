@@ -16,7 +16,7 @@ from ..operators.dedup import (
     simhash,
     simhash_near_pairs,
 )
-from ..operators.similarity import cosine_topk, lsh_cosine_pairs
+from ..operators.similarity import cosine_pairs, cosine_topk, lsh_cosine_pairs
 from .registry import query
 
 _N_QUERIES = 8
@@ -78,24 +78,16 @@ def q34_cosine_near_dup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs with label blocking (the
     generic blocked-join shape of embedding dedup: compare only within
     a coarse partition, here the label)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    a, b = e.alias("a"), e.alias("b")
-    cos = F.round(V.cosine(F.col("a.embedding"), F.col("b.embedding")), 4)
+    e = load(spark, sf_dir, "embeddings")
     return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        cosine_pairs(e, block_cols=["label"])
+        .filter(F.col("cs") >= _NEAR_DUP_THRESHOLD)
         .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.label").cast("long").alias("label"),
-            cos.alias("cos_sim"),
+            F.col("a").alias("vec_a"),
+            F.col("b").alias("vec_b"),
+            F.col("label").cast("long").alias("label"),
+            F.col("cs").alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= _NEAR_DUP_THRESHOLD)
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import connected_components_star
+from ..operators.similarity import cosine_pairs, pair_topk
 from .registry import query
 from .text import _Q23_ORACLE
 
@@ -323,30 +324,15 @@ def q132_incremental_vector_dedup(spark, sf_dir):
     best-match window are identical. Best match per new vector is a
     per-new-id window over candidates (bounded by the block).
     """
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    new = e.filter(F.col("vec_id") % 5 == 0).alias("n")
-    hist = e.filter(F.col("vec_id") % 5 != 0).alias("h")
-    cos = F.round(V.cosine(F.col("n.embedding"), F.col("h.embedding")), 4)
-    scored = (
-        new.join(hist, F.col("n.label") == F.col("h.label"))
-        .select(
-            F.col("n.vec_id").alias("new_vec_id"),
-            F.col("h.vec_id").alias("hist_vec_id"),
-            F.col("n.label").cast("long").alias("label"),
-            cos.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= _NEAR_DUP_THRESHOLD)
+    e = load(spark, sf_dir, "embeddings")
+    new = e.filter(F.col("vec_id") % 5 == 0)
+    hist = e.filter(F.col("vec_id") % 5 != 0)
+    scored = cosine_pairs(new, hist, ["label"]).filter(
+        F.col("cs") >= _NEAR_DUP_THRESHOLD
     )
-    w = Window.partitionBy("new_vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("hist_vec_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "new_vec_id",
-            F.col("hist_vec_id").alias("best_hist_vec_id"),
-            "label",
-            "cos_sim",
-        )
+    return pair_topk(scored, 1).select(
+        F.col("a").alias("new_vec_id"),
+        F.col("b").alias("best_hist_vec_id"),
+        F.col("label").cast("long").alias("label"),
+        F.col("cs").alias("cos_sim"),
     )

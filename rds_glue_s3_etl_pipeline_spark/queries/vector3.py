@@ -34,6 +34,7 @@ from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import cc_oracle_ctes, connected_components_star
 from ..operators.similarity import (
+    cosine_pairs,
     init_centroids,
     kmeans_assign,
     kmeans_update,
@@ -157,6 +158,17 @@ WHERE m.rn = 1
 """
 
 
+def _sem_pairs(blocked, block_cols):
+    """SemDeDup pair proposals (va, vb): each unordered within-block
+    pair of ``blocked`` whose 4dp cosine reaches _SEM_THRESHOLD — the
+    blocked self-join of q143/q149/q162."""
+    return (
+        cosine_pairs(blocked, block_cols=block_cols)
+        .filter(F.col("cs") >= _SEM_THRESHOLD)
+        .select(F.col("a").alias("va"), F.col("b").alias("vb"))
+    )
+
+
 def _survivor_groups(fin, pairs):
     """The SemDeDup decision tail shared by q143/q149 (and any future
     blocking variant): pairs → star-contraction components → one
@@ -196,15 +208,12 @@ def _coarse_fin(spark, sf_dir):
     q149 (and computed ONCE by q167, whose exact_1level and
     fixed_2level branches are defined over the identical training):
     spherical k-means from the seedless init, with each vector's norm
-    precomputed for the pair cosine, checkpointed because the pair
-    self-join consumes it twice and the survivor pick a third time."""
+    (block_sub_assign's nrm_col, for q149's sub-level), checkpointed
+    because the pair self-join consumes it twice and the survivor pick
+    a third time."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return checkpoint(
         spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
-        # Precompute each vector's norm ONCE: the pair cosine below is
-        # then a single dot-product fold per pair instead of three
-        # (dot + both norms) — same doubles, same operation order, so
-        # bit-identical to V.cosine.
         .withColumn("nrm", V.norm(F.col("embedding")))
     )
 
@@ -231,22 +240,7 @@ def q143_semantic_dedup(spark, sf_dir, *, fin=None):
     # ``fin`` so its exact_1level / fixed_2level branches train once.
     if fin is None:
         fin = _coarse_fin(spark, sf_dir)
-    a = fin.select("vec_id", "c_id", "embedding", "nrm").alias("a")
-    b = fin.select("vec_id", "c_id", "embedding", "nrm").alias("b")
-    cos = F.round(
-        V.dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.nrm") * F.col("b.nrm")),
-        4,
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.c_id") == F.col("b.c_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= _SEM_THRESHOLD)
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    )
+    pairs = _sem_pairs(fin, ["c_id"])
     return _survivor_groups(fin, pairs)
 
 
@@ -799,24 +793,8 @@ def q149_semantic_dedup_2level(spark, sf_dir, *, fin=None):
         ("c_id",),
         _SUB_K,
         "s_id",
-    ).select("vec_id", "c_id", "s_id", "embedding", "nrm")
-    a = sa.alias("a")
-    b = sa.alias("b")
-    cos = F.round(
-        V.dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.nrm") * F.col("b.nrm")),
-        4,
     )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.c_id") == F.col("b.c_id"))
-            & (F.col("a.s_id") == F.col("b.s_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= _SEM_THRESHOLD)
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    )
+    pairs = _sem_pairs(sa, ["c_id", "s_id"])
     return _survivor_groups(fin, pairs)
 
 

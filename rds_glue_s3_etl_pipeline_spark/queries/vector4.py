@@ -250,13 +250,13 @@ def q158_pq_recall(spark, sf_dir):
 # ~N/(16*8*4) at assignment cost of 16+8+4 scores per vector.
 # --------------------------------------------------------------------------
 
-from pyspark.sql import Window
 from .vector3 import (
     _KM_ITERS,
     _KM_K,
     _SEM_THRESHOLD,
     _SUB_K,
     _km_ctes,
+    _sem_pairs,
     _survivor_groups,
 )
 from ..operators.similarity import init_centroids, spherical_kmeans
@@ -381,22 +381,5 @@ def q162_semantic_dedup_3level(spark, sf_dir):
         fin.select("vec_id", "c_id", "embedding", "nrm"), ("c_id",), _SUB_K, "s_id"
     )
     sa2 = _sub_assign(sa, ("c_id", "s_id"), _SUB2_K, "s2_id")
-    a = sa2.alias("a")
-    b = sa2.alias("b")
-    cos = F.round(
-        V.dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.nrm") * F.col("b.nrm")),
-        4,
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.c_id") == F.col("b.c_id"))
-            & (F.col("a.s_id") == F.col("b.s_id"))
-            & (F.col("a.s2_id") == F.col("b.s2_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= _SEM_THRESHOLD)
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    )
+    pairs = _sem_pairs(sa2, ["c_id", "s_id", "s2_id"])
     return _survivor_groups(fin, pairs)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
+from ..operators.similarity import cosine_pairs, cosine_topk, pair_topk
 from .gridsql import knn_home_probe_ctes, mp_sym_ctes, q212_oracle
 from .registry import query
 from .vector3 import _KM_ITERS, _KM_K
@@ -209,58 +210,45 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
         ).select("vec_id", "embedding", "c_id")
         return home, probe, block_cols
     last_id = block_cols[-1]
-    if len(ks) == 2:
-        # Parent level is the trained coarse level: re-probe it from
-        # the persisted coarse codebook (same 4dp cosine + c_id
-        # tie-break as the build).
-        coarse = spark.read.parquet(f"{meta['dir']}/coarse.parquet")
-        par = (
-            kmeans_assign_topn(home.select("vec_id", "embedding"), coarse, nprobe)
-            .select("vec_id", "embedding", "c_id")
-            .withColumn("nrm", V.norm(F.col("embedding")))
-        )
-    else:
-        # Depth >= 3 (beyond every oracle-sweep scale): descend with
-        # ``nprobe`` at EVERY level above the deepest, starting from
-        # the persisted coarse codebook — round 12's widening of the
-        # round-11 rule, which kept the query's home path down to the
-        # second-deepest level and so could never cross a coarse or
-        # intermediate boundary (q214's 10x recall sat at 0.417 with
-        # 0.037 of floor margin; cross-coarse true neighbors were
-        # unreachable by construction). Intermediate sub-codebooks are
-        # recomputed from home membership — bit-identical to the
-        # build's (deterministic md5 sample of unchanged blocks). The
-        # deepest keep-budget stays nprobe², so the CANDIDATE join
-        # cost is unchanged; only assignment-side scoring grows, by
-        # ~nprobe^level x k_sub scored rows per level — still
-        # O(nprobe^depth) = poly-log-N work per vector, far below the
-        # candidate term.
-        import math
+    # Descend from the persisted coarse codebook with ``nprobe`` at
+    # EVERY level above the deepest (none when the parent level IS the
+    # coarse level) — round 12's widening of the round-11 rule, which
+    # kept the query's home path down to the second-deepest level and
+    # so could never cross a coarse or intermediate boundary (q214's
+    # 10x recall sat at 0.417 with 0.037 of floor margin; cross-coarse
+    # true neighbors were unreachable by construction). Intermediate
+    # sub-codebooks are recomputed from home membership — bit-identical
+    # to the build's (deterministic md5 sample of unchanged blocks).
+    # The deepest keep-budget stays nprobe², so the CANDIDATE join cost
+    # is unchanged; only assignment-side scoring grows, by ~nprobe^level
+    # x k_sub scored rows per level — still O(nprobe^depth) = poly-log-N
+    # work per vector, far below the candidate term.
+    import math
 
-        coarse = spark.read.parquet(f"{meta['dir']}/coarse.parquet")
-        par = (
-            kmeans_assign_topn(home.select("vec_id", "embedding"), coarse, nprobe)
-            .select("vec_id", "embedding", "c_id")
-            .withColumn("nrm", V.norm(F.col("embedding")))
+    coarse = spark.read.parquet(f"{meta['dir']}/coarse.parquet")
+    par = (
+        kmeans_assign_topn(home.select("vec_id", "embedding"), coarse, nprobe)
+        .select("vec_id", "embedding", "c_id")
+        .withColumn("nrm", V.norm(F.col("embedding")))
+    )
+    for i, k_sub in enumerate(ks[1:-1]):
+        lvl_prefix = tuple(block_cols[: i + 1])
+        lvl_id = block_cols[i + 1]
+        sub_lvl = block_sub_codebook(
+            home.select("vec_id", "embedding", "nrm", *lvl_prefix),
+            lvl_prefix,
+            k_sub,
+            lvl_id,
         )
-        for i, k_sub in enumerate(ks[1:-1]):
-            lvl_prefix = tuple(block_cols[: i + 1])
-            lvl_id = block_cols[i + 1]
-            sub_lvl = block_sub_codebook(
-                home.select("vec_id", "embedding", "nrm", *lvl_prefix),
-                lvl_prefix,
-                k_sub,
-                lvl_id,
-            )
-            par = block_sub_assign(
-                par,
-                lvl_prefix,
-                k_sub,
-                lvl_id,
-                hint_broadcast=(math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS),
-                sub=sub_lvl,
-                nprobe=nprobe,
-            )
+        par = block_sub_assign(
+            par,
+            lvl_prefix,
+            k_sub,
+            lvl_id,
+            hint_broadcast=(math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS),
+            sub=sub_lvl,
+            nprobe=nprobe,
+        )
     # Deepest level: fan each probed parent out over its persisted
     # sub-codebook and keep the query's best nprobe² deepest blocks
     # overall (block_sub_assign's per-vec_id window ranks across all
@@ -292,39 +280,37 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
 
 
 def _knn_candidates(spark, sf_dir, nprobe: int = 1):
-    """Candidate pairs (a_id, nbr_id, a_v, b_v) of the adaptive-grid
-    k-NN search: corpus side home-assigned to its deepest block, query
-    side probing its top-``nprobe`` blocks AT THE DEEPEST LEVEL (home
-    path above it, so the fan-out is nprobe x block, not nprobe^depth).
-    Each pair appears exactly once — a neighbor has ONE home block and
-    a query's probes are distinct blocks. Depth grows with the corpus
-    so block size stays ~_KNN_TARGET_BLOCK: pair work is
-    N x nprobe x block, LINEAR, where the fixed 16-cell form measured
-    quadratic (45 s / 106 s at 10x for nprobe 1 / 2)."""
+    """Scored candidate pairs (*block_cols, a, b, cs) of the
+    adaptive-grid k-NN search: corpus side (b) home-assigned to its
+    deepest block, query side (a) probing its top-``nprobe`` blocks AT
+    THE DEEPEST LEVEL (home path above it, so the fan-out is nprobe x
+    block, not nprobe^depth). Each pair appears exactly once — a
+    neighbor has ONE home block and a query's probes are distinct
+    blocks. Depth grows with the corpus so block size stays
+    ~_KNN_TARGET_BLOCK: pair work is N x nprobe x block, LINEAR, where
+    the fixed 16-cell form measured quadratic (45 s / 106 s at 10x for
+    nprobe 1 / 2)."""
     home, probe, block_cols = _knn_assignments(spark, sf_dir, nprobe)
-    a = probe.select(
-        *block_cols, F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_v")
-    )
-    b = home.select(
-        *block_cols, F.col("vec_id").alias("nbr_id"), F.col("embedding").alias("b_v")
-    )
-    return a.join(b, block_cols).filter(F.col("a_id") != F.col("nbr_id"))
+    return cosine_pairs(probe, home, block_cols)
 
 
-def _blocked_knn(spark, sf_dir, nprobe: int = 1):
-    """(vec_id, nbr_id, rnk, cs): top-_KNN_K neighbors per vector among
-    its _knn_candidates — shared by q212 (the graph), q213/q214 (the
-    recall gates), and q215 (label audit)."""
-    scored = _knn_candidates(spark, sf_dir, nprobe).select(
-        F.col("a_id").alias("vec_id"),
-        "nbr_id",
-        F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4).alias("cs"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("nbr_id"))
+def _knn_topk(pairs):
+    """Top-_KNN_K neighbors per a-side vector of scored pairs, as
+    (*block_cols, vec_id, nbr_id, cs, rnk): ties to the lower neighbor
+    id."""
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("vec_id", "nbr_id", "rnk", "cs")
+        pair_topk(pairs, _KNN_K, rank_col="rnk")
+        .withColumnRenamed("a", "vec_id")
+        .withColumnRenamed("b", "nbr_id")
+    )
+
+
+def _blocked_knn(spark, sf_dir):
+    """(vec_id, nbr_id, rnk, cs): top-_KNN_K neighbors per vector among
+    its _knn_candidates — shared by q212 (the graph), q213 (the recall
+    gate), and q215 (label audit)."""
+    return _knn_topk(_knn_candidates(spark, sf_dir)).select(
+        "vec_id", "nbr_id", "rnk", "cs"
     )
 
 
@@ -393,6 +379,31 @@ FROM n, hits h
 """
 
 
+def _exact_recall(spark, sf_dir, graph):
+    """One row (n_queries, n_hits): how many of the exact top-_KNN_K
+    neighbors of the md5-ordered _KNN_SAMPLE query sample ``graph``
+    (vec_id, nbr_id, ...) recovers. The exact arm is sample x corpus
+    through one broadcast (cosine_topk)."""
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qs = (
+        e.orderBy(
+            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
+        )
+        .limit(_KNN_SAMPLE)
+        .select(F.col("vec_id").alias("q_id"), "embedding")
+    )
+    exact = cosine_topk(e, qs, k=_KNN_K)
+    hits = exact.join(
+        graph.select(
+            F.col("vec_id").alias("b_vid"), F.col("nbr_id").alias("b_nid")
+        ),
+        (F.col("b_vid") == F.col("q_id")) & (F.col("b_nid") == F.col("vec_id")),
+        "left_semi",
+    ).agg(F.count(F.lit(1)).alias("n_hits"))
+    n = qs.agg(F.countDistinct("q_id").alias("n_queries"))
+    return n.crossJoin(F.broadcast(hits))
+
+
 @query("q213_knn_recall_gate", oracle=_q213_sql, tags=("vector", "similarity", "gate", "EXT"))
 def q213_knn_recall_gate(spark, sf_dir):
     """Recall of the blocked k-NN graph against exact brute force on a
@@ -405,36 +416,8 @@ def q213_knn_recall_gate(spark, sf_dir):
     adaptive-grid dials from the ANN family raise it at the measured
     candidate cost. Scale: the exact arm is sample x corpus through
     one broadcast (bounded by the sample), the blocked arm is q212."""
-    blocked = _blocked_knn(spark, sf_dir).select(
-        F.col("vec_id").alias("b_vid"), F.col("nbr_id").alias("b_nid")
-    )
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qs = (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
-        )
-        .limit(_KNN_SAMPLE)
-        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_v"))
-    )
-    scored = e.join(F.broadcast(qs), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("nbr_id"),
-        F.round(V.cosine(F.col("q_v"), F.col("embedding")), 4).alias("cs"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cs"), F.asc("nbr_id"))
-    exact = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("q_id", "nbr_id")
-    )
-    hits = exact.join(
-        blocked,
-        (F.col("b_vid") == F.col("q_id")) & (F.col("b_nid") == F.col("nbr_id")),
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("n_hits"))
-    n = qs.agg(F.countDistinct("q_id").alias("n_queries"))
     recall = F.col("n_hits").cast("double") / (F.col("n_queries") * _KNN_K)
-    return n.crossJoin(F.broadcast(hits)).select(
+    return _exact_recall(spark, sf_dir, _blocked_knn(spark, sf_dir)).select(
         F.col("n_queries").cast("long").alias("n_queries"),
         F.lit(_KNN_K).cast("long").alias("k"),
         F.col("n_hits").cast("long").alias("n_hits"),
@@ -552,46 +535,10 @@ def q214_knn_multiprobe_gate(spark, sf_dir):
     form measured 106 s at 10x; this one rides the q212 tree)."""
     cand = _knn_candidates(spark, sf_dir, _KNN_NPROBE)
     n_candidates = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    scored = cand.select(
-        F.col("a_id").alias("vec_id"),
-        "nbr_id",
-        F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4).alias("cs"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("nbr_id"))
-    g = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select(F.col("vec_id").alias("b_vid"), F.col("nbr_id").alias("b_nid"))
-    )
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qs = (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
-        )
-        .limit(_KNN_SAMPLE)
-        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_v"))
-    )
-    ex_scored = e.join(F.broadcast(qs), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("nbr_id"),
-        F.round(V.cosine(F.col("q_v"), F.col("embedding")), 4).alias("cs"),
-    )
-    we = Window.partitionBy("q_id").orderBy(F.desc("cs"), F.asc("nbr_id"))
-    exact = (
-        ex_scored.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("q_id", "nbr_id")
-    )
-    hits = exact.join(
-        g,
-        (F.col("b_vid") == F.col("q_id")) & (F.col("b_nid") == F.col("nbr_id")),
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("n_hits"))
-    n = qs.agg(F.countDistinct("q_id").alias("n_queries"))
     recall = F.col("n_hits").cast("double") / (F.col("n_queries") * _KNN_K)
     return (
-        n.crossJoin(F.broadcast(n_candidates))
-        .crossJoin(F.broadcast(hits))
+        _exact_recall(spark, sf_dir, _knn_topk(cand))
+        .crossJoin(F.broadcast(n_candidates))
         .select(
             F.col("n_queries").cast("long").alias("n_queries"),
             F.lit(_KNN_K).cast("long").alias("k"),
@@ -730,27 +677,20 @@ p AS (
 sym AS MATERIALIZED (SELECT a, b FROM p UNION ALL SELECT b, a FROM p)"""
 
 
-def _label_eps_edges(spark, sf_dir):
-    """Symmetric label-blocked eps-edge list (a, b) at the family eps:
-    every unordered within-label pair with 4dp-rounded cosine >=
+def _eps_edges(spark, sf_dir, block_cols=()):
+    """Symmetric eps-edge list (a, b) at the family eps: every
+    unordered pair sharing ``block_cols`` with 4dp-rounded cosine >=
     {_DBSCAN_EPS_COS}, both orientations. Each directed edge appears
-    exactly once — a vector has ONE label, so the a < b self-join
-    emits each unordered pair once (the duplicate-sensitivity contract
-    of the dbscan operators). Quadratic per label by q219's documented
-    anchor contract. Decoupled from q34 in round 12: the near-dup
-    DEDUP relation stays at 0.3 while the density family runs at the
-    non-percolating {_DBSCAN_EPS_COS}."""
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    a = e.select(
-        "label", F.col("vec_id").alias("a"), F.col("embedding").alias("a_v")
-    )
-    b = e.select(
-        "label", F.col("vec_id").alias("b"), F.col("embedding").alias("b_v")
-    )
+    exactly once — the self-join emits each unordered pair once (the
+    duplicate-sensitivity contract of the dbscan operators). Blocked
+    by label it is q219's anchor, quadratic per label; unblocked it is
+    q232's truth arm, one broadcast nested-loop join, quadratic BY
+    DESIGN (125k pairs at sf0.01, 2M at sf0.1). Decoupled from q34 in
+    round 12: the near-dup DEDUP relation stays at 0.3 while the
+    density family runs at the non-percolating {_DBSCAN_EPS_COS}."""
+    e = load(spark, sf_dir, "embeddings")
     p = (
-        a.join(b, "label")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cs", F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4))
+        cosine_pairs(e, block_cols=block_cols)
         .filter(F.col("cs") >= _DBSCAN_EPS_COS)
         .select("a", "b")
     )
@@ -794,7 +734,7 @@ def q219_dbscan_embeddings(spark, sf_dir):
     # file-backed before the label pass: every CC round re-evaluates
     # its input lineage, and live that re-runs the label-blocked pair
     # scan per round (the q232 lesson, same round)
-    sym = parquet_checkpoint(_label_eps_edges(spark, sf_dir), "q219_sym_")
+    sym = parquet_checkpoint(_eps_edges(spark, sf_dir, ["label"]), "q219_sym_")
     return dbscan_from_edges(e, sym, _DBSCAN_MIN_NBRS)
 
 
@@ -931,16 +871,8 @@ def _mp_eps_candidates(probe, home, block_cols):
     kept so the incremental refresh (q228) can partition edge state by
     it. Floats (cosine + round) stay JVM-side. Shared by the one-shot
     edge build and the refresh's touched-block recompute."""
-    a = probe.select(
-        *block_cols, F.col("vec_id").alias("a"), F.col("embedding").alias("a_v")
-    )
-    b = home.select(
-        *block_cols, F.col("vec_id").alias("b"), F.col("embedding").alias("b_v")
-    )
     return (
-        a.join(b, block_cols)
-        .filter(F.col("a") != F.col("b"))
-        .withColumn("cs", F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4))
+        cosine_pairs(probe, home, block_cols)
         .filter(F.col("cs") >= _DBSCAN_EPS_COS)
         .select(*block_cols, "a", "b")
     )
@@ -1188,36 +1120,6 @@ def q224_leakage_safe_split_grid(spark, sf_dir):
 _KNN_INC_MOD = 100
 
 
-def _knn_block_topk(members_a, members_b, block_cols):
-    """Top-_KNN_K neighbors of each a-side vector among the b-side
-    members of ITS OWN block — the q212 scoring with explicit member
-    sets, so build (hist x hist) and refresh (touched x touched) reuse
-    one shape."""
-    a = members_a.select(
-        *block_cols, F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_v")
-    )
-    b = members_b.select(
-        *block_cols,
-        F.col("vec_id").alias("nbr_id"),
-        F.col("embedding").alias("b_v"),
-    )
-    scored = (
-        a.join(b, block_cols)
-        .filter(F.col("a_id") != F.col("nbr_id"))
-        .select(
-            *block_cols,
-            F.col("a_id").alias("vec_id"),
-            "nbr_id",
-            F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4).alias("cs"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= _KNN_K)
-    )
-
-
 @query("q225_knn_graph_incremental", oracle=q212_oracle, tags=("vector", "pipeline", "EXT"))
 def q225_knn_graph_incremental(spark, sf_dir):
     """The k-NN graph as maintained state: build the neighbor lists
@@ -1247,14 +1149,13 @@ def q225_knn_graph_incremental(spark, sf_dir):
     batch = home.filter(is_new)
 
     g_dir = scratch_dir("q225_knn_")
-    _knn_block_topk(hist, hist, block_cols).write.mode("overwrite").parquet(
-        f"{g_dir}/graph_epoch0.parquet"
-    )
+    g0_rows = _knn_topk(cosine_pairs(hist, hist, block_cols))
+    g0_rows.write.mode("overwrite").parquet(f"{g_dir}/graph_epoch0.parquet")
     g0 = spark.read.parquet(f"{g_dir}/graph_epoch0.parquet")
 
     touched = batch.select(*block_cols).distinct()
     members = home.join(touched, block_cols)  # hist + batch of touched blocks
-    g1 = _knn_block_topk(members, members, block_cols)
+    g1 = _knn_topk(cosine_pairs(members, members, block_cols))
     untouched = g0.join(touched, block_cols, "left_anti")
     return untouched.unionByName(g1).select("vec_id", "nbr_id", "rnk", "cs")
 
@@ -1420,6 +1321,17 @@ FROM counts
 """
 
 
+def _cluster_pairs(df, cl):
+    """Co-membership pairs (u, v), u < v, of the vectors sharing a
+    non-null cluster id in column ``cl`` — the pair side of the DBSCAN
+    agreement gates (q229, q233)."""
+    a = df.filter(F.col(cl).isNotNull()).select(
+        F.col("vec_id").alias("u"), F.col(cl).alias("c")
+    )
+    b = a.select(F.col("u").alias("v"), "c")
+    return a.join(b, "c").filter(F.col("u") < F.col("v")).select("u", "v")
+
+
 @query("q229_dbscan_agreement_gate", oracle=_q229_sql, tags=("vector", "graph", "gate", "EXT"))
 def q229_dbscan_agreement_gate(spark, sf_dir):
     """Measured divergence between the two registered DBSCAN anchors —
@@ -1456,19 +1368,12 @@ def q229_dbscan_agreement_gate(spark, sf_dir):
         ),
     )
 
-    def _pairs(df, cl):
-        a = df.filter(F.col(cl).isNotNull()).select(
-            F.col("vec_id").alias("u"), F.col(cl).alias("c")
-        )
-        b = a.select(F.col("u").alias("v"), "c")
-        return a.join(b, "c").filter(F.col("u") < F.col("v")).select("u", "v")
-
     j = ex.join(gr, "vec_id")
     base = j.agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum((F.col("re") == F.col("rg")).cast("long")).alias("n_role_agree"),
     )
-    pe, pg = _pairs(ex, "ce"), _pairs(gr, "cg")
+    pe, pg = _cluster_pairs(ex, "ce"), _cluster_pairs(gr, "cg")
     npe = pe.agg(F.count(F.lit(1)).alias("n_pairs_exact"))
     npg = pg.agg(F.count(F.lit(1)).alias("n_pairs_grid"))
     nboth = pe.join(pg, ["u", "v"]).agg(F.count(F.lit(1)).alias("n_pairs_both"))

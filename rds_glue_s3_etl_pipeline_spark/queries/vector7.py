@@ -65,31 +65,13 @@ from .registry import query
 from .vector6 import (
     _DBSCAN_EPS_COS,
     _DBSCAN_MIN_NBRS,
+    _cluster_pairs,
+    _eps_edges,
     _q219_oracle,
     _q223_sql,
     q219_dbscan_embeddings,
     q223_dbscan_grid,
 )
-
-
-def _true_eps_edges(spark, sf_dir):
-    """Symmetric TRUE eps-edge list (a, b): every unordered pair of
-    vectors with 4dp-rounded cosine >= eps, both orientations, no
-    blocking. One broadcast nested-loop self-join over the ordered
-    pairs (vec_a < vec_b) then a union of both orientations — each
-    directed edge appears exactly once, the duplicate-sensitivity
-    contract of the dbscan operators. Quadratic BY DESIGN: this is the
-    fixture-scale truth arm (125k pairs at sf0.01, 12.5M at sf0.1)."""
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    a = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("a_v"))
-    b = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("b_v"))
-    p = (
-        a.join(F.broadcast(b), F.col("a") < F.col("b"))
-        .withColumn("cs", F.round(V.cosine(F.col("a_v"), F.col("b_v")), 4))
-        .filter(F.col("cs") >= _DBSCAN_EPS_COS)
-        .select("a", "b")
-    )
-    return p.union(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 def _true_sym_ctes() -> str:
@@ -142,7 +124,7 @@ def q232_dbscan_truth(spark, sf_dir):
     # 16 → 64 s at sf0.1 when the re-anchored eps produced CHAIN
     # components, whose larger diameter needs more contraction rounds).
     # The checkpointed list is mean-degree x N rows — pennies to write.
-    sym = parquet_checkpoint(_true_eps_edges(spark, sf_dir), "q232_true_sym_")
+    sym = parquet_checkpoint(_eps_edges(spark, sf_dir), "q232_true_sym_")
     return dbscan_from_edges(ids, sym, _DBSCAN_MIN_NBRS)
 
 
@@ -271,20 +253,17 @@ def q233_dbscan_truth_gate(spark, sf_dir):
         ),
     )
 
-    def _pairs(df, cl):
-        a = df.filter(F.col(cl).isNotNull()).select(
-            F.col("vec_id").alias("u"), F.col(cl).alias("c")
-        )
-        b = a.select(F.col("u").alias("v"), "c")
-        return a.join(b, "c").filter(F.col("u") < F.col("v")).select("u", "v")
-
     j = tr.join(ex, "vec_id").join(gr, "vec_id")
     base = j.agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum((F.col("re") == F.col("rt")).cast("long")).alias("n_label_agree"),
         F.sum((F.col("rg") == F.col("rt")).cast("long")).alias("n_grid_agree"),
     )
-    pt, pe, pg = _pairs(tr, "ct"), _pairs(ex, "ce"), _pairs(gr, "cg")
+    pt, pe, pg = (
+        _cluster_pairs(tr, "ct"),
+        _cluster_pairs(ex, "ce"),
+        _cluster_pairs(gr, "cg"),
+    )
     npt = pt.agg(F.count(F.lit(1)).alias("n_pairs_truth"))
     nle = pt.join(pe, ["u", "v"]).agg(
         F.count(F.lit(1)).alias("n_pairs_label_hit")
@@ -490,7 +469,7 @@ def q234_split_leakage_truth(spark, sf_dir):
     lcl, gcl, tsym = run_concurrently(
         _label_cl,
         _grid_cl,
-        lambda: parquet_checkpoint(_true_eps_edges(spark, sf_dir), "q234_true_sym_"),
+        lambda: parquet_checkpoint(_eps_edges(spark, sf_dir), "q234_true_sym_"),
     )
     lsp = _bucketed(
         e.join(lcl, "vec_id", "left").withColumn(

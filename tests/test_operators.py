@@ -18,7 +18,10 @@ from rds_glue_s3_etl_pipeline_spark.operators.dedup import (
     simhash,
     simhash_near_pairs,
 )
-from rds_glue_s3_etl_pipeline_spark.operators.similarity import cosine_topk
+from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
+    cosine_pairs,
+    cosine_topk,
+)
 
 
 def ts(s):
@@ -162,6 +165,66 @@ def test_cosine_topk_excludes_self_and_ranks(spark):
     out = cosine_topk(emb, q, k=2).orderBy("rank").collect()
     assert [r["vec_id"] for r in out] == [3, 1]   # nearest non-self first
     assert all(r["q_id"] == 0 for r in out)
+
+
+@pytest.mark.parametrize("blocked", [False, True], ids=["unblocked", "blocked"])
+@pytest.mark.parametrize("directed", [False, True], ids=["self", "directed"])
+def test_cosine_pairs_matches_rounded_cosine(spark, directed, blocked):
+    """cosine_pairs' per-side norms give exactly F.round(V.cosine, 4)
+    on the same pairs, including the 4dp eps boundary (raw 0.39996
+    rounds to 0.4, raw 0.3999 does not); self mode emits each
+    unordered pair once and never a == b, directed mode both
+    orientations; block columns confine pairs and lead the output."""
+
+    def unit(c):
+        return [c, math.sqrt(1.0 - c * c)]
+
+    emb = spark.createDataFrame(
+        [
+            (0, 7, [1.0, 0.0]),
+            (1, 7, unit(0.39996)),
+            (2, 7, unit(0.39990)),
+            (3, 8, unit(0.45)),
+            (4, 8, [0.3, -0.2]),
+            (5, 8, [1.0, 0.0]),
+        ],
+        "vec_id long, c_id int, embedding array<double>",
+    )
+    cols = ["c_id"] if blocked else []
+    out = cosine_pairs(emb, emb if directed else None, cols)
+    assert out.columns == [*cols, "a", "b", "cs"]
+    got = [(r["a"], r["b"], r["cs"]) for r in out.collect()]
+
+    left = emb.select(
+        F.col("vec_id").alias("a"),
+        F.col("c_id").alias("ca"),
+        F.col("embedding").alias("va"),
+    )
+    right = emb.select(
+        F.col("vec_id").alias("b"),
+        F.col("c_id").alias("cb"),
+        F.col("embedding").alias("vb"),
+    )
+    keep = F.col("a") != F.col("b") if directed else F.col("a") < F.col("b")
+    if blocked:
+        keep = keep & (F.col("ca") == F.col("cb"))
+    want = {
+        (r["a"], r["b"], r["cs"])
+        for r in left.crossJoin(right)
+        .filter(keep)
+        .select("a", "b", F.round(V.cosine("va", "vb"), 4).alias("cs"))
+        .collect()
+    }
+    assert len(got) == len(set(got)) and set(got) == want
+    cs = {(a, b): c for a, b, c in got}
+    assert cs[(0, 1)] == 0.4 and cs[(0, 2)] == 0.3999
+    assert all(a != b for a, b, _ in got)
+    unordered = [frozenset((a, b)) for a, b, _ in got]
+    n_blocks = 2 if blocked else 1
+    n_per_block = 6 // n_blocks
+    n_unordered = n_blocks * n_per_block * (n_per_block - 1) // 2
+    assert len(set(unordered)) == n_unordered
+    assert len(unordered) == (2 * n_unordered if directed else n_unordered)
 
 
 def _cc_reference(pairs) -> dict:

@@ -1,16 +1,21 @@
 """Per-query structural profile: wall seconds, Spark job / stage /
 task counts and total executor task time, measured WARM (one untimed
-pass first, same as bench.py's protocol).
+pass first, same as bench.py's protocol), then ``-n`` timed noop-sink
+repeats with scoped block release between them — the bench.py protocol
+on an arbitrary query subset, so a single change can be measured in
+about a minute instead of a full sweep.
 
 At bench scale (sf0.1, tens of MB) wall time is dominated by fixed
 per-action overhead — every Spark job costs ~20-80 ms of scheduling
 before any task runs, and every extra Exchange is a stage. This tool
 attributes a query's wall to those counts so the optimization loop
 (guide §1) can tell "too many driver round-trips" apart from "one
-slow stage" without the (disabled) UI.
+slow stage" without the (disabled) UI. The printed line and the JSON
+entry are the fastest repeat's counts; ``walls`` lists every repeat.
 
 Usage:
-    python tools/query_profile.py [--sf DIR] [--runs N] names...
+    SPARK_GRAFT_CPUS=4 python tools/query_profile.py [--sf DIR] [-n N] \
+        [--json out.json] names...
 """
 
 from __future__ import annotations
@@ -51,7 +56,7 @@ def _max_job_id(store) -> int:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("-n", "--runs", type=int, default=2, help="timed repeats")
     ap.add_argument("--json", help="write results to this path")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
@@ -88,7 +93,8 @@ def main() -> None:
         # warm pass (artifacts, page cache, codegen)
         spark.sparkContext.setJobDescription(f"{name}: warm")
         fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-        best = None
+        release_blocks(spark)
+        runs = []
         for _ in range(args.runs):
             base = _max_job_id(store)
             spark.sparkContext.setJobDescription(f"{name}: timed")
@@ -97,19 +103,21 @@ def main() -> None:
             wall = time.perf_counter() - t0
             stats = _job_stats(store, base)
             stats["wall"] = round(wall, 3)
-            if best is None or wall < best["wall"]:
-                best = stats
-        release_blocks(spark)
-        results[name] = best
+            runs.append(stats)
+            release_blocks(spark)
+        best = min(runs, key=lambda r: r["wall"])
+        results[name] = {**best, "walls": [r["wall"] for r in runs]}
         print(
             f"{name:42s} wall {best['wall']:7.2f}s  jobs {best['jobs']:4d}  "
-            f"stages {best['stages']:4d}  tasks {best['tasks']:6d}",
+            f"stages {best['stages']:4d}  tasks {best['tasks']:6d}  "
+            f"all {results[name]['walls']}",
             flush=True,
         )
     c1 = min(canary(), canary())
     print(f"canary {c1:.3f}s", flush=True)
     if args.json:
         results["__canary__"] = {"before": round(c0, 3), "after": round(c1, 3)}
+        results["__run__"] = {"cpus": cpus, "sf": args.sf, "n": args.runs}
         with open(args.json, "w") as f:
             json.dump(results, f, indent=1)
 
