@@ -61,17 +61,14 @@ def cosine_pairs(
     return pairs.select(*block_cols, "a", "b", cs.alias("cs"))
 
 
-def pair_topk(
-    pairs: DataFrame, k: int, by: str = "a", rank_col: str = "rank"
-) -> DataFrame:
-    """The top-k tail of :func:`cosine_pairs`: each ``by`` id's ``k``
-    best pairs by cs desc, ties to the smaller other id, ranked 1..k
-    in ``rank_col`` (a long)."""
-    other = "b" if by == "a" else "a"
-    w = Window.partitionBy(by).orderBy(F.desc("cs"), F.asc(other))
-    return pairs.withColumn(
-        rank_col, F.row_number().over(w).cast("long")
-    ).filter(F.col(rank_col) <= k)
+def pair_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The top-k tail of :func:`cosine_pairs`: each a's ``k`` best
+    pairs by cs desc, ties to the smaller b, ranked 1..k in ``rnk`` (a
+    long)."""
+    w = Window.partitionBy("a").orderBy(F.desc("cs"), F.asc("b"))
+    return pairs.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
+        F.col("rnk") <= k
+    )
 
 
 def cosine_topk(
@@ -82,27 +79,32 @@ def cosine_topk(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
 ) -> DataFrame:
-    """Exact top-k (query_id_col, id_col, cos_sim, rank): broadcast the
-    (small) query set against the corpus, score the 4dp cosine with
-    zip_with/aggregate (JVM, codegen), rank per query.
+    """Exact top-k (query_id_col, id_col, cos_sim, rank): the (small)
+    query set broadcast against the corpus through :func:`cosine_pairs`
+    (directed, so a query never scores itself), ranked per query by
+    :func:`pair_topk`.
 
     One pass over the corpus, no shuffle until the final per-query
     top-k window over #queries × #corpus scored rows (use a LIMIT-ed
     query set; for query sets too big to broadcast, use lsh_buckets).
-    Not on :func:`cosine_pairs`: that form fails q158 at sf0.1 with
-    Spark's INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when joined to the PQ
-    arm (see CHANGES.md).
     """
-    cos = F.round(V.cosine(F.col(vec_col), F.col("q_vec")), 4)
-    scored = embeddings.join(
-        F.broadcast(
-            queries.select(F.col(query_id_col), F.col(vec_col).alias("q_vec"))
+    pairs = cosine_pairs(
+        embeddings.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         ),
-        F.col(id_col) != F.col(query_id_col),
-    ).select(query_id_col, id_col, cos.alias("cos_sim"))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+        queries.select(
+            F.col(query_id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        ),
+    )
+    # the query is cosine_pairs' broadcast b side; the tail ranks per a
+    ranked = pair_topk(
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "cs"), k
+    )
+    return ranked.select(
+        F.col("a").alias(query_id_col),
+        F.col("b").alias(id_col),
+        F.col("cs").alias("cos_sim"),
+        F.col("rnk").alias("rank"),
     )
 
 

@@ -299,7 +299,7 @@ def _knn_topk(pairs):
     (*block_cols, vec_id, nbr_id, cs, rnk): ties to the lower neighbor
     id."""
     return (
-        pair_topk(pairs, _KNN_K, rank_col="rnk")
+        pair_topk(pairs, _KNN_K)
         .withColumnRenamed("a", "vec_id")
         .withColumnRenamed("b", "nbr_id")
     )

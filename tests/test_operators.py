@@ -21,6 +21,7 @@ from rds_glue_s3_etl_pipeline_spark.operators.dedup import (
 from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
     cosine_pairs,
     cosine_topk,
+    lsh_cosine_pairs,
 )
 
 
@@ -167,6 +168,11 @@ def test_cosine_topk_excludes_self_and_ranks(spark):
     assert all(r["q_id"] == 0 for r in out)
 
 
+def _unit(c):
+    """The 2-d unit vector whose cosine with [1, 0] is c."""
+    return [c, math.sqrt(1.0 - c * c)]
+
+
 @pytest.mark.parametrize("blocked", [False, True], ids=["unblocked", "blocked"])
 @pytest.mark.parametrize("directed", [False, True], ids=["self", "directed"])
 def test_cosine_pairs_matches_rounded_cosine(spark, directed, blocked):
@@ -176,15 +182,12 @@ def test_cosine_pairs_matches_rounded_cosine(spark, directed, blocked):
     unordered pair once and never a == b, directed mode both
     orientations; block columns confine pairs and lead the output."""
 
-    def unit(c):
-        return [c, math.sqrt(1.0 - c * c)]
-
     emb = spark.createDataFrame(
         [
             (0, 7, [1.0, 0.0]),
-            (1, 7, unit(0.39996)),
-            (2, 7, unit(0.39990)),
-            (3, 8, unit(0.45)),
+            (1, 7, _unit(0.39996)),
+            (2, 7, _unit(0.39990)),
+            (3, 8, _unit(0.45)),
             (4, 8, [0.3, -0.2]),
             (5, 8, [1.0, 0.0]),
         ],
@@ -225,6 +228,33 @@ def test_cosine_pairs_matches_rounded_cosine(spark, directed, blocked):
     n_unordered = n_blocks * n_per_block * (n_per_block - 1) // 2
     assert len(set(unordered)) == n_unordered
     assert len(unordered) == (2 * n_unordered if directed else n_unordered)
+
+
+def test_lsh_cosine_pairs_thresholds_the_rounded_cosine(spark):
+    """lsh_cosine_pairs keeps a within-bucket pair when its 4dp cosine
+    reaches the threshold: raw 0.39996 (rounds to 0.4) passes 0.4, raw
+    0.3999 does not. n_planes=0 puts every vector in one bucket."""
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, _unit(0.39996)), (2, _unit(0.39990)), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        (r["vec_a"], r["vec_b"]): r["cos_sim"]
+        for r in lsh_cosine_pairs(emb, threshold=0.4, n_planes=0).collect()
+    }
+    l = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    r = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    want = {
+        (x["a"], x["b"]): x["cs"]
+        for x in l.crossJoin(r)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b", F.round(V.cosine("va", "vb"), 4).alias("cs"))
+        .filter(F.col("cs") >= 0.4)
+        .collect()
+    }
+    assert got == want
+    assert got[(0, 1)] == 0.4 and (0, 2) not in got
 
 
 def _cc_reference(pairs) -> dict:
