@@ -1,7 +1,9 @@
 """Similarity search over embedding columns (north-star extension):
-the exact cosine pair join (cosine_pairs) with its top-k tail, brute-
-force cosine top-k as the exact baseline, and random-hyperplane LSH
-bucketing as the 100 TB scale path (candidates only within a bucket).
+the exact cosine pair join (cosine_pairs) with its top-k tail, the
+nearest-centroid step every codebook assignment and probe goes through
+(nearest_centroids), brute-force cosine top-k as the exact baseline,
+and random-hyperplane LSH bucketing as the 100 TB scale path
+(candidates only within a bucket).
 
 The hyperplanes are pseudo-random but fully deterministic: component
 (plane p, dim d) is derived from xxhash64(p, d) mapped to [-1, 1] —
@@ -68,6 +70,62 @@ def pair_topk(pairs: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("a").orderBy(F.desc("cs"), F.asc("b"))
     return pairs.withColumn("rnk", F.row_number().over(w).cast("long")).filter(
         F.col("rnk") <= k
+    )
+
+
+def nearest_centroids(
+    df: DataFrame,
+    codebook: DataFrame,
+    n: int = 1,
+    block_cols=(),
+    broadcast: bool = True,
+) -> DataFrame:
+    """The one centroid-scoring step: each row of ``df`` ranked against
+    the codebook entries of its block by 4dp cosine desc, ties to the
+    smaller id, keeping its best ``n``.
+
+    ``codebook`` is (*block_cols, id, cv); its one column outside the
+    block columns and ``cv`` is the id, and keeps its name in the
+    output: df's columns plus that id, ``cos_sim`` and ``probe_rank``
+    (1..n) — up to ``n`` rows per input row, none when its block has
+    no entries. ``df`` contributes ``embedding`` and the block columns.
+
+    Each side's norm is folded once, as in :func:`cosine_pairs`, so
+    ``cos_sim`` is the 4dp-rounded :func:`V.cosine` of ``embedding``
+    and ``cv``, bit for bit. Each block's codebook is collected into
+    one array row and joined to ``df`` (broadcast while ``broadcast`` holds, otherwise an
+    equi-join on the block columns); every entry is scored and the
+    (cs, -id) structs are sorted descending — Spark's order: NaN
+    largest, a null cosine last — so the argmax is ``n=1`` and no
+    window or shuffle follows the join.
+    """
+    block_cols = list(block_cols)
+    (cid,) = [c for c in codebook.columns if c not in (*block_cols, "cv")]
+    cb = codebook.groupBy(*block_cols).agg(
+        F.collect_list(
+            F.struct(
+                F.col(cid).alias("i"),
+                F.col("cv").alias("v"),
+                V.norm(F.col("cv")).alias("n"),
+            )
+        ).alias("__cb")
+    )
+    cb = F.broadcast(cb) if broadcast else cb
+    v = df.withColumn("__vn", V.norm(F.col("embedding")))
+    joined = v.join(cb, block_cols) if block_cols else v.crossJoin(cb)
+
+    def score(c):
+        cs = V.dot(F.col("embedding"), c["v"]) / (F.col("__vn") * c["n"])
+        return F.struct(
+            F.round(cs, 4).alias("cs"), (-c["i"]).alias("neg"), c["i"].alias("i")
+        )
+
+    top = F.slice(F.sort_array(F.transform("__cb", score), asc=False), 1, n)
+    return joined.select(*df.columns, F.posexplode(top).alias("__r", "__c")).select(
+        *df.columns,
+        F.col("__c.i").alias(cid),
+        F.col("__c.cs").alias("cos_sim"),
+        (F.col("__r") + 1).alias("probe_rank"),
     )
 
 
@@ -169,98 +227,7 @@ def lsh_cosine_pairs(
 # --------------------------------------------------------------------------
 
 
-def kmeans_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign every vector to its nearest centroid by cosine similarity
-    (broadcast codebook, one map-side pass — no shuffle until the
-    per-vector argmax window).
-
-    Determinism discipline (shared with queries.vector2 q59): the
-    cosine is rounded to 4dp BEFORE the argmax and ties break on the
-    centroid id, so a 1-ulp float wobble can never flip an assignment
-    between engines or between runs.
-
-    Returns (id_col, vec_col, c_id, cos_sim) with exactly one row per
-    input vector.
-
-    Plan shape (optimization round 15): the codebook is collected into
-    ONE array row (k entries, c_id-sorted) and the argmax is a
-    higher-order fold over it — a map-only pass with NO exchange, where
-    the old per-vector window shuffled and sorted N x k scored rows
-    (embedding payload included) per assignment. Ordering semantics are
-    the window's exactly: 4dp-rounded cosine desc (Spark NaN sorts
-    largest, null loses to non-null), ties to the smallest c_id (the
-    fold keeps the earlier entry of the c_id-sorted array on equality).
-    """
-    cb = centroids.select(
-        F.array_sort(F.collect_list(F.struct("c_id", "cv"))).alias("__cb")
-    )
-    cos = lambda x: F.round(V.cosine(F.col(vec_col), x["cv"]), 4)  # noqa: E731
-
-    def merge(acc, x):
-        cand = F.struct(cos(x).alias("cos_sim"), x["c_id"].alias("c_id"))
-        better = (
-            acc.isNull()
-            | (cand["cos_sim"] > acc["cos_sim"])
-            | (acc["cos_sim"].isNull() & cand["cos_sim"].isNotNull())
-        )
-        return F.when(better, cand).otherwise(acc)
-
-    best = F.aggregate(
-        F.col("__cb"),
-        F.lit(None).cast("struct<cos_sim:double,c_id:bigint>"),
-        merge,
-    )
-    return (
-        embeddings.crossJoin(F.broadcast(cb))
-        .select(id_col, vec_col, best.alias("__best"))
-        # an empty codebook yields no assignments, as the join did
-        .filter(F.col("__best").isNotNull())
-        .select(
-            id_col,
-            vec_col,
-            F.col("__best.c_id").alias("c_id"),
-            F.col("__best.cos_sim").alias("cos_sim"),
-        )
-    )
-
-
-def kmeans_assign_topn(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-probe assignment: each vector's ``nprobe`` nearest
-    centroids (same 4dp-rounded cosine + c_id tie-break discipline as
-    :func:`kmeans_assign`, which is the nprobe=1 special case).
-    Returns (id_col, vec_col, c_id, cos_sim, probe_rank) with nprobe
-    rows per vector — the query-side fan-out of an IVF search or a
-    multi-probe k-NN graph; the corpus side stays home-cell-indexed."""
-    scored = embeddings.crossJoin(
-        F.broadcast(centroids.select("c_id", "cv"))
-    ).select(
-        id_col,
-        vec_col,
-        "c_id",
-        F.round(V.cosine(F.col(vec_col), F.col("cv")), 4).alias("cos_sim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        scored.withColumn("probe_rank", F.row_number().over(w))
-        .filter(F.col("probe_rank") <= nprobe)
-    )
-
-
-def kmeans_update(
-    assigned: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_update(assigned: DataFrame) -> DataFrame:
     """Recompute centroids as the per-dimension mean of each cell's
     members (one Lloyd update). Cells that lost every member disappear
     (the standard empty-cell policy; the codebook may shrink).
@@ -279,7 +246,7 @@ def kmeans_update(
 
     ex = assigned.select(
         "c_id",
-        F.posexplode(V.as_double_array(vec_col)).alias("d", "x"),
+        F.posexplode(V.as_double_array("embedding")).alias("d", "x"),
     )
     upd = ex.groupBy("c_id", "d").agg(
         (
@@ -313,16 +280,12 @@ def init_centroids(e: DataFrame, k: int, vec_alias: str = "cv") -> DataFrame:
 
 
 def spherical_kmeans(
-    embeddings: DataFrame,
-    init_centroids: DataFrame,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, init_centroids: DataFrame, iters: int = 2
 ) -> DataFrame:
     """Fixed-iteration spherical k-means: ``iters`` rounds of
-    cosine-assignment + mean-update starting from ``init_centroids``
-    (c_id, cv), returning the final ASSIGNMENT
-    (id_col, vec_col, c_id, cos_sim).
+    cosine-assignment (:func:`nearest_centroids`) + mean-update starting
+    from ``init_centroids`` (c_id, cv), returning the final ASSIGNMENT
+    (vec_id, embedding, c_id, cos_sim).
 
     Per iteration: one broadcast cross-join pass over the corpus (the
     assignment — map-only scoring, k rows broadcast) plus two hash
@@ -334,18 +297,12 @@ def spherical_kmeans(
     FIXED constant, the property the 10x scale probe demands of every
     ANN build stage.
     """
-    cent = spherical_kmeans_codebook(
-        embeddings, init_centroids, iters, id_col, vec_col
-    )
-    return kmeans_assign(embeddings, cent, id_col, vec_col)
+    cent = spherical_kmeans_codebook(embeddings, init_centroids, iters)
+    return nearest_centroids(embeddings, cent).drop("probe_rank")
 
 
 def spherical_kmeans_codebook(
-    embeddings: DataFrame,
-    init_centroids: DataFrame,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, init_centroids: DataFrame, iters: int = 2
 ) -> DataFrame:
     """The trained CODEBOOK itself — (c_id, cv) after ``iters`` Lloyd
     rounds — for callers that need more than the argmax assignment:
@@ -353,14 +310,14 @@ def spherical_kmeans_codebook(
     reports, persisting the index artifact."""
     cent = init_centroids
     for _ in range(iters):
-        assigned = kmeans_assign(embeddings, cent, id_col, vec_col)
+        assigned = nearest_centroids(embeddings, cent)
         # eager=False: the next consumer (the following round's
         # assignment broadcast, or the caller's first action over the
         # returned codebook) materializes the k-row checkpoint inside
         # its own job — one driver round-trip per Lloyd round instead
         # of two, the same discipline as the CC loops. The plan is
         # truncated immediately either way.
-        cent = checkpoint(kmeans_update(assigned, vec_col), eager=False)
+        cent = checkpoint(kmeans_update(assigned), eager=False)
     return cent
 
 
@@ -435,120 +392,26 @@ def adaptive_grid(
 
 
 def block_sub_codebook(
-    df: DataFrame,
-    block_cols: tuple[str, ...],
-    k_sub: int,
-    id_out: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nrm_col: str = "nrm",
+    df: DataFrame, block_cols, k_sub: int, id_out: str
 ) -> DataFrame:
-    """Per-block sampled sub-codebook: the first ``k_sub`` members of
-    each block in md5(id) order — the seedless deterministic sample
-    every codebook consumer uses (init_centroids discipline), so any
-    engine reproduces it bit for bit. Returns (*block_cols, id_out,
-    __sv, __snrm); bounded by #blocks x k_sub rows."""
+    """Per-block sampled sub-codebook of (vec_id, embedding, *block_cols):
+    the first ``k_sub`` members of each block in md5(vec_id) order — the
+    seedless deterministic sample every codebook consumer uses
+    (init_centroids discipline), so any engine reproduces it bit for
+    bit. Returns the :func:`nearest_centroids` codebook (*block_cols,
+    id_out, cv), with ``id_out`` the level's block column; bounded by
+    #blocks x k_sub rows."""
     w_pick = Window.partitionBy(*block_cols).orderBy(
-        F.md5(F.col(id_col).cast("string").cast("binary")), F.col(id_col)
+        F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
     )
     return (
         df.withColumn("__rn", F.row_number().over(w_pick))
         .filter(F.col("__rn") <= k_sub)
         .select(
             *block_cols,
-            F.col(id_col).alias(id_out),
-            F.col(vec_col).alias("__sv"),
-            F.col(nrm_col).alias("__snrm"),
+            F.col("vec_id").alias(id_out),
+            F.col("embedding").alias("cv"),
         )
-    )
-
-
-def block_sub_assign(
-    df: DataFrame,
-    block_cols: tuple[str, ...],
-    k_sub: int,
-    id_out: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nrm_col: str = "nrm",
-    hint_broadcast: bool = True,
-    sub: DataFrame | None = None,
-    nprobe: int = 1,
-) -> DataFrame:
-    """One hierarchy level: sample a ``k_sub``-entry sub-codebook per
-    existing block (block_sub_codebook, unless a prebuilt ``sub`` is
-    passed) and assign each member to its nearest sub-centroid — 4dp
-    cosine, ``id_out`` tie-break, the cross-engine determinism
-    discipline shared with kmeans_assign. Returns df plus the
-    ``id_out`` block column. ``nprobe`` > 1 keeps each member's top-n
-    sub-cells instead of the argmax (n rows per member) — the
-    query-side fan-out of a multi-probe search at this level; the
-    corpus side stays nprobe=1.
-
-    Scale: the sub-codebook is #blocks x k_sub rows. While that is
-    broadcast-sized (early levels; the default hint) the join is
-    map-side; once the deepest levels of a very large corpus outgrow
-    broadcast, pass hint_broadcast=False — the join keys on the block
-    columns, so it shuffle-joins co-located by block with identical
-    results. The per-vector argmax windows by ``id_col``, never a
-    corpus-wide key."""
-    if sub is None:
-        sub = block_sub_codebook(
-            df, block_cols, k_sub, id_out, id_col, vec_col, nrm_col
-        )
-    if nprobe == 1:
-        # Argmax as a fold over the block's sub-codebook collected into
-        # one array row per block (id_out-sorted) — the per-block join
-        # stays (broadcast while the hint holds), but the per-vector
-        # window that re-shuffled and sorted the whole corpus x k_sub
-        # (embedding payload included) is gone. Ordering semantics are
-        # the window's exactly (4dp cosine desc, NaN largest, null
-        # loses, ties to the smallest id_out via the sorted array).
-        arr = sub.groupBy(*block_cols).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_out), "__sv", "__snrm"))
-            ).alias("__subs")
-        )
-
-        def merge(acc, x):
-            cand = F.struct(
-                F.round(
-                    V.dot(F.col(vec_col), x["__sv"])
-                    / (F.col(nrm_col) * x["__snrm"]),
-                    4,
-                ).alias("s"),
-                x[id_out].alias("i"),
-            )
-            better = (
-                acc.isNull()
-                | (cand["s"] > acc["s"])
-                | (acc["s"].isNull() & cand["s"].isNotNull())
-            )
-            return F.when(better, cand).otherwise(acc)
-
-        best = F.aggregate(
-            F.col("__subs"),
-            F.lit(None).cast("struct<s:double,i:bigint>"),
-            merge,
-        )
-        return (
-            df.join(F.broadcast(arr) if hint_broadcast else arr, list(block_cols))
-            .withColumn(id_out, best["i"])
-            .drop("__subs")
-        )
-    scos = F.round(
-        V.dot(F.col(vec_col), F.col("__sv")) / (F.col(nrm_col) * F.col("__snrm")),
-        4,
-    )
-    w_assign = Window.partitionBy(id_col).orderBy(F.desc("__scos"), F.asc(id_out))
-    joined = df.join(
-        F.broadcast(sub) if hint_broadcast else sub, list(block_cols)
-    )
-    return (
-        joined.withColumn("__scos", scos)
-        .withColumn("__rn", F.row_number().over(w_assign))
-        .filter(F.col("__rn") <= nprobe)
-        .drop("__sv", "__snrm", "__scos", "__rn")
     )
 
 
@@ -575,7 +438,8 @@ class TreeLevel:
 class GridTree:
     """What :func:`adaptive_grid_tree` built. ``coarse`` is the
     checkpointed (vec_id, embedding, c_id, cos_sim, nrm) assignment;
-    ``blocked`` adds one ``block_cols`` column per level."""
+    ``blocked`` is coarse without cos_sim plus one ``block_cols``
+    column per level."""
 
     ks: list[int]
     codebook: DataFrame
@@ -595,9 +459,10 @@ def adaptive_grid_tree(
     """Build the corpus-adaptive blocking tree over (vec_id, embedding):
     per-level sizes from adaptive_grid(count, target_block), the coarse
     codebook trained on the md5 sample (train_codebook), every vector
-    assigned to it (kmeans_assign, plus its norm), then one md5-sampled
-    sub-codebook level per remaining ``ks`` entry (block_sub_codebook +
-    block_sub_assign). The SemDeDup tree (q163/q169), the tree-probe
+    assigned to it (nearest_centroids, plus its norm), then one
+    md5-sampled sub-codebook level per remaining ``ks`` entry
+    (block_sub_codebook, each member assigned within its block by
+    nearest_centroids). The SemDeDup tree (q163/q169), the tree-probe
     dedup (q164/q165) and the k-NN index (q212-q236) are all this
     build; gridsql.home_ctes is its DuckDB twin.
 
@@ -614,18 +479,19 @@ def adaptive_grid_tree(
     ks = adaptive_grid(e.count(), target_block, coarse_k=coarse_k, fanout=fanout)
     codebook = train_codebook(e, ks[0], iters)
     coarse = checkpoint(
-        kmeans_assign(e, codebook)
+        nearest_centroids(e, codebook)
+        .drop("probe_rank")
         .withColumn("nrm", V.norm(F.col("embedding")))
     )
-    blocked, block_cols, levels = coarse, ["c_id"], []
+    blocked, block_cols, levels = coarse.drop("cos_sim"), ["c_id"], []
     for i, k_sub in enumerate(ks[1:]):
         prefix, id_out = tuple(block_cols), f"s{i}_id"
         sub = block_sub_codebook(blocked, prefix, k_sub, id_out)
         bcast = math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS
         levels.append(TreeLevel(prefix, id_out, sub, bcast, blocked))
-        blocked = block_sub_assign(
-            blocked, prefix, k_sub, id_out, hint_broadcast=bcast, sub=sub
-        )
+        blocked = nearest_centroids(
+            blocked, sub, block_cols=prefix, broadcast=bcast
+        ).select(*blocked.columns, id_out)
         block_cols.append(id_out)
     return GridTree(ks, codebook, coarse, levels, blocked, block_cols)
 
@@ -643,7 +509,7 @@ def pq_encode(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
     argmin window partitions by (vec_id, m), never a corpus-wide
     shuffle key). L2 distances round to 4dp before the argmin with
     c_id tie-break — the cross-engine determinism discipline, same as
-    kmeans_assign's cosine rounding.
+    nearest_centroids' cosine rounding.
     """
     # Argmin as a fold over the per-subspace codebook collected into
     # one array row per m (c_id-sorted) — map-only after the broadcast

@@ -19,7 +19,8 @@ Every generator mirrors one Spark code path bit-for-bit:
 * ``_train_ctes``       <-> operators.similarity.train_codebook (md5
                             training slice + init_centroids + Lloyd)
 * ``home_ctes``         <-> operators.similarity.adaptive_grid_tree
-                            (kmeans_assign + block_sub_codebook/assign)
+                            (block_sub_codebook levels, every level
+                            assigned by nearest_centroids)
 * ``probe_ctes``        <-> vector6._knn_assignments (depth-scaled
                             multi-probe + the home-block union)
 * ``mp_sym_ctes``       <-> vector6._mp_eps_candidates + _mp_symmetrize

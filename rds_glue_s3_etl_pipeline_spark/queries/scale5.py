@@ -24,7 +24,13 @@ from ..catalog import load
 from ..functions import text as X
 from ..functions import vector as V
 from ..operators.graph import pagerank
-from ..operators.similarity import cosine_topk
+from ..operators.similarity import (
+    cosine_pairs,
+    cosine_topk,
+    init_centroids,
+    nearest_centroids,
+    pair_topk,
+)
 from ..session import checkpoint
 from .registry import query
 
@@ -527,51 +533,20 @@ def q140_ivf_sq8_topk(spark, sf_dir):
     vq = e.select(
         "vec_id", V.sq8_dequantize("embedding", mins, maxs).alias("dv")
     )
-    # IVF coarse codebook + full-precision assignment (q59).
-    cent = (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
-        )
-        .limit(_IVF_CENTROIDS)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"))
+    # IVF coarse codebook + full-precision assignment (q59); candidates
+    # score the query's raw vector against their dequantized codes.
+    assign = nearest_centroids(e, init_centroids(e, _IVF_CENTROIDS)).select(
+        "vec_id", "embedding", "c_id"
     )
-    scored = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        F.col("c_id"),
-        F.round(V.cosine(F.col("embedding"), F.col("cv")), 4).alias("c_cos"),
+    qa = assign.filter(F.col("vec_id") < _SQ_N_QUERIES)
+    corpus = vq.join(assign, "vec_id").select(
+        "vec_id", F.col("dv").alias("embedding"), "c_id"
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_cos"), F.asc("c_id")
-    )
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "c_id")
-    )
-    qa = (
-        e.join(assign, "vec_id")
-        .filter(F.col("vec_id") < _SQ_N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            "c_id",
-        )
-    )
-    cand = (
-        vq.join(assign, "vec_id")
-        .join(F.broadcast(qa), "c_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(V.cosine(F.col("dv"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-    w_rank = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= _SQ_TOP_K)
-        .select("q_id", "vec_id", "cos_sim", "rank")
+    return pair_topk(cosine_pairs(qa, corpus, ["c_id"]), _SQ_TOP_K).select(
+        F.col("a").alias("q_id"),
+        F.col("b").alias("vec_id"),
+        F.col("cs").alias("cos_sim"),
+        F.col("rnk").alias("rank"),
     )
 
 

@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import connected_components_star
-from ..operators.similarity import cosine_pairs, pair_topk
+from ..operators.similarity import (
+    cosine_pairs,
+    init_centroids,
+    nearest_centroids,
+    pair_topk,
+)
 from .registry import query
 from .text import _Q23_ORACLE
 
@@ -80,42 +85,15 @@ def q59_ivf_topk(spark, sf_dir):
     build reused across queries — at 100 TB, persist it partitioned by
     cell so each probe touches one partition."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = (
-        e.orderBy(
-            F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id")
-        )
-        .limit(_N_CENTROIDS)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"))
+    assign = nearest_centroids(e, init_centroids(e, _N_CENTROIDS)).select(
+        "vec_id", "embedding", "c_id"
     )
-    scored = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "embedding",
-        "c_id",
-        F.round(V.cosine(F.col("embedding"), F.col("cv")), 4).alias("c_cos"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("c_cos"), F.asc("c_id"))
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "c_id")
-    )
-    qa = assign.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "c_id"
-    )
-    cand = (
-        assign.join(F.broadcast(qa), "c_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(V.cosine(F.col("embedding"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-    w_rank = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "vec_id", "cos_sim", "rank")
+    qa = assign.filter(F.col("vec_id") < _N_QUERIES)
+    return pair_topk(cosine_pairs(qa, assign, ["c_id"]), _TOP_K).select(
+        F.col("a").alias("q_id"),
+        F.col("b").alias("vec_id"),
+        F.col("cs").alias("cos_sim"),
+        F.col("rnk").alias("rank"),
     )
 
 

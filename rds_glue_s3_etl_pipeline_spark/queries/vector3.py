@@ -34,10 +34,12 @@ from ..catalog import load
 from ..functions import vector as V
 from ..operators.graph import cc_oracle_ctes, connected_components_star
 from ..operators.similarity import (
+    block_sub_codebook,
     cosine_pairs,
     init_centroids,
-    kmeans_assign,
     kmeans_update,
+    nearest_centroids,
+    pair_topk,
     spherical_kmeans,
     spherical_kmeans_codebook,
 )
@@ -207,15 +209,11 @@ def _coarse_fin(spark, sf_dir):
     """The full-corpus trained coarse assignment shared by q143 and
     q149 (and computed ONCE by q167, whose exact_1level and
     fixed_2level branches are defined over the identical training):
-    spherical k-means from the seedless init, with each vector's norm
-    (block_sub_assign's nrm_col, for q149's sub-level), checkpointed
-    because the pair self-join consumes it twice and the survivor pick
-    a third time."""
+    spherical k-means from the seedless init, checkpointed because the
+    pair self-join consumes it twice and the survivor pick a third
+    time."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return checkpoint(
-        spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
-        .withColumn("nrm", V.norm(F.col("embedding")))
-    )
+    return checkpoint(spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS))
 
 
 @query("q143_semantic_dedup", oracle=_Q143_ORACLE, tags=("vector", "dedup", "graph", "EXT"))
@@ -629,23 +627,12 @@ def q147_ivf_trained_topk(spark, sf_dir):
         spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
         .select("vec_id", "c_id", "embedding")
     )
-    qa = fin.filter(F.col("vec_id") < _PQ_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), "c_id"
-    )
-    cand = (
-        fin.join(F.broadcast(qa), "c_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(V.cosine(F.col("embedding"), F.col("qv")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _PQ_TOP_K)
-        .select("q_id", "vec_id", "cos_sim", "rank")
+    qa = fin.filter(F.col("vec_id") < _PQ_N_QUERIES)
+    return pair_topk(cosine_pairs(qa, fin, ["c_id"]), _PQ_TOP_K).select(
+        F.col("a").alias("q_id"),
+        F.col("b").alias("vec_id"),
+        F.col("cs").alias("cos_sim"),
+        F.col("rnk").alias("rank"),
     )
 
 
@@ -682,10 +669,10 @@ def q148_codebook_balance(spark, sf_dir):
     # Round-0 assignment computed ONCE and reused both as the "sample"
     # report row source and as the first Lloyd update's input — calling
     # spherical_kmeans separately would redo this exact O(N x k) pass.
-    assign0 = checkpoint(kmeans_assign(e, cent0))
+    assign0 = checkpoint(nearest_centroids(e, cent0))
     cent = spherical_kmeans_codebook(e, kmeans_update(assign0), iters=_KM_ITERS - 1)
     a0 = assign0.select(F.lit("sample").alias("codebook"), "c_id")
-    aN = kmeans_assign(e, cent).select(
+    aN = nearest_centroids(e, cent).select(
         F.lit("trained").alias("codebook"), "c_id"
     )
     return (
@@ -780,19 +767,11 @@ def q149_semantic_dedup_2level(spark, sf_dir, *, fin=None):
     assignment cost. Finer blocking can only LOWER pair recall —
     survivors per group and the keep-the-outlier policy are unchanged.
     """
-    from ..operators.similarity import block_sub_assign
-
     if fin is None:
         fin = _coarse_fin(spark, sf_dir)
-    # One hierarchy level through the shared operator (identical md5
-    # sub-codebook sample, 4dp cosine, s_id tie-break — and since the
-    # round-15 optimization, a map-only argmax fold instead of a
-    # corpus-wide window).
-    sa = block_sub_assign(
-        fin.select("vec_id", "c_id", "embedding", "nrm"),
-        ("c_id",),
-        _SUB_K,
-        "s_id",
+    top = fin.select("vec_id", "c_id", "embedding")
+    sa = nearest_centroids(
+        top, block_sub_codebook(top, ["c_id"], _SUB_K, "s_id"), block_cols=["c_id"]
     )
     pairs = _sem_pairs(sa, ["c_id", "s_id"])
     return _survivor_groups(fin, pairs)
@@ -870,30 +849,15 @@ def q150_incremental_vector_dedup_ivf(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ev = e.select("vec_id", "embedding")
     cent = spherical_kmeans_codebook(ev, init_centroids(ev, _KM_K), iters=_KM_ITERS)
-    fin = checkpoint(
-        kmeans_assign(ev, cent)
-        .select("vec_id", "c_id", "embedding")
-    )
+    fin = checkpoint(nearest_centroids(ev, cent).select("vec_id", "c_id", "embedding"))
     el = fin.join(e.select("vec_id", "label"), "vec_id").withColumn(
         "nrm", V.norm(F.col("embedding"))
     )
-    # Multi-probe cell list for the incoming batch: rank ALL cells per
-    # new vector (same rounded-cosine discipline as assignment), keep
-    # the top nprobe.
-    w_probe = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_cos"), F.asc("c_id")
-    )
-    probe = (
-        ev.filter(F.col("vec_id") % 5 == 0)
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "c_id",
-            F.round(V.cosine(F.col("embedding"), F.col("cv")), 4).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= _NPROBE)
-        .select(F.col("vec_id").alias("p_vec"), F.col("c_id").alias("p_cell"))
+    # Multi-probe cell list for the incoming batch: each new vector's
+    # top-nprobe cells.
+    new_q = ev.filter(F.col("vec_id") % 5 == 0)
+    probe = nearest_centroids(new_q, cent, _NPROBE).select(
+        F.col("vec_id").alias("p_vec"), F.col("c_id").alias("p_cell")
     )
     new = el.filter(F.col("vec_id") % 5 == 0).alias("n")
     hist = el.filter(F.col("vec_id") % 5 != 0).alias("h")

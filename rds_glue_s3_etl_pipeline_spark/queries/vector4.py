@@ -259,7 +259,12 @@ from .vector3 import (
     _sem_pairs,
     _survivor_groups,
 )
-from ..operators.similarity import init_centroids, spherical_kmeans
+from ..operators.similarity import (
+    block_sub_codebook,
+    init_centroids,
+    nearest_centroids,
+    spherical_kmeans,
+)
 
 _SUB2_K = 4
 
@@ -338,22 +343,6 @@ WHERE m.rn = 1
 """
 
 
-def _sub_assign(df, block_cols, k_sub, id_out):
-    """One hierarchy level: per existing block, take the first k_sub
-    members (md5 order — the seedless deterministic sample every
-    codebook consumer uses) as sub-centroids and assign each member to
-    its nearest (4dp cosine, id tie-break). Delegates to the shared
-    fold-based operator (operators.similarity.block_sub_assign,
-    nprobe=1): the per-VECTOR argmax window this used to run re-shuffled
-    the whole corpus (embedding payload included) per level — the exact
-    shape the round-15 fold rewrite removed from q149's path, with
-    ordering semantics preserved bit for bit (4dp cosine desc, ties to
-    the smallest id_out via the sorted codebook array)."""
-    from ..operators.similarity import block_sub_assign
-
-    return block_sub_assign(df, tuple(block_cols), k_sub, id_out)
-
-
 @query("q162_semantic_dedup_3level", oracle=_Q162_ORACLE, tags=("vector", "dedup", "graph", "EXT"))
 def q162_semantic_dedup_3level(spark, sf_dir):
     """SemDeDup with a THREE-level hierarchical codebook: trained
@@ -373,13 +362,13 @@ def q162_semantic_dedup_3level(spark, sf_dir):
     trade is measured by comparing the three group counts on the same
     fixture."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fin = checkpoint(
-        spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS)
-        .withColumn("nrm", V.norm(F.col("embedding")))
-    )
-    sa = _sub_assign(
-        fin.select("vec_id", "c_id", "embedding", "nrm"), ("c_id",), _SUB_K, "s_id"
-    )
-    sa2 = _sub_assign(sa, ("c_id", "s_id"), _SUB2_K, "s2_id")
-    pairs = _sem_pairs(sa2, ["c_id", "s_id", "s2_id"])
+    fin = checkpoint(spherical_kmeans(e, init_centroids(e, _KM_K), iters=_KM_ITERS))
+    blocked, block_cols = fin.select("vec_id", "c_id", "embedding"), ["c_id"]
+    for k_sub, id_out in ((_SUB_K, "s_id"), (_SUB2_K, "s2_id")):
+        sub = block_sub_codebook(blocked, block_cols, k_sub, id_out)
+        blocked = nearest_centroids(blocked, sub, block_cols=block_cols).select(
+            *blocked.columns, id_out
+        )
+        block_cols = [*block_cols, id_out]
+    pairs = _sem_pairs(blocked, block_cols)
     return _survivor_groups(fin, pairs)

@@ -47,7 +47,7 @@ from ..functions import vector as V
 from ..operators.similarity import (
     _TRAIN_SAMPLE,  # noqa: F401  re-exported: the tree build's training cap
     adaptive_grid_tree,
-    kmeans_assign_topn,
+    nearest_centroids,
 )
 from ..session import checkpoint
 from .gridsql import (
@@ -194,41 +194,18 @@ def _tree_probe_scored(spark, sf_dir, target_cell: int):
     block_cols = tree.block_cols
 
     # Probe level 0: each new vector's top-_NPROBE coarse cells (the
-    # q150 discipline); carry the query vector + norm down the tree for
-    # the deeper rankings.
-    new_q = ev.filter(F.col("vec_id") % 5 == 0).select(
-        F.col("vec_id").alias("p_vec"), F.col("embedding").alias("qv")
-    )
-    probe = (
-        kmeans_assign_topn(new_q, tree.codebook, _NPROBE, id_col="p_vec", vec_col="qv")
-        .select("p_vec", "qv", "c_id")
-        .withColumn("qnrm", V.norm(F.col("qv")))
-    )
-    # Deeper levels: within each probed branch, rank that block's
-    # sub-codebook and keep the top _TREE_PSUB sub-cells. Broadcast the
-    # level codebook only while it is broadcast-sized (same bound as
-    # the assignment side); past that the join keys on the block
-    # prefix and shuffle-joins with identical results.
+    # q150 discipline). Deeper levels: within each probed branch, the
+    # top _TREE_PSUB sub-cells of that block's sub-codebook (the
+    # operator ranks within a row's block).
+    probe = nearest_centroids(
+        ev.filter(F.col("vec_id") % 5 == 0), tree.codebook, _NPROBE
+    ).select("vec_id", "embedding", "c_id")
     for lvl in tree.levels:
-        prefix_cols, id_out = lvl.prefix, lvl.id_out
-        scos = F.round(
-            V.dot(F.col("qv"), F.col("__sv")) / (F.col("qnrm") * F.col("__snrm")),
-            4,
-        )
-        w_lvl = Window.partitionBy("p_vec", *prefix_cols).orderBy(
-            F.desc("__scos"), F.asc(id_out)
-        )
-        probe = (
-            probe.join(
-                F.broadcast(lvl.sub) if lvl.broadcast else lvl.sub, list(prefix_cols)
-            )
-            .withColumn("__scos", scos)
-            .withColumn("rn", F.row_number().over(w_lvl))
-            .filter(F.col("rn") <= _TREE_PSUB)
-            .drop("__sv", "__snrm", "__scos", "rn")
-        )
+        probe = nearest_centroids(
+            probe, lvl.sub, _TREE_PSUB, lvl.prefix, lvl.broadcast
+        ).select(*probe.columns, lvl.id_out)
     probe = probe.select(
-        "p_vec", *[F.col(c).alias(f"p_{c}") for c in block_cols]
+        F.col("vec_id").alias("p_vec"), *[F.col(c).alias(f"p_{c}") for c in block_cols]
     )
 
     el = tree.blocked.join(e.select("vec_id", "label"), "vec_id")

@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import vector as V
-from ..operators.similarity import cosine_pairs, cosine_topk, pair_topk
+from ..operators.similarity import (
+    cosine_pairs,
+    cosine_topk,
+    nearest_centroids,
+    pair_topk,
+)
 from .gridsql import knn_home_probe_ctes, mp_sym_ctes, q212_oracle
 from .registry import query
 from .vector3 import _KM_ITERS, _KM_K
@@ -81,7 +86,7 @@ def _knn_index(spark, sf_dir) -> dict:
 def _knn_index_build(spark, sf_dir) -> dict:
     """Build-once adaptive-grid index artifact, fingerprint-cached per
     (process, embeddings content): ``home.parquet`` is the full home
-    assignment (vec_id, embedding, nrm, *block_cols — one row per
+    assignment (vec_id, embedding, *block_cols — one row per
     vector), ``codebook.parquet`` the deepest-level codebook a
     multi-probe query side rescores against. Training (the expensive,
     sample-bounded part) runs ONCE under released_blocks — every Lloyd
@@ -89,7 +94,7 @@ def _knn_index_build(spark, sf_dir) -> dict:
     disk, so a long-lived service session carries no residue (the q33
     mechanism, now applicable because consumers read parquet)."""
     from ..catalog import table_fingerprint
-    from ..operators.similarity import adaptive_grid_tree, block_sub_assign
+    from ..operators.similarity import adaptive_grid_tree
     from ..scratch import scratch_dir
     from ..session import released_blocks
 
@@ -131,15 +136,13 @@ def _knn_index_build(spark, sf_dir) -> dict:
             deepest = tree.levels[-1]
             hint = deepest.broadcast
             deepest.sub.write.mode("overwrite").parquet(f"{idx_dir}/codebook.parquet")
-            home = block_sub_assign(
+            home = nearest_centroids(
                 deepest.members,
-                deepest.prefix,
-                ks[-1],
-                deepest.id_out,
-                hint_broadcast=hint,
-                sub=spark.read.parquet(f"{idx_dir}/codebook.parquet"),
+                spark.read.parquet(f"{idx_dir}/codebook.parquet"),
+                block_cols=deepest.prefix,
+                broadcast=hint,
             )
-        home.select("vec_id", "embedding", "nrm", *block_cols).write.mode(
+        home.select("vec_id", "embedding", *block_cols).write.mode(
             "overwrite"
         ).parquet(f"{idx_dir}/home.parquet")
 
@@ -190,12 +193,7 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
     recomputed from home — bit-identical to the build's, because the
     sample is a deterministic function of the (unchanged) block
     membership. No retraining anywhere on the query path."""
-    from ..operators.similarity import (
-        _SUB_BROADCAST_ROWS,
-        block_sub_assign,
-        block_sub_codebook,
-        kmeans_assign_topn,
-    )
+    from ..operators.similarity import _SUB_BROADCAST_ROWS, block_sub_codebook
 
     meta = _knn_index(spark, sf_dir)
     home = spark.read.parquet(f"{meta['dir']}/home.parquet")
@@ -204,12 +202,25 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
     if nprobe <= 1:
         return home, home, block_cols
     cb = spark.read.parquet(f"{meta['dir']}/codebook.parquet")
+    probe = home.select("vec_id", "embedding")
     if len(ks) == 1:
-        probe = kmeans_assign_topn(
-            home.select("vec_id", "embedding"), cb, nprobe
-        ).select("vec_id", "embedding", "c_id")
+        probe = nearest_centroids(probe, cb, nprobe).select(*probe.columns, "c_id")
         return home, probe, block_cols
-    last_id = block_cols[-1]
+
+    def descend(par, sub, n, prefix, broadcast):
+        # The operator keeps each probed parent's own top-n; one window
+        # cuts the query's top-n across all its parents. Exact: a global
+        # top-n member is in its own branch's top-n, and sub-centroid
+        # ids are vector ids, globally unique, so the order is total.
+        lvl_id = block_cols[len(prefix)]
+        w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc(lvl_id))
+        return (
+            nearest_centroids(par, sub, n, prefix, broadcast)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= n)
+            .select(*par.columns, lvl_id)
+        )
+
     # Descend from the persisted coarse codebook with ``nprobe`` at
     # EVERY level above the deepest (none when the parent level IS the
     # coarse level) — round 12's widening of the round-11 rule, which
@@ -226,43 +237,17 @@ def _knn_assignments(spark, sf_dir, nprobe: int = 1):
     import math
 
     coarse = spark.read.parquet(f"{meta['dir']}/coarse.parquet")
-    par = (
-        kmeans_assign_topn(home.select("vec_id", "embedding"), coarse, nprobe)
-        .select("vec_id", "embedding", "c_id")
-        .withColumn("nrm", V.norm(F.col("embedding")))
-    )
+    par = nearest_centroids(probe, coarse, nprobe).select(*probe.columns, "c_id")
     for i, k_sub in enumerate(ks[1:-1]):
-        lvl_prefix = tuple(block_cols[: i + 1])
-        lvl_id = block_cols[i + 1]
-        sub_lvl = block_sub_codebook(
-            home.select("vec_id", "embedding", "nrm", *lvl_prefix),
-            lvl_prefix,
-            k_sub,
-            lvl_id,
-        )
-        par = block_sub_assign(
-            par,
-            lvl_prefix,
-            k_sub,
-            lvl_id,
-            hint_broadcast=(math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS),
-            sub=sub_lvl,
-            nprobe=nprobe,
+        prefix, lvl_id = block_cols[: i + 1], block_cols[i + 1]
+        sub = block_sub_codebook(home, prefix, k_sub, lvl_id)
+        par = descend(
+            par, sub, nprobe, prefix, math.prod(ks[: i + 2]) <= _SUB_BROADCAST_ROWS
         )
     # Deepest level: fan each probed parent out over its persisted
     # sub-codebook and keep the query's best nprobe² deepest blocks
-    # overall (block_sub_assign's per-vec_id window ranks across all
-    # probed parents; sub-centroid ids are vector ids — globally
-    # unique — so the tie-break stays total).
-    probe = block_sub_assign(
-        par,
-        tuple(block_cols[:-1]),
-        ks[-1],
-        last_id,
-        hint_broadcast=meta["hint"],
-        sub=cb,
-        nprobe=nprobe * nprobe,
-    )
+    # overall.
+    probe = descend(par, cb, nprobe * nprobe, block_cols[:-1], meta["hint"])
     # Always reserve the query's own HOME block (round-11 ADVICE): with
     # fanout-8 parents, up to nprobe x 8 cross-parent sub-cells compete
     # for the nprobe² slots, so the global top-k could drop the home
@@ -1520,7 +1505,7 @@ def q236_knn_index_refresh(spark, sf_dir):
     corpus size; the merged state is a parquet append in production.
     Deeper trees freeze their sampled sub-codebooks the same way (the
     persisted index already carries coarse + deepest levels)."""
-    from ..operators.similarity import kmeans_assign, train_codebook
+    from ..operators.similarity import train_codebook
     from ..scratch import scratch_dir
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1538,9 +1523,9 @@ def q236_knn_index_refresh(spark, sf_dir):
     frozen = spark.read.parquet(f"{idx_dir}/codebook.parquet")
 
     keep = ["vec_id", "c_id", "cos_sim"]
-    kmeans_assign(hist, frozen).select(*keep).write.mode("overwrite").parquet(
+    nearest_centroids(hist, frozen).select(*keep).write.mode("overwrite").parquet(
         f"{idx_dir}/home_epoch0.parquet"
     )
     home0 = spark.read.parquet(f"{idx_dir}/home_epoch0.parquet")
-    refresh = kmeans_assign(e.filter(is_new), frozen).select(*keep)
+    refresh = nearest_centroids(e.filter(is_new), frozen).select(*keep)
     return home0.unionByName(refresh)

@@ -176,7 +176,7 @@ def test_q236_frozen_codebook_refresh_equals_full_assign(spark, tmp_path):
 
     from rds_glue_s3_etl_pipeline_spark.catalog import load
     from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
-        kmeans_assign,
+        nearest_centroids,
         train_codebook,
     )
 
@@ -194,11 +194,11 @@ def test_q236_frozen_codebook_refresh_equals_full_assign(spark, tmp_path):
 
     keep = ["vec_id", "c_id", "cos_sim"]
     merged = (
-        kmeans_assign(hist, frozen)
+        nearest_centroids(hist, frozen)
         .select(*keep)
-        .unionByName(kmeans_assign(e.filter(is_new), frozen).select(*keep))
+        .unionByName(nearest_centroids(e.filter(is_new), frozen).select(*keep))
     )
-    full = kmeans_assign(e, frozen).select(*keep)
+    full = nearest_centroids(e, frozen).select(*keep)
     assert merged.exceptAll(full).count() == 0
     assert full.exceptAll(merged).count() == 0
     assert full.count() == 50

@@ -257,6 +257,148 @@ def test_lsh_cosine_pairs_thresholds_the_rounded_cosine(spark):
     assert got[(0, 1)] == 0.4 and (0, 2) not in got
 
 
+def _window_top_n(scored, n, part=("vec_id",)):
+    """Reference ranking: row_number over ``part`` by cs desc, c_id asc."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*part).orderBy(F.desc("cs"), F.asc("c_id"))
+    return scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= n)
+
+
+@pytest.mark.parametrize("blocked", [False, True], ids=["global", "blocked"])
+@pytest.mark.parametrize("n", [1, 3])
+def test_nearest_centroids_matches_window_reference(spark, n, blocked):
+    """nearest_centroids equals a row_number() window over the rounded
+    V.cosine of every (vector, entry) pair of the same block: a tied
+    centroid pair goes to the smaller c_id, a null embedding keeps its
+    rows with a null cos_sim, and a vector whose block has no codebook
+    entries is dropped."""
+    from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
+        nearest_centroids,
+    )
+
+    emb = spark.createDataFrame(
+        [
+            (0, 1, [1.0, 0.0]),
+            (1, 1, _unit(0.6)),
+            (2, 1, None),
+            (3, 2, [0.0, 1.0]),
+            (4, 2, _unit(0.39996)),
+            (5, 9, [1.0, 1.0]),
+        ],
+        "vec_id long, b int, embedding array<double>",
+    )
+    cb = spark.createDataFrame(
+        [
+            (1, 11, [1.0, 0.0]),
+            (1, 10, [1.0, 0.0]),
+            (1, 12, [0.0, 1.0]),
+            (1, 13, _unit(0.3999)),
+            (2, 20, [0.0, 1.0]),
+            (2, 21, [1.0, 0.0]),
+            (2, 22, _unit(0.5)),
+        ],
+        "b int, c_id long, cv array<double>",
+    )
+    cols = ["b"] if blocked else []
+    if not blocked:
+        cb = cb.drop("b")
+    out = nearest_centroids(emb, cb, n, cols)
+    assert out.columns == [*emb.columns, "c_id", "cos_sim", "probe_rank"]
+    got = {
+        (r["vec_id"], r["c_id"], r["cos_sim"], r["probe_rank"]) for r in out.collect()
+    }
+
+    pairs = emb.join(cb, cols) if blocked else emb.crossJoin(cb)
+    scored = pairs.select(
+        "vec_id", "c_id", F.round(V.cosine("embedding", "cv"), 4).alias("cs")
+    )
+    want = {
+        (r["vec_id"], r["c_id"], r["cs"], r["r"])
+        for r in _window_top_n(scored, n).collect()
+    }
+    assert got == want
+    best = {v: c for v, c, _, rank in got if rank == 1}
+    assert best[0] == 10
+    assert {cs for v, _, cs, _ in got if v == 2} == {None}
+    assert (5 in best) is not blocked
+    entries = {0: 4, 1: 4, 2: 4, 3: 3, 4: 3} if blocked else dict.fromkeys(range(6), 7)
+    assert len(got) == sum(min(n, k) for k in entries.values())
+
+
+def test_nearest_centroids_branch_cut_equals_global_window(spark):
+    """A vector probing two parents: each parent's own top-n from the
+    operator, then one top-n window over the vector's rows, equals one
+    top-n window over every entry of both parents — the k-NN descent's
+    cross-parent cut. 101, 104 and 200 tie at the cut: 104 within its
+    branch, 200 across branches."""
+    from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
+        nearest_centroids,
+    )
+
+    q = spark.createDataFrame(
+        [(0, p, [1.0, 0.0]) for p in (1, 2)] + [(1, 2, _unit(0.2))],
+        "vec_id long, p long, embedding array<double>",
+    )
+    cb = spark.createDataFrame(
+        [
+            (1, 100, _unit(0.9)),
+            (1, 104, _unit(0.7)),
+            (1, 101, _unit(0.7)),
+            (1, 102, _unit(0.1)),
+            (2, 200, _unit(0.7)),
+            (2, 201, _unit(0.5)),
+            (2, 202, _unit(0.3)),
+        ],
+        "p long, c_id long, cv array<double>",
+    )
+    n = 2
+    per_branch = nearest_centroids(q, cb, n, ["p"]).withColumnRenamed("cos_sim", "cs")
+    got = {
+        (r["vec_id"], r["c_id"], r["r"]) for r in _window_top_n(per_branch, n).collect()
+    }
+    scored = q.join(cb, "p").select(
+        "vec_id", "c_id", F.round(V.cosine("embedding", "cv"), 4).alias("cs")
+    )
+    want = {
+        (r["vec_id"], r["c_id"], r["r"]) for r in _window_top_n(scored, n).collect()
+    }
+    assert got == want
+    assert {(c, r) for v, c, r in got if v == 0} == {(100, 1), (101, 2)}
+
+
+# Vector scorers left outside operators/similarity.py, by file. Centroid
+# scoring goes through nearest_centroids and pair scoring through
+# cosine_pairs; these are the sites neither operator covers yet.
+_PINNED_SCORERS = {
+    ("queries/curation.py", "cosine"): 1,  # q184 dense arm
+    ("queries/spectral.py", "cosine"): 1,  # q222 label-centroid matrix
+    ("queries/vector6.py", "cosine"): 1,  # q221 hard negatives
+    ("queries/vector7.py", "cosine"): 2,  # q235 percolation guard
+    ("queries/vector3.py", "dot"): 2,  # q146 PQ ADC, q150 leaf pairs
+    ("queries/vector5.py", "dot"): 2,  # q163 hub pairs, q164/q165 leaf pairs
+}
+
+
+def test_vector_scorers_only_at_pinned_sites():
+    """A new inline ``V.cosine(`` or ``V.dot(`` outside
+    operators/similarity.py — a centroid or pair scorer that misses the
+    operators' fixes — fails here; so does a pinned site that moved
+    into an operator without this list shrinking."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "rds_glue_s3_etl_pipeline_spark"
+    hits: dict = {}
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "operators/similarity.py":
+            continue
+        for fn in re.findall(r"\bV\.(cosine|dot)\(", f.read_text()):
+            hits[(rel, fn)] = hits.get((rel, fn), 0) + 1
+    assert hits == _PINNED_SCORERS
+
+
 def _cc_reference(pairs) -> dict:
     """Pure-Python union-find: {node: component minimum} for every node
     of a non-self-loop pair. Self-loops carry no connectivity, so a node
@@ -885,8 +1027,8 @@ def test_kmeans_hand_computed_two_clusters(spark):
     after one round, and the update step's centroid is the exact
     per-dimension mean of its members."""
     from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
-        kmeans_assign,
         kmeans_update,
+        nearest_centroids,
         spherical_kmeans,
     )
 
@@ -906,7 +1048,7 @@ def test_kmeans_hand_computed_two_clusters(spark):
     assert got[0] == got[1] and got[2] == got[3] and got[0] != got[2]
 
     # the update is the exact mean of the members it was handed
-    assigned = kmeans_assign(e, init)
+    assigned = nearest_centroids(e, init)
     cents = {r["c_id"]: r["cv"] for r in kmeans_update(assigned).collect()}
     members = {r["c_id"]: [] for r in assigned.collect()}
     for r in assigned.collect():
@@ -920,8 +1062,8 @@ def test_kmeans_empty_cell_drops(spark):
     """A centroid that attracts no vectors disappears from the updated
     codebook (the documented empty-cell policy)."""
     from rds_glue_s3_etl_pipeline_spark.operators.similarity import (
-        kmeans_assign,
         kmeans_update,
+        nearest_centroids,
     )
 
     e = spark.createDataFrame(
@@ -930,7 +1072,7 @@ def test_kmeans_empty_cell_drops(spark):
     init = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [-1.0, 0.0])], "c_id long, cv array<double>"
     )
-    cents = kmeans_update(kmeans_assign(e, init)).collect()
+    cents = kmeans_update(nearest_centroids(e, init)).collect()
     assert [r["c_id"] for r in cents] == [0]
 
 

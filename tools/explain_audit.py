@@ -76,15 +76,6 @@ _PQ_EXPLODE = (
     "construction (operators/similarity.py PQ trainer)"
 )
 _NLJ_BOUNDED_JUSTIFIED: dict[str, dict[str, str]] = {
-    "q142_kmeans_ivf": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
-    "q148_codebook_balance": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
-    "q150_incremental_vector_dedup_ivf": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
-    "q164_incremental_vector_dedup_adaptive": {
-        "Scan ExistingRDD[c_id,cv]": _CODEBOOK
-    },
-    "q165_vector_dedup_tree_probe": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
-    "q166_vector_dedup_recall_gate": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
-    "q183_cluster_balanced_sample": {"Scan ExistingRDD[c_id,cv]": _CODEBOOK},
     "q146_pq_topk": {"Generate": _PQ_EXPLODE},
     "q158_pq_recall": {
         "Generate": _PQ_EXPLODE,
